@@ -45,6 +45,20 @@ def template_columns(pattern: str) -> list[str]:
     return _TEMPLATE_RE.findall(pattern)
 
 
+# --- generated Spark SQL: every interpolated name or literal goes through these
+
+
+def sql_ident(name: str) -> str:
+    """Spark-SQL quoted identifier (embedded backticks doubled) — also a
+    valid ``F.col`` / ``select`` reference for any column name."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_str(s: str) -> str:
+    """Spark-SQL single-quoted string literal (backslash escaping)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 # --- vector math over array<float>/array<double> (SURVEY.md §2.11 C3) ------
 #
 # Expression-only (zip_with + aggregate): stays JVM-side, works on any array

@@ -358,13 +358,14 @@ def verify_archive(
     deterministic md5 hash gate on (filename, salt) — change the salt
     per scrub epoch and successive runs cover different slices,
     reproducibly (no RNG state; the C10 sampling device)."""
-    from .operators.dedup import md5_int_col
+    from .functions import sql_str
+    from .operators.dedup import MD5_INT_SPARK_SQL
 
     arch = spark.read.parquet(archive_root)
     if sample_fraction is not None:
-        gate = md5_int_col(
-            F.concat_ws("\x1f", F.col("filename"), F.lit(str(sample_salt)))
-        ) % 1_000_000
+        sep, salt = sql_str("\x1f"), sql_str(str(sample_salt))
+        key = f"concat_ws({sep}, filename, {salt})"
+        gate = F.expr(MD5_INT_SPARK_SQL(key)) % 1_000_000
         arch = arch.where(gate < int(sample_fraction * 1_000_000))
     reg = (
         spark.read.parquet(registry_path) if registry_path is not None else None

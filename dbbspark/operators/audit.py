@@ -27,6 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions import sql_ident
 from .dedup import shingle_hash_docs
 
 
@@ -212,7 +213,7 @@ def member_rep_jaccard_map(
         )
     else:
         inv = spark.createDataFrame(
-            [(i,) for i in involved_ids], f"{id_col} long"
+            [(i,) for i in involved_ids], f"{sql_ident(id_col)} long"
         )
         base = docs.select(id_col, text_col).join(
             F.broadcast(inv), id_col, "left_semi"

@@ -40,21 +40,20 @@ honest either way.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
+
+from ..functions import sql_ident
 
 _MAX_BITS = 1 << 30  # 128 MiB of words — beyond this, partition the keyspace.
 
 
-def _positions(key: Column, num_bits: int, num_hashes: int) -> list[Column]:
-    """The k probe positions for one key: pmod(xxhash64(key, i), m).
+def _position_sql(key: str, i: int, num_bits: int) -> str:
+    """Probe position ``i`` of the SQL key: pmod(xxhash64(key, i), m).
 
     Seeding via an extra literal hash input (xxhash64 is variadic) keeps
     the k hashes independent while staying one codegen'd JVM call each.
     """
-    return [
-        F.pmod(F.xxhash64(key, F.lit(i)), F.lit(num_bits))
-        for i in range(num_hashes)
-    ]
+    return f"pmod(xxhash64({key}, {i}), {num_bits})"
 
 
 # The DataFrame shiftleft/shiftright helpers only accept literal shift
@@ -76,9 +75,10 @@ def build_bloom(
         raise ValueError(f"num_bits must be in 1..{_MAX_BITS}")
     if num_hashes < 1:
         raise ValueError("num_hashes must be >= 1")
-    pos = F.explode(
-        F.array(*_positions(F.col(key_col), num_bits, num_hashes))
-    ).alias("__pos")
+    key = sql_ident(key_col)
+    pos = F.explode(F.expr(
+        f"array({', '.join(_position_sql(key, i, num_bits) for i in range(num_hashes))})"
+    )).alias("__pos")
     words = (
         # null keys carry no membership (probe-side returns false for
         # them); without this filter xxhash64(null, i) would insert a
@@ -115,15 +115,12 @@ def might_contain(
     carrier = spark.createDataFrame(
         [(word_table,)], "__bloom_words array<long>"
     )
-    hit = None
+    hit, key = None, sql_ident(key_col)
     for i in range(num_hashes):
-        # pos = pmod(xxhash64(key, i), m); word = pos >> 6; bit = pos & 63.
+        pos = _position_sql(key, i, num_bits)  # word = pos >> 6; bit = pos & 63
         test = F.expr(
-            f"(element_at(__bloom_words,"
-            f"  cast(shiftright(pmod(xxhash64(`{key_col}`, {i}), {num_bits}), 6) as int) + 1)"
-            f" & shiftleft(1L,"
-            f"  cast(pmod(pmod(xxhash64(`{key_col}`, {i}), {num_bits}), 64) as int))"
-            f") != 0"
+            f"(element_at(__bloom_words, cast(shiftright({pos}, 6) as int) + 1)"
+            f" & shiftleft(1L, cast(pmod({pos}, 64) as int))) != 0"
         )
         hit = test if hit is None else (hit & test)
     return (

@@ -111,7 +111,7 @@ def score_linear_portable(
     (q_exact_dedup fold, r13). Two substitutions vs the ml pipeline,
     both pinned and documented:
 
-    - the gram hash is the md5-derived bigint (`dedup.md5_int_col` %
+    - the gram hash is the md5-derived bigint (`dedup.MD5_INT_SPARK_SQL` %
       ``num_features``) — HashingTF's murmur3_x86_32 has no DuckDB
       equivalent; the hash FAMILY changes, the hashed-bag-of-grams
       architecture does not (featurization parity with
@@ -129,27 +129,24 @@ def score_linear_portable(
     Map-only, JVM-side, no UDF — fuses into the scan like the ml
     scorer's transform. Returns docs + ``score_col`` (sigmoid of the
     margin) and ``{score_col}_margin``."""
-    from .dedup import md5_int_col
+    from .dedup import MD5_INT_SPARK_SQL
 
     ascii_txt = F.regexp_replace(F.col(text_col), "[^ -~]", " ")
     toks = F.filter(
         F.split(F.lower(ascii_txt), "[^a-z0-9]+"), lambda t: t != F.lit("")
     )
     d = docs.withColumn("__toks", toks)
-    bigrams = F.expr(
+    grams = (
+        "CASE WHEN size(__toks) >= 2 THEN concat(__toks, "
         "transform(sequence(1, greatest(size(__toks) - 1, 0)), "
-        "i -> concat(__toks[i-1], ' ', __toks[i]))"
+        "i -> concat(__toks[i-1], ' ', __toks[i]))) ELSE __toks END"
     )
-    grams = F.when(F.size("__toks") >= 2, F.concat(F.col("__toks"), bigrams)) \
-        .otherwise(F.col("__toks"))
-    weight = lambda g: (  # noqa: E731
-        (
-            (md5_int_col(g) % num_features) * F.lit(2654435761)
-        ) % F.lit(2000003) - F.lit(1000001)
-    ) / F.lit(1000001.0) * F.lit(weight_scale)
-    margin = F.aggregate(
-        grams, F.lit(0.0), lambda acc, g: acc + weight(g)
+    # doubles as 1.0D: a bare 1.0 is DECIMAL in Spark SQL
+    weight = (
+        f"(((({MD5_INT_SPARK_SQL('g')} % {int(num_features)}) * 2654435761L) "
+        f"% 2000003 - 1000001) / 1000001.0D * {float(weight_scale)!r}D)"
     )
+    margin = F.expr(f"aggregate({grams}, 0.0D, (acc, g) -> acc + {weight})")
     return (
         d.withColumn(f"{score_col}_margin", margin)
         .withColumn(

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from dbbspark.functions import sql_ident
 from dbbspark.session import cut_lineage
 
 # 31-bit Mersenne prime for the Carter-Wegman permutations: with 28-bit
@@ -163,33 +164,26 @@ def shingle_hash_docs(
     )
 
 
-def md5_int_col(c: Column, hex_digits: int = 15) -> Column:
-    """Engine-portable string→int hash: first `hex_digits` hex chars of
-    md5 as a bigint (15 hex digits < 2^60, fits signed 64-bit in both
-    Spark and DuckDB)."""
-    return F.conv(F.substring(F.md5(c.cast("binary")), 1, hex_digits), 16, 10).cast("bigint")
-
-
 def MD5_INT_SQL(expr: str, hex_digits: int = 15) -> str:
-    """DuckDB SQL for the md5-derived integer `md5_int_col` computes —
-    the cross-engine hash both sides of every oracle share."""
+    """DuckDB SQL for the md5-derived integer `MD5_INT_SPARK_SQL`
+    computes — the cross-engine hash both sides of every oracle share."""
     return f"CAST(('0x' || substr(md5({expr}), 1, {hex_digits})) AS BIGINT)"
 
 
 def MD5_INT_SPARK_SQL(expr: str, hex_digits: int = 15) -> str:
-    """SPARK SQL text for the same integer `md5_int_col` builds as a
-    Column — for generated-SQL plan construction (r14: expression-heavy
-    builders parse one expr() string instead of paying a py4j round
-    trip per Column node; plan build is inside the bench's timed
-    region). Pinned ≡ md5_int_col in tests/test_sketches.py."""
+    """Engine-portable string→int hash as Spark SQL text over the SQL
+    expression ``expr``: the first `hex_digits` hex chars of md5 as a
+    bigint (15 hex digits < 2^60, fits signed 64-bit in both Spark and
+    DuckDB). The one Spark-side definition of the hash: Column call
+    sites wrap it in ``F.expr``, generated-SQL builders interpolate it."""
     return (
-        f"CAST(conv(substr(md5(CAST({expr} AS BINARY)), 1, "
+        f"CAST(conv(substring(md5(CAST({expr} AS BINARY)), 1, "
         f"{hex_digits}), 16, 10) AS BIGINT)"
     )
 
 
 def md5_int_py(s: str, hex_digits: int = 15) -> int:
-    """Python twin of `md5_int_col` over an UTF-8 string — the counted
+    """Python twin of `MD5_INT_SPARK_SQL` over an UTF-8 string — the counted
     driver regimes' hash (r13): a driver-side gate (e.g. the purity
     stratum coin in q_dedup_clusters) computes the same portable
     md5-int without paying a Spark job on an already-local relation.
@@ -213,9 +207,7 @@ def minhash_signatures(
     rows, matching the exploded formulation."""
     sh = shingle_docs(docs, id_col, text_col, shingle_n).select(
         "doc",
-        F.transform(
-            F.col("shingles"), lambda s: md5_int_col(s, hex_digits=7)
-        ).alias("hs"),
+        F.expr(f"transform(shingles, s -> {MD5_INT_SPARK_SQL('s', 7)})").alias("hs"),
     )
     # One generated SQL expression instead of num_perm nested Column
     # builders: the whole signature array parses JVM-side in a single
@@ -273,7 +265,8 @@ def minhash_band_signatures(
     eliminated exchange is num_perm longs per document. Measured ~15%
     faster end-to-end at sf0.1 (1.5 s → 1.27 s)."""
     sh = shingle_docs(docs, id_col, text_col, shingle_n).select(
-        "doc", F.transform("shingles", lambda s: md5_int_col(s, 7)).alias("hs")
+        "doc",
+        F.expr(f"transform(shingles, s -> {MD5_INT_SPARK_SQL('s', 7)})").alias("hs"),
     )
 
     def min_expr(p: int) -> str:
@@ -703,8 +696,9 @@ def simhash(docs: DataFrame, id_col: str, text_col: str, bits: int = 32) -> Data
     form and still hash-matches)."""
     hs = docs.select(
         F.col(id_col).alias("doc"),
-        F.transform(
-            F.array_distinct(tokens_col(text_col)), lambda t: md5_int_col(t)
+        F.expr(
+            f"transform(array_distinct(split({sql_ident(text_col)}, ' ')), "
+            f"t -> {MD5_INT_SPARK_SQL('t')})"
         ).alias("hs"),
     )
     terms = " + ".join(

@@ -31,6 +31,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from dbbspark.functions import sql_ident
+
 
 def _qgrams(col: str, q: int) -> str:
     """SQL for the positional q-gram array of a padded key: the string
@@ -108,8 +110,8 @@ def _fastss_join(
         raise ValueError("_fastss_join supports max_distance 1 or 2")
 
     def variants(df: DataFrame, idc: str, tag: str) -> DataFrame:
-        k = f"lower({key})"
-        src = df.where(F.col(key).isNotNull())
+        k = f"lower({sql_ident(key)})"
+        src = df.where(F.col(sql_ident(key)).isNotNull())
         if respread:
             # re-spread first: bulk-drift corpora often arrive in a
             # couple of post-AQE partitions, which would serialize the

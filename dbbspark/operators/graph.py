@@ -5,7 +5,7 @@ Common-Crawl-derived pipelines weight pages by the centrality of their
 (registered) domain in the host link graph, so spam constellations that
 only link to themselves rank low however much text they ship. This
 module provides distributed PageRank over an edge list — composes with
-`operators.urls.registered_domain` (build host edges from page links)
+`operators.urls.REGISTERED_DOMAIN_SQL` (build host edges from page links)
 and joins back onto documents as a quality prior.
 
 Spark mapping (same iterative discipline as dedup.connected_components):
@@ -221,11 +221,12 @@ def domain_rank_prior(
     quality gate decides the prior for unknowns). The rank table is
     node-per-domain — broadcast-sized for any real blocklist-scale
     graph, so this is a map-side join."""
-    from .urls import registered_domain
+    from ..functions import sql_ident
+    from .urls import REGISTERED_DOMAIN_SQL
 
     r = ranks.select(F.col("node").alias("__dom"), F.col("rank").alias(out_col))
     return (
-        docs.withColumn("__dom", registered_domain(F.col(url_col)))
+        docs.withColumn("__dom", F.expr(REGISTERED_DOMAIN_SQL(sql_ident(url_col))))
         .join(F.broadcast(r), "__dom", "left")
         .drop("__dom")
     )

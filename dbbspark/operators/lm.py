@@ -185,7 +185,9 @@ def train_ngram_lm_pair(
     vocabulary job (two driver threads — both are independent corpus
     passes, see the body comment). Equivalence with the composed form
     is pinned in tests/test_lm.py: identical count relations, vocab
-    sizes, and downstream scores."""
+    sizes, and downstream scores. Eager: the call itself runs both
+    corpus jobs before returning, even when the pair is built only to
+    inspect plans."""
     from dbbspark.session import cut_lineage
 
     if n < 1:

@@ -14,7 +14,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .dedup import md5_int_col
+from ..functions import sql_ident, sql_str
+from .dedup import MD5_INT_SPARK_SQL
 
 _SCALE = 1_000_000
 
@@ -94,8 +95,9 @@ def mix_sources(
         # salt the gate with the source name so the same id isn't
         # correlated across sources (identical ids would otherwise be
         # kept/dropped together, biasing cross-source joins).
+        key = f"concat({sql_str(name + ':')}, CAST({sql_ident(id_col)} AS STRING))"
         gate = (
-            F.pmod(md5_int_col(F.concat(F.lit(name + ":"), F.col(id_col).cast("string"))), F.lit(_SCALE))
+            F.pmod(F.expr(MD5_INT_SPARK_SQL(key)), F.lit(_SCALE))
             < F.lit(int(round(rate * _SCALE)))
         )
         parts.append(
@@ -143,21 +145,16 @@ def epoch_repeats(
     group_t = docs.schema[source_col].dataType.simpleString()
     rep_df = spark.createDataFrame(
         [(k, float(v)) for k, v in repeats.items()],
-        f"{source_col} {group_t}, _r double",
+        f"{sql_ident(source_col)} {group_t}, _r double",
     )
     n_full = F.floor("_r").cast("int")
     frac = F.col("_r") - F.floor("_r")
-    gate = (
-        md5_int_col(
-            F.concat_ws(
-                "\x1f",
-                F.col(id_col).cast("string"),
-                F.col("rep").cast("string"),
-                F.lit(str(epoch_seed)),
-            )
-        )
-        % _SCALE
+    sep, seed = sql_str("\x1f"), sql_str(str(epoch_seed))
+    key = (
+        f"concat_ws({sep}, CAST({sql_ident(id_col)} AS STRING), "
+        f"CAST(rep AS STRING), {seed})"
     )
+    gate = F.expr(MD5_INT_SPARK_SQL(key)) % _SCALE
     joined = (
         docs.join(F.broadcast(rep_df), source_col, "left")
         .withColumn(

@@ -25,6 +25,7 @@ import math
 
 from pyspark.sql import DataFrame, functions as F
 
+from dbbspark.functions import sql_ident
 from dbbspark.session import cut_lineage
 
 
@@ -50,10 +51,15 @@ def pack_sequences(
     """
     import pandas as pd
 
+    # internal names: caller names never reach SQL text or mapInPandas
+    # (which rejects a name with a backtick)
     d = (
-        docs.select(id_col, token_col)
-        .repartitionByRange(num_buckets, F.col(id_col))
-        .sortWithinPartitions(id_col)
+        docs.select(
+            F.col(sql_ident(id_col)).alias("_id"),
+            F.col(sql_ident(token_col)).alias("_tok"),
+        )
+        .repartitionByRange(num_buckets, F.col("_id"))
+        .sortWithinPartitions("_id")
         .withColumn("_bucket", F.spark_partition_id())
     )
 
@@ -62,13 +68,13 @@ def pack_sequences(
         for pdf in batches:
             if pdf.empty:
                 continue
-            c = pdf[token_col].cumsum() + run
+            c = pdf["_tok"].cumsum() + run
             run = int(c.iloc[-1])
             out = pdf.copy()
             out["_cum_in_bucket"] = c
             yield out
 
-    schema = f"{id_col} long, {token_col} bigint, _bucket int, _cum_in_bucket bigint"
+    schema = "_id long, _tok bigint, _bucket int, _cum_in_bucket bigint"
     # Lazy local checkpoint: materialized by the totals action below, then
     # REUSED by the final join — without it the scan + cumsum pass runs
     # twice (shuffle outputs aren't shared across separate actions). The
@@ -93,16 +99,16 @@ def pack_sequences(
     return (
         with_partial.join(F.broadcast(off_df), "_bucket")
         .select(
-            id_col,
-            token_col,
+            "_id",
+            "_tok",
             (F.col("_cum_in_bucket") + F.col("_offset")).alias("_cum"),
         )
         .select(
-            id_col,
-            token_col,
-            F.expr(f"(_cum - {token_col}) div {budget}").alias("seq_first"),
+            F.col("_id").alias(id_col),
+            F.col("_tok").alias(token_col),
+            F.expr(f"(_cum - _tok) div {budget}").alias("seq_first"),
             F.expr(f"(_cum - 1) div {budget}").alias("seq_last"),
-            F.expr(f"(_cum - {token_col}) % {budget}").alias("seq_offset"),
+            F.expr(f"(_cum - _tok) % {budget}").alias("seq_offset"),
         )
     )
 

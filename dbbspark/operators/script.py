@@ -21,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..functions import sql_ident, sql_str
+
 # name -> regex character class (Java regex, \\x{...} codepoints)
 SCRIPT_CLASSES: dict[str, str] = {
     "latin": r"[A-Za-zÀ-ɏ]",
@@ -36,32 +38,20 @@ SCRIPT_CLASSES: dict[str, str] = {
 }
 
 
-def script_counts(text: Column) -> list[Column]:
-    """One `regexp_count` column per script class (NULL text counts 0)."""
-    body = F.coalesce(text, F.lit(""))
-    return [
-        F.regexp_count(body, F.lit(cls)).alias(f"n_{name}")
-        for name, cls in SCRIPT_CLASSES.items()
-    ]
-
-
 def SCRIPT_COUNT_SQL(text_sql: str, name: str) -> str:
-    """Spark-SQL twin of one `script_counts` column over a SQL
-    expression string (r14): constant-stratum call sites (q_doc_metrics)
-    generate one CASE expression per class instead of paying a py4j
-    round-trip per expression node — same regexp_count over the same
-    SCRIPT_CLASSES constant, so values are the operator's own."""
-    from .urls import _sql_str
-
+    """Spark SQL for the count of script class ``name`` characters in the
+    SQL expression ``text_sql`` (NULL text counts 0) — the one definition
+    `script_profile` and the constant-stratum call sites (q_doc_metrics,
+    one CASE expression per class) share."""
     return (
         f"regexp_count(coalesce({text_sql}, ''), "
-        f"{_sql_str(SCRIPT_CLASSES[name])})"
+        f"{sql_str(SCRIPT_CLASSES[name])})"
     )
 
 
 def script_derivations(min_letters: int = 5) -> tuple[list[Column], Column]:
     """(ratio columns, dominant column) over ALREADY-MATERIALIZED
-    ``n_<class>`` count columns (the script_counts output) — the
+    ``n_<class>`` count columns (SCRIPT_COUNT_SQL per class) — the
     expression-level half of `script_profile`, for callers composing
     the profile into an existing single-projection annotate pass
     (q_doc_metrics) instead of joining a second relation. Counts must
@@ -91,7 +81,7 @@ def script_derivations(min_letters: int = 5) -> tuple[list[Column], Column]:
     max_count = "greatest(" + ", ".join(f"n_{n}" for n in letters) + ")"
     branches = " ".join(
         f"WHEN ({total}) >= {int(min_letters)} AND n_{n} = {max_count} "
-        f"THEN '{n}'"
+        f"THEN {sql_str(n)}"
         for n in letters
     )
     dominant = F.expr(f"CASE {branches} ELSE 'unknown' END")
@@ -116,7 +106,10 @@ def script_profile(
     counted = docs.select(
         F.col(id_col),
         F.length(F.coalesce(F.col(text_col), F.lit(""))).alias("n_chars"),
-        *script_counts(F.col(text_col)),
+        *[
+            F.expr(SCRIPT_COUNT_SQL(sql_ident(text_col), n)).alias(f"n_{n}")
+            for n in SCRIPT_CLASSES
+        ],
     )
     ratio_cols, dominant = script_derivations(min_letters)
     return counted.select(id_col, "n_chars", *ratio_cols, dominant)

@@ -10,7 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from .dedup import md5_int_col, shingle_docs
+from ..functions import sql_ident, sql_str
+from .dedup import MD5_INT_SPARK_SQL, shingle_docs
 
 # Deliberately conservative patterns: scrubbing trades recall for not
 # mangling ordinary text (versions, ids). Tightening them is a config
@@ -82,14 +83,14 @@ def benchmark_overlap(
     bench_sh = (
         shingle_docs(benchmark, bench_id_col, bench_text_col, shingle_n)
         .select(F.explode("shingles").alias("s"))
-        .select(md5_int_col(F.col("s"), 15).alias("h"))
+        .select(F.expr(MD5_INT_SPARK_SQL("s")).alias("h"))
         .distinct()
     )
     doc_sh = shingle_docs(docs, id_col, text_col, shingle_n).select(
         "doc",
         F.size("shingles").alias("n_shingles"),
-        F.array_distinct(
-            F.transform(F.col("shingles"), lambda s: md5_int_col(s, 15))
+        F.expr(
+            f"array_distinct(transform(shingles, s -> {MD5_INT_SPARK_SQL('s')}))"
         ).alias("hs"),
     )
     # collect the benchmark set once (small side), probe via array_intersect
@@ -130,7 +131,9 @@ def leakage_safe_split(
     string. Output: input + `is_val` boolean (filter to materialize
     either side; keeping the flag joinable is what audit queries want)."""
     bucket = F.pmod(
-        md5_int_col(F.concat_ws("", F.lit(salt), F.col(group_col).cast("string"))),
+        F.expr(MD5_INT_SPARK_SQL(
+            f"concat_ws('', {sql_str(salt)}, CAST({sql_ident(group_col)} AS STRING))"
+        )),
         F.lit(1_000_000),
     )
     return df.withColumn("is_val", bucket < int(val_fraction * 1_000_000))

@@ -31,15 +31,16 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from dbbspark.functions import sql_ident
 from dbbspark.session import cut_lineage
 
 
 def _ddl(df: DataFrame, col: str) -> str:
-    """DDL type string of an input column — the mapInPandas output schema
-    is built from the ACTUAL input types (string ids, float scores, int
-    token counts all pass through unchanged) instead of assuming
-    long/double/string."""
-    return df.schema[col].dataType.simpleString()
+    """DDL field (quoted name + type) of an input column — the
+    mapInPandas output schema is built from the ACTUAL input types
+    (string ids, float scores, int token counts all pass through
+    unchanged) instead of assuming long/double/string."""
+    return f"{sql_ident(col)} {df.schema[col].dataType.simpleString()}"
 
 
 def budget_select(
@@ -89,8 +90,8 @@ def budget_select(
             yield out
 
     schema = (
-        f"{id_col} {_ddl(docs, id_col)}, {score_col} {_ddl(docs, score_col)}, "
-        f"{token_col} {_ddl(docs, token_col)}, _bucket int, _cum_in_bucket bigint"
+        f"{_ddl(docs, id_col)}, {_ddl(docs, score_col)}, "
+        f"{_ddl(docs, token_col)}, _bucket int, _cum_in_bucket bigint"
     )
     # Lazy localCheckpoint: the totals action below materializes the
     # range-shuffle + cumsum pass once; the final join reuses it.
@@ -197,10 +198,10 @@ def budget_select_grouped(
     import pandas as pd  # noqa: F401
 
     spark = docs.sparkSession
-    group_t = _ddl(docs, group_col)
+    group_field = _ddl(docs, group_col)
     wanted = spark.createDataFrame(
         [(k, int(v)) for k, v in budgets.items()],
-        f"{group_col} {group_t}, _budget bigint",
+        f"{group_field}, _budget bigint",
     )
     d = (
         docs.select(group_col, id_col, score_col, token_col)
@@ -234,8 +235,8 @@ def budget_select_grouped(
             yield pd.concat(outs)
 
     schema = (
-        f"{group_col} {group_t}, {id_col} {_ddl(docs, id_col)}, "
-        f"{score_col} {_ddl(docs, score_col)}, {token_col} {_ddl(docs, token_col)}, "
+        f"{_ddl(docs, group_col)}, {_ddl(docs, id_col)}, "
+        f"{_ddl(docs, score_col)}, {_ddl(docs, token_col)}, "
         "_budget bigint, _bucket int, _cum_in_bucket bigint"
     )
     with_partial = d.mapInPandas(part_cumsum, schema).transform(cut_lineage, eager=False)
@@ -252,7 +253,7 @@ def budget_select_grouped(
         offsets.append((row["_bucket"], g, run.get(g, 0)))
         run[g] = run.get(g, 0) + row["_total"]
     off_df = spark.createDataFrame(
-        offsets, f"_bucket int, {group_col} {group_t}, _offset bigint"
+        offsets, f"_bucket int, {group_field}, _offset bigint"
     )
 
     return (

@@ -37,7 +37,7 @@ def _unit(X):
 
 from pyspark.sql.window import Window
 
-from ..functions import cosine
+from ..functions import cosine, sql_ident
 
 
 def matmul_scores(
@@ -138,7 +138,7 @@ def train_centroids(
     model = KMeans(k=k, seed=seed, maxIter=max_iter).fit(feat)
     return vectors.sparkSession.createDataFrame(
         [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
-        f"{id_col} long, {vec_col} array<double>",
+        f"{sql_ident(id_col)} long, {sql_ident(vec_col)} array<double>",
     )
 
 
@@ -643,7 +643,7 @@ def cluster_balanced_sample(
     back to the corpus, same contract as `semantic_dedup`.
 
     ``portable_rank=True`` swaps the xxhash64 coin for the md5-derived
-    bigint of the id's string form (dedup.md5_int_col — the C43/C44
+    bigint of the id's string form (dedup.MD5_INT_SPARK_SQL — the C43/C44
     portable-hash convention): same uniform-coin semantics, but an
     oracle engine can re-derive the rank hash-for-hash, which is what
     puts this operator under the DuckDB value oracle (q_embed_normalize
@@ -658,9 +658,9 @@ def cluster_balanced_sample(
     else:
         assigned = ivf_assign(vectors, centroids, id_col, vec_col)
     if portable_rank:
-        from .dedup import md5_int_col
+        from .dedup import MD5_INT_SPARK_SQL
 
-        coin = md5_int_col(F.col("vid").cast("string"))
+        coin = F.expr(MD5_INT_SPARK_SQL("CAST(vid AS STRING)"))
     else:
         coin = F.xxhash64(F.col("vid"))
     w = Window.partitionBy("centroid_id").orderBy(coin, F.col("vid"))

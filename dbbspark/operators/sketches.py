@@ -32,6 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..functions import sql_ident
 from .dedup import tokens_col
 
 # Defaults: eps = e/width ~ 0.00066, delta = 2^-5 ~ 3% per query.
@@ -184,7 +185,7 @@ def cms_sketch(
         toks = F.transform(toks, F.lower)
     mentions = docs.select(F.explode(toks).alias("token"))
     cells = mentions.select(
-        F.explode(_cms_cells("token", depth, width, portable)).alias("cell")
+        F.explode(_cms_cells(sql_ident("token"), depth, width, portable)).alias("cell")
     )
     return cells.groupBy(
         F.col("cell.row").alias("row"), F.col("cell.col").alias("col")
@@ -209,9 +210,9 @@ def cms_sketch_weighted(
     fold host's 2.5 s budget while this form is ~free). Equivalence to
     the mention form is pinned in tests/test_sketches.py."""
     cells = counts.select(
-        F.col(count_col).alias("__w"),
+        F.col(sql_ident(count_col)).alias("__w"),
         F.explode(
-            _cms_cells(f"`{token_col}`", depth, width, portable)
+            _cms_cells(sql_ident(token_col), depth, width, portable)
         ).alias("cell"),
     )
     return cells.groupBy(
@@ -244,9 +245,9 @@ def cms_estimate(
     the sketch (missing cell → 0), take the per-token MIN across rows.
     The query side is small by construction (a vocab probe list), so the
     join broadcasts it; the sketch side is <= depth×width rows anyway."""
-    token_sql = f"lower(`{token_col}`)" if lowercase else f"`{token_col}`"
+    token_sql = f"lower({sql_ident(token_col)})" if lowercase else sql_ident(token_col)
     probes = queries.select(
-        F.col(token_col).alias("token"),
+        F.col(sql_ident(token_col)).alias("token"),
         F.explode(_cms_cells(token_sql, depth, width, portable)).alias("cell"),
     ).select("token", F.col("cell.row").alias("row"), F.col("cell.col").alias("col"))
     joined = probes.join(cms, ["row", "col"], "left")
@@ -283,10 +284,11 @@ def kmv_sketch(
     element is not a set member).
 
     ``hash_col`` overrides the hash (default xxhash64 — full int64
-    range). Passing `dedup.md5_int_col` gives an engine-portable sketch
-    the DuckDB oracle can re-derive hash-for-hash (the r11 fold in
-    q_approx_distinct); estimators over a non-default hash must
-    normalize over the matching domain (`kmv_cardinality`'s ``domain``)."""
+    range). Passing ``F.expr(dedup.MD5_INT_SPARK_SQL(...))`` gives an
+    engine-portable sketch the DuckDB oracle can re-derive hash-for-hash
+    (the r11 fold in q_approx_distinct); estimators over a non-default
+    hash must normalize over the matching domain (`kmv_cardinality`'s
+    ``domain``)."""
     c = F.col(key) if isinstance(key, str) else key
     h = F.xxhash64(c) if hash_col is None else hash_col
     return (
@@ -315,7 +317,7 @@ def kmv_cardinality(
     saturated (|S| = k), N̂ = (k-1)/u_(k) (u_(k) = k-th smallest value
     normalized to (0,1]); an unsaturated sketch holds EVERY distinct
     hash, so the count is exact. ``domain=(lo, span)`` normalizes a
-    non-default hash (e.g. md5_int_col's [0, 2^60) — the portable-fold
+    non-default hash (e.g. MD5_INT_SPARK_SQL's [0, 2^60) — the portable-fold
     hash); default is xxhash64's full signed-int64 range."""
     if len(hashes) < k:
         return float(len(hashes))
@@ -341,7 +343,7 @@ def corpus_overlap(
     answer is exact (the sketches are the full hash sets).
 
     ``domain`` normalizes a non-default hash (see `kmv_cardinality`) —
-    sketches built over `dedup.md5_int_col` pass ``(0, 2**60)`` so the
+    sketches built over `dedup.MD5_INT_SPARK_SQL` pass ``(0, 2**60)`` so the
     saturated estimators divide by the right u_(k); without it a
     portable-hash sketch would silently normalize over xxhash64's int64
     range (the r13 snapshot-diff fold's requirement).

@@ -23,6 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions import sql_ident
 from .profile import profile_drift, profile_table
 from .sketches import KMV_K, corpus_overlap, kmv_sketch
 
@@ -45,7 +46,7 @@ def snapshot_diff(
     unsaturated), estimated added/removed document counts, and the
     C46 drift findings between the two column profiles.
 
-    ``portable_hash=True`` sketches over `dedup.md5_int_col` of the
+    ``portable_hash=True`` sketches over `dedup.MD5_INT_SPARK_SQL` of the
     content hash (with the matching [0, 2^60) estimator domain) instead
     of xxhash64 — same estimator semantics, but a second engine can
     re-derive every sketch value, which is what puts the diff under the
@@ -58,13 +59,16 @@ def snapshot_diff(
     The mode the r13 fold runs: the drift leg's per-column stats are
     independently value-folded in q_rollup, so paying two wide
     aggregations per bench pass would re-check already-checked
-    arithmetic.
+    arithmetic. Each input is read by several (possibly concurrent)
+    jobs: cut the lineage of an input with a nondeterministic upstream
+    (a sample, rand()) first, or its counts and sketch may see different rows.
     """
-    key = F.sha2(F.col(key_col).cast("binary"), 256)
+    key_sql = f"sha2(CAST({sql_ident(key_col)} AS BINARY), 256)"
+    key = F.expr(key_sql)
     if portable_hash:
-        from .dedup import md5_int_col
+        from .dedup import MD5_INT_SPARK_SQL
 
-        hc, domain = md5_int_col(key), (0, 2**60)
+        hc, domain = F.expr(MD5_INT_SPARK_SQL(key_sql)), (0, 2**60)
     else:
         hc, domain = None, None
     ska = kmv_sketch(old, key, k=k, hash_col=hc)

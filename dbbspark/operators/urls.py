@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from ..functions import sql_ident, sql_str
+
 # Query parameters that never identify content (trackers); dropping them
 # is what collapses the long tail of tracking-stamped duplicate URLs.
 _TRACKING_PARAMS = (
@@ -73,49 +75,31 @@ def canonicalize_url(url: Column) -> Column:
     return u
 
 
-# Single-source regexes shared by the Column builders below and the
-# generated-SQL twins (HOST_SQL/REGISTERED_DOMAIN_SQL — r14): the
-# constant-URL call sites build one F.expr string instead of a py4j
-# round-trip per expression node.
+# The host and registered-domain expressions are defined once, as Spark
+# SQL text over a SQL expression string: column call sites wrap them in
+# F.expr over ``sql_ident(col)``, and the constant-URL call sites
+# (q_doc_metrics) interpolate literals — one string per expression
+# instead of a py4j round-trip per expression node.
 HOST_RE = r"^(?:[^/?]*://)?(?:[^@/?]*@)?([^:/?#]+)"
 _REG3_RE = rf"([^.]+\.(?:{_TWO_LABEL_SUFFIXES}))$"
 _REG2_RE = r"([^.]+\.[^.]+)$"
 
 
-def _sql_str(s: str) -> str:
-    """Spark-SQL single-quoted string literal (backslash escaping)."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
-def extract_host(url: Column) -> Column:
-    """The lowercase host (no scheme, port, path, or userinfo)."""
-    return F.lower(F.regexp_extract(url, HOST_RE, 1))
-
-
 def HOST_SQL(url_expr: str) -> str:
-    """Spark-SQL twin of `extract_host` over a SQL expression string."""
-    return f"lower(regexp_extract({url_expr}, {_sql_str(HOST_RE)}, 1))"
-
-
-def registered_domain(url: Column) -> Column:
-    """The registrable domain of the URL's host: last two labels, or
-    last three when the two-label tail is a known public suffix
-    (co.uk etc. — `_TWO_LABEL_SUFFIXES` approximates the public-suffix
-    list; swap in the full PSL as broadcast data for production)."""
-    host = extract_host(url)
-    three = F.regexp_extract(host, _REG3_RE, 1)
-    two = F.regexp_extract(host, _REG2_RE, 1)
-    return F.when(three != "", three).otherwise(
-        F.when(two != "", two).otherwise(host)
-    )
+    """The lowercase host (no scheme, port, path, or userinfo) of the
+    URL SQL expression ``url_expr``."""
+    return f"lower(regexp_extract({url_expr}, {sql_str(HOST_RE)}, 1))"
 
 
 def REGISTERED_DOMAIN_SQL(url_expr: str) -> str:
-    """Spark-SQL twin of `registered_domain` (flattened CASE ≡ the
-    nested when/otherwise: a NULL comparison falls through both)."""
+    """The registrable domain of the URL SQL expression's host: last two
+    labels, or last three when the two-label tail is a known public
+    suffix (co.uk etc. — `_TWO_LABEL_SUFFIXES` approximates the
+    public-suffix list; swap in the full PSL as broadcast data for
+    production). A NULL host falls through both comparisons to NULL."""
     host = HOST_SQL(url_expr)
-    three = f"regexp_extract({host}, {_sql_str(_REG3_RE)}, 1)"
-    two = f"regexp_extract({host}, {_sql_str(_REG2_RE)}, 1)"
+    three = f"regexp_extract({host}, {sql_str(_REG3_RE)}, 1)"
+    two = f"regexp_extract({host}, {sql_str(_REG2_RE)}, 1)"
     return (
         f"CASE WHEN {three} != '' THEN {three} "
         f"WHEN {two} != '' THEN {two} ELSE {host} END"
@@ -170,7 +154,7 @@ def cap_per_domain(
         F.xxhash64(F.col(id_col), F.lit(salt)), F.col(id_col)
     )
     return (
-        docs.withColumn("__dom", registered_domain(F.col(url_col)))
+        docs.withColumn("__dom", F.expr(REGISTERED_DOMAIN_SQL(sql_ident(url_col))))
         .withColumn(
             "__ns",
             F.when(
@@ -205,7 +189,7 @@ def filter_blocklisted(
         F.lower(F.col(domain_col)).alias("__dom")
     ).distinct()
     return (
-        docs.withColumn("__dom", registered_domain(F.col(url_col)))
+        docs.withColumn("__dom", F.expr(REGISTERED_DOMAIN_SQL(sql_ident(url_col))))
         .join(F.broadcast(bl), "__dom", "left_anti")
         .drop("__dom")
     )

@@ -34,24 +34,18 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from dbbspark.functions import sql_ident
 from dbbspark.session import cut_lineage
-
-
-# Engine-portable hash template for the r11 oracle fold: md5-derived
-# bigint (dedup.md5_int_col's SQL form) instead of xxhash64, so DuckDB
-# can re-derive the fingerprints hash-for-hash. {g} is the gram SQL.
-PORTABLE_HASH_SQL = (
-    "CAST(conv(substring(md5(CAST({g} AS BINARY)), 1, 15), 16, 10) "
-    "AS BIGINT)"
-)
 
 
 def gram_hashes_expr(
     text: str, k: int, hash_sql: str = "xxhash64({g})"
 ) -> str:
     """SQL for the k-gram hash array of `text` (empty for null/short).
-    ``hash_sql`` is a template applied to each gram — the default
-    xxhash64 for production, `PORTABLE_HASH_SQL` for oracle folds."""
+    ``hash_sql`` is a template applied to each gram ``{g}`` — the default
+    xxhash64 for production; ``dedup.MD5_INT_SPARK_SQL("{g}")`` (the
+    engine-portable md5-derived bigint) for oracle folds, so DuckDB can
+    re-derive the fingerprints hash-for-hash."""
     gram = f"substring({text}, i, {k})"
     # The short case MUST be guarded explicitly: Spark's sequence(1, 0)
     # is the DESCENDING [1, 0] (implicit step -1), so the old
@@ -116,7 +110,7 @@ def winnow_fingerprints(
     for the small w (4-16) the guarantee wants.
     """
     with_g = docs.select(
-        F.col(id_col), F.expr(gram_hashes_expr(text_col, k)).alias("_g")
+        F.col(id_col), F.expr(gram_hashes_expr(sql_ident(text_col), k)).alias("_g")
     )
     return with_g.select(
         F.col(id_col), F.expr(fingerprints_expr("_g", w)).alias("fingerprints")

@@ -108,7 +108,7 @@ def q_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("agg", "closure", "approx"),
 )
 def q_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import md5_int_col
+    from ..operators.dedup import MD5_INT_SPARK_SQL
     from ..operators.sketches import kmv_sketch
 
     ev = load_table(spark, sf_dir, "events")
@@ -139,7 +139,7 @@ def q_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checked values; u_(k) normalizes over md5-int's [0, 2^60) domain.
     sk = kmv_sketch(
         ev, F.col("user_id"), k=64,
-        hash_col=md5_int_col(F.col("user_id").cast("string")),
+        hash_col=F.expr(MD5_INT_SPARK_SQL("CAST(user_id AS STRING)")),
     )
     kstat = sk.agg(
         F.max("h").alias("kmv_kth"), F.count("*").alias("_n")

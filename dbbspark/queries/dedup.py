@@ -379,12 +379,12 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # core (one IN-set-pushdown scan + python Jaccard — the arithmetic
     # the distributed audit plan shares). On the driver regime the
     # stratum gate runs in PYTHON over the rows the fused operator just
-    # collected (md5_int_py ≡ md5_int_col, pinned in tests/test_dedup)
+    # collected (md5_int_py ≡ MD5_INT_SPARK_SQL, pinned in tests/test_dedup)
     # — zero extra Spark jobs; the distributed path keeps the bounded
     # stratum collect (25% of non-rep members, driver-safe by the same
     # argument as the audit's counted regime).
     from ..operators.audit import member_rep_jaccard_map
-    from ..operators.dedup import md5_int_col, md5_int_py
+    from ..operators.dedup import MD5_INT_SPARK_SQL, md5_int_py
 
     if local_rows is not None:
         stratum = [
@@ -398,11 +398,9 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             for r in ranked.where(
                 (F.col("node") != F.col("component"))
                 & (
-                    md5_int_col(
-                        F.concat(
-                            F.lit("purity-v1"), F.col("node").cast("string")
-                        )
-                    )
+                    F.expr(MD5_INT_SPARK_SQL(
+                        "concat('purity-v1', CAST(node AS STRING))"
+                    ))
                     % 100
                     < 25
                 )
@@ -420,7 +418,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         # on the driver regime every input is ALREADY local, so the
         # final frame is assembled in Python — ONE createDataFrame
         # instead of two + a broadcast join + two withColumn jobs.
-        # round_half_up_py ≡ F.round and md5_int_py ≡ md5_int_col are
+        # round_half_up_py ≡ F.round and md5_int_py ≡ MD5_INT_SPARK_SQL are
         # pinned in tests (leakage_safe_split's pmod == % here: the
         # md5-int is non-negative). Interleaved tail A/B: 1.47 → 0.48 s
         # (plans/r14/probe_dedup_clusters.py). The distributed path

@@ -150,7 +150,7 @@ def q_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("join", "interval"),
 )
 def q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import md5_int_col
+    from ..operators.dedup import MD5_INT_SPARK_SQL
     from ..operators.intervals import interval_count_points
     from dbbspark.session import cut_lineage
 
@@ -164,7 +164,7 @@ def q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 256 md5-ordered intervals make the brute leg strictly linear in
     # corpus size at every scale factor (TakeOrdered — no global sort)
     gated = iv.orderBy(
-        md5_int_col(F.col("propid").cast("string")), "propid"
+        F.expr(MD5_INT_SPARK_SQL("CAST(propid AS STRING)")), "propid"
     ).limit(256)
     probe = orders.select("o_orderkey", "o_orderdate")
     joined = interval_join(

@@ -21,6 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..catalog import query
+from ..functions import sql_str
 from ..tables import load_table
 
 from dbbspark.session import cut_lineage
@@ -104,7 +105,7 @@ from ..operators.urls import _TWO_LABEL_SUFFIXES as _SUFFIXES  # noqa: E402
     tags=("text", "funnel", "closure"),
 )
 def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import md5_int_col
+    from ..operators.dedup import MD5_INT_SPARK_SQL
     from ..operators.funnel import SURVIVED, funnel_blame
     from ..operators.spans import duplicate_ngram_spans
 
@@ -112,7 +113,7 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # set-valued stage: a deterministic "blocklist" id set (md5 gate —
     # stands in for an upstream near-dup component drop list)
     block_ids = docs.where(
-        md5_int_col(F.col("doc_id").cast("string")) % 20 == 0
+        F.expr(MD5_INT_SPARK_SQL("CAST(doc_id AS STRING)")) % 20 == 0
     ).select("doc_id")
     blamed = funnel_blame(
         docs,
@@ -200,7 +201,7 @@ _SCRIPT_DOM = (
     + " ELSE 'unknown' END"
 )
 
-from ..operators.script import script_counts, script_derivations  # noqa: E402
+from ..operators.script import script_derivations  # noqa: E402
 
 
 def _script_stratum_col() -> F.Column:
@@ -227,7 +228,7 @@ def _script_stratum_col() -> F.Column:
 # - bigram/trigram tuples ≡ concat_ws-joined grams (tokens cannot
 #   contain the join char, so tuple distinctness == string distinctness);
 # - Python len() ≡ F.length (both count code points);
-# - winnow hash = int(md5(gram utf-8)[:15], 16) ≡ PORTABLE_HASH_SQL
+# - winnow hash = int(md5(gram utf-8)[:15], 16) ≡ MD5_INT_SPARK_SQL
 #   (conv is exact: probed);
 # - nullable outputs ride pandas Int64 — an object/None column would
 #   coerce to float64 on the Arrow boundary and round 60-bit md5 ints
@@ -334,19 +335,15 @@ doc_text_metrics = F.pandas_udf(_doc_metrics_batch, _DOC_METRICS_SCHEMA)
 # --- r14: generated constant-stratum CASE SQL for the C37/C49 folds -------
 #
 # Both legs are pure functions of doc_id % k over literal strata, so each
-# output column is ONE CASE whose branches apply the operators' SQL twins
+# output column is ONE CASE whose branches apply the operators' SQL text
 # (urls.HOST_SQL / REGISTERED_DOMAIN_SQL, script.SCRIPT_COUNT_SQL) to a
 # string literal — Catalyst constant-folds every branch at plan time.
 # Built once at import as plain strings: the previous py4j when/otherwise
 # composition cost ~2.5 s of plan-build per bench run (~900 gateway
 # round-trips), which sat inside the timed region.
 
-from ..operators.script import SCRIPT_COUNT_SQL as _SCRIPT_COUNT_SQL  # noqa: E402
-from ..operators.urls import (  # noqa: E402
-    HOST_SQL as _HOST_SQL,
-    REGISTERED_DOMAIN_SQL as _REG_DOM_SQL,
-    _sql_str,
-)
+from ..operators.script import SCRIPT_COUNT_SQL  # noqa: E402
+from ..operators.urls import HOST_SQL, REGISTERED_DOMAIN_SQL  # noqa: E402
 
 _URL_STRATA = (
     "https://WWW.News.example.com/Story/",
@@ -357,42 +354,26 @@ _URL_STRATA = (
 )
 
 
-_URL_HOST_CASE_SQL = (
-    "CASE CAST(doc_id % 6 AS INT) "
-    + " ".join(
-        f"WHEN {i} THEN {_HOST_SQL(_sql_str(u))}"
-        for i, u in enumerate(_URL_STRATA)
+def _url_case_sql(url_sql) -> str:
+    branches = " ".join(
+        f"WHEN {i} THEN {url_sql(sql_str(u))}" for i, u in enumerate(_URL_STRATA)
     )
-    + " ELSE CAST(NULL AS STRING) END"
-)
-_URL_DOMAIN_CASE_SQL = (
-    "CASE CAST(doc_id % 6 AS INT) "
-    + " ".join(
-        f"WHEN {i} THEN {_REG_DOM_SQL(_sql_str(u))}"
-        for i, u in enumerate(_URL_STRATA)
-    )
-    + " ELSE CAST(NULL AS STRING) END"
-)
+    return f"CASE CAST(doc_id % 6 AS INT) {branches} ELSE CAST(NULL AS STRING) END"
+
+
+_URL_HOST_CASE_SQL = _url_case_sql(HOST_SQL)
+_URL_DOMAIN_CASE_SQL = _url_case_sql(REGISTERED_DOMAIN_SQL)
 # per class: CASE over the 10 strata, ELSE = the operator's NULL-text
 # path (regexp_count over coalesce(NULL,'') — folds to 0)
-_SCRIPT_COUNT_CASE_SQL = {}
-
-
-def _build_script_cases() -> None:
-    from ..operators.script import SCRIPT_CLASSES
-
-    for name in SCRIPT_CLASSES:
-        branches = " ".join(
-            f"WHEN {i} THEN {_SCRIPT_COUNT_SQL(_sql_str(s), name)}"
-            for i, s in enumerate(_SCRIPT_STRATA)
-        )
-        _SCRIPT_COUNT_CASE_SQL[name] = (
-            f"CASE CAST(doc_id % 11 AS INT) {branches} "
-            f"ELSE {_SCRIPT_COUNT_SQL('CAST(NULL AS STRING)', name)} END"
-        )
-
-
-_build_script_cases()
+_SCRIPT_COUNT_CASE_SQL = {
+    name: "CASE CAST(doc_id % 11 AS INT) "
+    + " ".join(
+        f"WHEN {i} THEN {SCRIPT_COUNT_SQL(sql_str(s), name)}"
+        for i, s in enumerate(_SCRIPT_STRATA)
+    )
+    + f" ELSE {SCRIPT_COUNT_SQL('CAST(NULL AS STRING)', name)} END"
+    for name in _SC
+}
 
 
 @query(
@@ -542,7 +523,7 @@ _build_script_cases()
     "discipline: cuts passed in, not re-estimated), the easy→hard "
     "banding curriculum_order materializes; the band CASE is re-derived "
     "as boolean sums in the oracle. FOLDED C37 (r10): `url_host` / "
-    "`url_domain` run operators/urls.py extract_host + registered_domain "
+    "`url_domain` run operators/urls.py HOST_SQL + REGISTERED_DOMAIN_SQL "
     "over deterministic URL strata (mixed-case host, userinfo+port, "
     "schemeless, co.uk/co.jp two-label public suffixes, dotless host, "
     "NULL) — the host regex and the suffix-aware registrable-domain CASE "
@@ -559,7 +540,7 @@ _build_script_cases()
     "oracle re-derives them the relational way (unnest + GROUP BY + "
     "max/sum) — two genuinely different algorithms agreeing on values. "
     "FOLDED C49 (r10): `script_dom`/`script_latin_ratio` run "
-    "operators/script.py's script_counts + script_derivations (the "
+    "operators/script.py's SCRIPT_COUNT_SQL + script_derivations (the "
     "expression core script_profile composes) over one synthetic "
     "stratum per script class (plus an exact latin/cyrillic TIE that "
     "declaration order must win, a digits-only stratum the min_letters "
@@ -591,7 +572,7 @@ _build_script_cases()
     tags=("text", "sampling", "closure"),
 )
 def q_doc_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import md5_int_col
+    from ..operators.dedup import MD5_INT_SPARK_SQL
     from ..operators.script import SCRIPT_CLASSES
 
     docs = load_table(spark, sf_dir, "documents")
@@ -652,7 +633,7 @@ def q_doc_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("lang") == "de", 20)
         .otherwise(10)
     )
-    gate = md5_int_col(F.col("doc_id").cast("string")) % 100
+    gate = F.expr(MD5_INT_SPARK_SQL("CAST(doc_id AS STRING)")) % 100
     _script_ratios, _script_dom = script_derivations()
     from ..operators.curriculum import curriculum_stages
 
@@ -1042,7 +1023,7 @@ def q_embed_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("text", "pipeline", "closure"),
 )
 def q_training_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import md5_int_col, sha_dedup_keep_first
+    from ..operators.dedup import MD5_INT_SPARK_SQL, sha_dedup_keep_first
     from ..operators.snapshot import snapshot_diff
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1064,7 +1045,7 @@ def q_training_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).transform(cut_lineage, eager=False)
     deduped = sha_dedup_keep_first(quality, "text", "doc_id")
     sampled = deduped.where(
-        md5_int_col(F.col("doc_id").cast("string")) % 100 < 80
+        F.expr(MD5_INT_SPARK_SQL("CAST(doc_id AS STRING)")) % 100 < 80
     ).transform(cut_lineage, eager=False)
     agg = sampled.groupBy("lang").agg(
         F.count("*").alias("n_docs"),
@@ -1433,7 +1414,7 @@ def q_chunk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("text", "lm", "closure"),
 )
 def q_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import md5_int_col
+    from ..operators.dedup import MD5_INT_SPARK_SQL
     from ..operators.lm import (
         dsir_select_flag,
         dsir_weights,
@@ -1456,7 +1437,7 @@ def q_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, lm_t, lm_s, "doc_id", "text", broadcast_model=False
     ).transform(cut_lineage, eager=False)
     u = (
-        md5_int_col(F.col("doc").cast("string")) % F.lit(1_000_000_007)
+        F.expr(MD5_INT_SPARK_SQL("CAST(doc AS STRING)")) % F.lit(1_000_000_007)
         + F.lit(0.5)
     ) / F.lit(1_000_000_007.0)
     # r13: the cut is explicit, so selection is a deterministic per-row

@@ -11,6 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..functions import sql_str
+
 # href scrape + the reference's nightsum date pattern
 # (bin/monitor_DBB_stagein.py:308-311)
 _HREF_RE = r'href="([^"]+)"'
@@ -32,7 +34,7 @@ def parse_index(spark: SparkSession, html_text: str) -> DataFrame:
     lines = spark.createDataFrame(
         [(ln,) for ln in html_text.splitlines()], "line string"
     )
-    href = F.explode(F.expr(f"regexp_extract_all(line, '{_HREF_RE}', 1)")).alias(
+    href = F.explode(F.expr(f"regexp_extract_all(line, {sql_str(_HREF_RE)}, 1)")).alias(
         "href"
     )
     nite = F.concat(

@@ -47,6 +47,7 @@ from __future__ import annotations
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..functions import sql_ident
 from ..operators.pq import ivfpq_encode, ivfpq_topk
 
 
@@ -547,7 +548,7 @@ def _quantizer_from_row(
 ):
     cents = spark.createDataFrame(
         list(zip(row["cent_ids"], [list(v) for v in row["cent_vecs"]])),
-        f"{id_col} long, {vec_col} array<double>",
+        f"{sql_ident(id_col)} long, {sql_ident(vec_col)} array<double>",
     ).localCheckpoint(eager=True)
     books = [[list(sub) for sub in book] for book in row["codebooks"]]
     return cents, books

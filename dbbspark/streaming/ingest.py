@@ -255,10 +255,10 @@ def _batch_token(classified: DataFrame) -> str:
     dynamic-partition overwrite replaces the crashed attempt's rows.
     Shuffle-free (one partial-aggregated sum — no collect_list row that
     would grow with batch size)."""
-    from ..operators.dedup import md5_int_col
+    from ..operators.dedup import MD5_INT_SPARK_SQL
 
     row = classified.agg(
-        F.sum(md5_int_col(F.col("data_name")) % F.lit(1_000_000_007)).alias("s"),
+        F.sum(F.expr(MD5_INT_SPARK_SQL("data_name")) % F.lit(1_000_000_007)).alias("s"),
         F.count("*").alias("n"),
     ).first()
     return f"c{(row['s'] or 0) % (1 << 60):x}n{row['n']}"

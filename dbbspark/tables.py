@@ -26,6 +26,7 @@ from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .functions import sql_ident
 from .session import apply_runtime_confs
 
 TABLE_NAMES = (
@@ -131,11 +132,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     for col in nanos:
         # nanos → micros truncation (matches DuckDB's ns→us cast); integer
         # `div`, NOT `/` — double division rounds the low microsecond bit.
-        df = df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` div 1000")))
+        df = df.withColumn(col, F.timestamp_micros(F.expr(f"{sql_ident(col)} div 1000")))
     for col in naive:
         # TIMESTAMP_NTZ → TIMESTAMP: value-preserving under the session's
         # pinned UTC zone, and what DuckDB sees for the same naive column.
-        df = df.withColumn(col, F.col(col).cast("timestamp"))
+        df = df.withColumn(col, F.col(sql_ident(col)).cast("timestamp"))
     return df
 
 

@@ -27,13 +27,9 @@ def t(df):
 def build_variant(spark, drop=()):
     """Rebuild the q_doc_metrics projection with named legs dropped."""
     from dbbspark.operators.curriculum import curriculum_stages
-    from dbbspark.operators.dedup import md5_int_col
-    from dbbspark.operators.urls import extract_host, registered_domain
-    from dbbspark.operators.winnow import (
-        PORTABLE_HASH_SQL,
-        fingerprints_expr,
-        gram_hashes_expr,
-    )
+    from dbbspark.operators.dedup import MD5_INT_SPARK_SQL
+    from dbbspark.operators.urls import HOST_SQL, REGISTERED_DOMAIN_SQL
+    from dbbspark.operators.winnow import fingerprints_expr, gram_hashes_expr
     from dbbspark.functions import (
         dup_char_fraction,
         dup_ratio,
@@ -45,7 +41,11 @@ def build_variant(spark, drop=()):
         _STOPWORDS,
         _script_stratum_col,
     )
-    from dbbspark.operators.script import script_counts, script_derivations
+    from dbbspark.operators.script import (
+        SCRIPT_CLASSES,
+        SCRIPT_COUNT_SQL,
+        script_derivations,
+    )
 
     docs = load_table(spark, SF_DIR, "documents")
     did = F.col("doc_id").cast("string")
@@ -63,7 +63,7 @@ def build_variant(spark, drop=()):
     if "winnow" not in drop:
         docs = docs.withColumn(
             "__wtext",
-            F.when(md5_int_col(F.col("doc_id").cast("string")) % 20 == 0,
+            F.when(F.expr(MD5_INT_SPARK_SQL("CAST(doc_id AS STRING)")) % 20 == 0,
                    F.col("text")),
         )
     cols = [
@@ -71,6 +71,8 @@ def build_variant(spark, drop=()):
         toks.alias("__toks"),
         F.size(toks).alias("n_tokens"),
     ]
+    if "url" not in drop:
+        cols.append(url.alias("__url"))
     if "sw" not in drop:
         cols.append(F.size(F.filter(toks, lambda t: t.isin(*_STOPWORDS))).alias("sw_hits"))
     else:
@@ -84,9 +86,13 @@ def build_variant(spark, drop=()):
     if "lines" not in drop:
         cols.append(F.array_sort(F.split(F.col("text"), "\n")).alias("__lines_s"))
     if "script" not in drop:
-        cols.extend(script_counts(_script_stratum_col()))
+        docs = docs.withColumn("__stratum", _script_stratum_col())
+        cols.extend(
+            F.expr(SCRIPT_COUNT_SQL("__stratum", n)).alias(f"n_{n}")
+            for n in SCRIPT_CLASSES
+        )
     if "winnow" not in drop:
-        cols.append(F.expr(gram_hashes_expr("__wtext", 8, PORTABLE_HASH_SQL)).alias("__wg"))
+        cols.append(F.expr(gram_hashes_expr("__wtext", 8, MD5_INT_SPARK_SQL("{g}"))).alias("__wg"))
     m = docs.select(*cols)
     sel2 = ["*"]
     if "grams" not in drop:
@@ -102,7 +108,7 @@ def build_variant(spark, drop=()):
     atl = F.col("n_chars").cast("double") / F.col("n_tokens")
     rate = (F.when(F.col("lang") == "en", 50).when(F.col("lang") == "de", 20)
             .otherwise(10))
-    gate = md5_int_col(F.col("doc_id").cast("string")) % 100
+    gate = F.expr(MD5_INT_SPARK_SQL("CAST(doc_id AS STRING)")) % 100
     m, _ = curriculum_stages(
         m.withColumn("difficulty", F.col("n_tokens").cast("double")),
         "difficulty", stages=4, cuts=[32.0, 56.0, 76.0])
@@ -128,8 +134,8 @@ def build_variant(spark, drop=()):
     else:
         out_cols.append(dup_ratio(F.col("__toks")).alias("dup_token_ratio"))
     if "url" not in drop:
-        out_cols += [extract_host(url).alias("url_host"),
-                     registered_domain(url).alias("url_domain")]
+        out_cols += [F.expr(HOST_SQL("__url")).alias("url_host"),
+                     F.expr(REGISTERED_DOMAIN_SQL("__url")).alias("url_domain")]
     if "lines" not in drop:
         out_cols.append(dup_char_fraction(F.col("__lines_s")).alias("dup_line_char_frac"))
     if "script" not in drop:

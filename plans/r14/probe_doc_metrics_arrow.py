@@ -120,9 +120,14 @@ doc_text_metrics = F.pandas_udf(_metrics_batch, _SCHEMA)
 
 def build_arrow_variant(spark):
     from dbbspark.operators.curriculum import curriculum_stages
-    from dbbspark.operators.dedup import md5_int_col
-    from dbbspark.operators.script import script_counts, script_derivations
-    from dbbspark.operators.urls import extract_host, registered_domain
+    from dbbspark.functions import sql_str
+    from dbbspark.operators.dedup import MD5_INT_SPARK_SQL
+    from dbbspark.operators.script import (
+        SCRIPT_CLASSES,
+        SCRIPT_COUNT_SQL,
+        script_derivations,
+    )
+    from dbbspark.operators.urls import HOST_SQL, REGISTERED_DOMAIN_SQL
     from dbbspark.queries.text import _SCRIPT_STRATA
 
     docs = load_table(spark, SF_DIR, "documents")
@@ -141,24 +146,22 @@ def build_arrow_variant(spark):
     host_col = F.lit(None).cast("string")
     dom_col = F.lit(None).cast("string")
     for i in reversed(range(5)):
-        u = F.lit(strata_urls[i])
-        host_col = F.when(F.col("doc_id") % 6 == i, extract_host(u)).otherwise(host_col)
-        dom_col = F.when(F.col("doc_id") % 6 == i, registered_domain(u)).otherwise(dom_col)
+        u = sql_str(strata_urls[i])
+        host_col = F.when(F.col("doc_id") % 6 == i, F.expr(HOST_SQL(u))).otherwise(host_col)
+        dom_col = F.when(
+            F.col("doc_id") % 6 == i, F.expr(REGISTERED_DOMAIN_SQL(u))
+        ).otherwise(dom_col)
     # script counts: the operator's regexp_count over each stratum
     # LITERAL, constant-folded per branch
-    n_classes = len(script_counts(F.lit("")))
-    per_stratum = [script_counts(F.lit(s)) for s in _SCRIPT_STRATA]
-    null_stratum = script_counts(F.lit(None).cast("string"))
     script_cols = []
-    for j in range(n_classes):
-        c = null_stratum[j]
+    for n in SCRIPT_CLASSES:
+        c = F.expr(SCRIPT_COUNT_SQL("CAST(NULL AS STRING)", n))
         for i in reversed(range(len(_SCRIPT_STRATA))):
-            c = F.when(F.col("doc_id") % 11 == i, per_stratum[i][j]).otherwise(c)
-        script_cols.append(c.alias(null_stratum[j]._jc.toString().split(" AS ")[-1].strip("`")))
-    # name them the way script_counts does
-    from dbbspark.operators.script import SCRIPT_CLASSES
-    names = [f"n_{n}" for n in SCRIPT_CLASSES]
-    script_cols = [c.alias(nm) for c, nm in zip(script_cols, names)]
+            c = F.when(
+                F.col("doc_id") % 11 == i,
+                F.expr(SCRIPT_COUNT_SQL(sql_str(_SCRIPT_STRATA[i]), n)),
+            ).otherwise(c)
+        script_cols.append(c.alias(f"n_{n}"))
 
     m = docs.select(
         "doc_id", "lang", "n_chars",
@@ -186,7 +189,7 @@ def build_arrow_variant(spark):
     atl = F.col("n_chars").cast("double") / F.col("n_tokens")
     rate = (F.when(F.col("lang") == "en", 50).when(F.col("lang") == "de", 20)
             .otherwise(10))
-    gate = md5_int_col(F.col("doc_id").cast("string")) % 100
+    gate = F.expr(MD5_INT_SPARK_SQL("CAST(doc_id AS STRING)")) % 100
     _script_ratios, _script_dom = script_derivations()
     m, _cuts = curriculum_stages(
         m.withColumn("difficulty", F.col("n_tokens").cast("double")),

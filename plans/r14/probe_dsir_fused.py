@@ -34,7 +34,7 @@ def build_current(spark):
 
 def build_fused(spark):
     """q_dsir with the 2-join fused scoring pass (prototype)."""
-    from dbbspark.operators.dedup import md5_int_col
+    from dbbspark.operators.dedup import MD5_INT_SPARK_SQL
     from dbbspark.operators.lm import (
         _exploded_grams,
         _gram_pairs_col,
@@ -115,7 +115,7 @@ def build_fused(spark):
         .transform(cut_lineage, eager=False)
     )
     u = (
-        md5_int_col(F.col("doc").cast("string")) % F.lit(1_000_000_007)
+        F.expr(MD5_INT_SPARK_SQL("CAST(doc AS STRING)")) % F.lit(1_000_000_007)
         + F.lit(0.5)
     ) / F.lit(1_000_000_007.0)
     gumbel = F.col("log_ratio") - F.log(-F.log(u))

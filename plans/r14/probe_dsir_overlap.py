@@ -33,7 +33,7 @@ def build_current(spark):
 def build_overlap(spark):
     from concurrent.futures import ThreadPoolExecutor
 
-    from dbbspark.operators.dedup import md5_int_col
+    from dbbspark.operators.dedup import MD5_INT_SPARK_SQL
     from dbbspark.operators.lm import (
         NgramLM,
         _gram_pairs_col,
@@ -94,7 +94,7 @@ def build_overlap(spark):
         docs, lm_t, lm_s, "doc_id", "text", broadcast_model=False
     ).transform(cut_lineage, eager=False)
     u = (
-        md5_int_col(F.col("doc").cast("string")) % F.lit(1_000_000_007)
+        F.expr(MD5_INT_SPARK_SQL("CAST(doc AS STRING)")) % F.lit(1_000_000_007)
         + F.lit(0.5)
     ) / F.lit(1_000_000_007.0)
     return w.select(

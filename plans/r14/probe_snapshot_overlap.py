@@ -33,7 +33,7 @@ def build_current(spark):
 def build_overlap(spark):
     from concurrent.futures import ThreadPoolExecutor
 
-    from dbbspark.operators.dedup import md5_int_col, sha_dedup_keep_first
+    from dbbspark.operators.dedup import MD5_INT_SPARK_SQL, sha_dedup_keep_first
     from dbbspark.operators.sketches import corpus_overlap, kmv_sketch
 
     docs = load_table(spark, SF_DIR, "documents")
@@ -47,14 +47,15 @@ def build_overlap(spark):
     ).transform(cut_lineage, eager=False)
     deduped = sha_dedup_keep_first(quality, "text", "doc_id")
     sampled = deduped.where(
-        md5_int_col(F.col("doc_id").cast("string")) % 100 < 80
+        F.expr(MD5_INT_SPARK_SQL("CAST(doc_id AS STRING)")) % 100 < 80
     ).transform(cut_lineage, eager=False)
     agg = sampled.groupBy("lang").agg(
         F.count("*").alias("n_docs"),
         F.sum("n_tokens").cast("bigint").alias("token_budget"),
     )
-    key = F.sha2(F.col("text").cast("binary"), 256)
-    hc, domain = md5_int_col(key), (0, 2**60)
+    key_sql = "sha2(CAST(text AS BINARY), 256)"
+    key = F.expr(key_sql)
+    hc, domain = F.expr(MD5_INT_SPARK_SQL(key_sql)), (0, 2**60)
     ska = kmv_sketch(quality, key, k=128, hash_col=hc)
     skb = kmv_sketch(sampled, key, k=128, hash_col=hc)
     with ThreadPoolExecutor(4) as pool:

@@ -288,7 +288,7 @@ def stages_dedup_clusters(spark):
 
 
 def stages_text_stats(spark):
-    from dbbspark.operators.dedup import md5_int_col
+    from dbbspark.operators.dedup import MD5_INT_SPARK_SQL
     from dbbspark.operators.funnel import funnel_blame
     from dbbspark.operators.spans import duplicate_ngram_spans
 
@@ -298,7 +298,7 @@ def stages_text_stats(spark):
     def blamed():
         d = docs()
         block_ids = d.where(
-            md5_int_col(F.col("doc_id").cast("string")) % 20 == 0
+            F.expr(MD5_INT_SPARK_SQL("CAST(doc_id AS STRING)")) % 20 == 0
         ).select("doc_id")
         return funnel_blame(
             d,

@@ -166,21 +166,11 @@ def test_portable_score_is_deterministic_and_map_only(spark):
 
 
 def _bigram_w(spark, gram):
-    from dbbspark.operators.dedup import md5_int_col
+    from dbbspark.operators.dedup import md5_int_py
 
     return (
-        spark.range(1)
-        .select(
-            (
-                ((md5_int_col(F.lit(gram)) % 4096) * F.lit(2654435761))
-                % F.lit(2000003)
-                - F.lit(1000001)
-            ).cast("double")
-            / F.lit(1000001.0)
-            * F.lit(0.01)
-        )
-        .first()[0]
-    )
+        ((md5_int_py(gram) % 4096) * 2654435761) % 2000003 - 1000001
+    ) / 1000001.0 * 0.01
 
 
 def test_arrow_scoring_is_bit_identical_to_expression_form(spark):

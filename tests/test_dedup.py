@@ -4,6 +4,7 @@ planted duplicates."""
 
 from __future__ import annotations
 
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from dbbspark.operators import dedup as D
@@ -179,19 +180,37 @@ def test_exact_dedup_null_texts_all_kept_and_salted(spark):
     assert kept == [1, 3, 4, 5]
 
 
-def test_md5_int_py_matches_spark_expr(spark):
-    """md5_int_py is the driver-side twin of md5_int_col — the r13
+@given(
+    vals=st.lists(
+        st.text(alphabet=st.characters(codec="utf-8"), max_size=12)
+        | st.sampled_from(["", "'", "\\", "\\'", "a'b\\c", "\U0001F600x"]),
+        min_size=1,
+        max_size=8,
+    )
+)
+@example(vals=["purity-v1" + str(n) for n in (0, 1, 7, 123456789, 2**40)])
+@settings(max_examples=12, deadline=None)
+def test_md5_int_py_matches_spark_expr(spark, vals):
+    """md5_int_py is the driver-side twin of MD5_INT_SPARK_SQL — the r13
     purity-stratum gate computes the coin in python on the counted
-    driver regime, so the two hash forms must agree bit-for-bit
-    (including the concat-prefix form the stratum uses)."""
-    vals = ["purity-v1" + str(n) for n in (0, 1, 7, 123456789, 2**40)]
-    df = spark.createDataFrame([(v,) for v in vals], "s string")
-    got = {
-        r["s"]: r["h"]
-        for r in df.select("s", D.md5_int_col(F.col("s")).alias("h")).collect()
-    }
-    for v in vals:
-        assert got[v] == D.md5_int_py(v), v
+    driver regime, so the two hash forms must agree bit-for-bit over
+    arbitrary unicode (empty, non-BMP, quotes, backslashes; the explicit
+    example is the concat-prefix form the stratum uses), both over a
+    column and over the value as a `sql_str` literal."""
+    from dbbspark.functions import sql_str
+
+    df = spark.createDataFrame([(i, v) for i, v in enumerate(vals)], "i int, s string")
+    rows = df.select(
+        "i",
+        F.expr(D.MD5_INT_SPARK_SQL("s")).alias("h"),
+        F.array(
+            *[F.expr(D.MD5_INT_SPARK_SQL(sql_str(v))) for v in vals]
+        ).alias("lit"),
+    ).collect()
+    for r in rows:
+        v = vals[r["i"]]
+        assert r["h"] == D.md5_int_py(v), v
+        assert r["lit"][r["i"]] == D.md5_int_py(v), v
 
 
 def test_dedup_clusters_fused_local_assembly_matches_composed(spark, sf_dir):
@@ -237,3 +256,31 @@ def test_dedup_clusters_fused_local_assembly_matches_composed(spark, sf_dir):
     assert [f.name for f in load_all()["q_dedup_clusters"]
             .builder(spark, sf_dir).schema] == \
         [f.name for f in composed.schema]
+
+
+def test_md5_int_formula_defined_once():
+    """The Spark md5→conv hash has one definition, MD5_INT_SPARK_SQL:
+    every other package site must call it, not re-spell the formula.
+    (DuckDB oracle strings use `'0x' ||`, not conv, and are exempt.)"""
+    import ast
+    import pathlib
+    import re
+
+    formula = re.compile(
+        r"conv\(\s*(?:F\.)?(?:substr|substring|left)\(\s*(?:F\.)?md5\(", re.I
+    )
+    pkg = pathlib.Path(D.__file__).resolve().parents[1]
+    home = pathlib.Path(D.__file__).resolve()
+    fn = next(
+        n for n in ast.parse(home.read_text()).body
+        if isinstance(n, ast.FunctionDef) and n.name == "MD5_INT_SPARK_SQL"
+    )
+    hits = []
+    for path in sorted(pkg.rglob("*.py")):
+        text = path.read_text()
+        for m in formula.finditer(text):
+            line = text.count("\n", 0, m.start()) + 1
+            if path == home and fn.lineno <= line <= fn.end_lineno:
+                continue
+            hits.append(f"{path.relative_to(pkg.parent)}:{line}")
+    assert not hits, hits

@@ -4,6 +4,7 @@ oracle; these pin semantics on crafted inputs)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from dbbspark.functions import dup_ratio, ngram_array
@@ -85,18 +86,14 @@ def _hof_doc_metrics(docs):
         ngram_array,
         top_run_char_fraction,
     )
-    from dbbspark.operators.dedup import md5_int_col
-    from dbbspark.operators.winnow import (
-        PORTABLE_HASH_SQL,
-        fingerprints_expr,
-        gram_hashes_expr,
-    )
+    from dbbspark.operators.dedup import MD5_INT_SPARK_SQL
+    from dbbspark.operators.winnow import fingerprints_expr, gram_hashes_expr
 
     toks = F.split(F.col("text"), " ")
     docs = docs.withColumn(
         "__wtext",
         F.when(
-            md5_int_col(F.col("doc_id").cast("string")) % 20 == 0,
+            F.expr(MD5_INT_SPARK_SQL("CAST(doc_id AS STRING)")) % 20 == 0,
             F.col("text"),
         ),
     )
@@ -111,7 +108,7 @@ def _hof_doc_metrics(docs):
             F.regexp_extract_all(F.col("text"), F.lit("[a-z]+|[0-9]+|[^a-z0-9 ]"), 0)
         ).alias("bpe_ish_tokens"),
         F.array_sort(F.split(F.col("text"), "\n")).alias("__lines_s"),
-        F.expr(gram_hashes_expr("__wtext", 8, PORTABLE_HASH_SQL)).alias("__wg"),
+        F.expr(gram_hashes_expr("__wtext", 8, MD5_INT_SPARK_SQL("{g}"))).alias("__wg"),
     ).select(
         "*",
         ngram_array(F.col("__toks"), 2).alias("__g2"),
@@ -224,11 +221,11 @@ def test_doc_metrics_arrow_pass_equals_hof_expressions_on_fixture(spark, sf_dir)
 
 
 def test_url_host_is_invariant_to_id_suffix(spark):
-    """r14 pin: extract_host/registered_domain over each q_doc_metrics
+    """r14 pin: HOST_SQL/REGISTERED_DOMAIN_SQL over each q_doc_metrics
     URL stratum are invariant to the appended doc_id (the host capture
     stops at '/', ':' or '?'), so applying the operators to the literal
     prefix — which Catalyst constant-folds — computes the same values."""
-    from dbbspark.operators.urls import extract_host, registered_domain
+    from dbbspark.operators.urls import HOST_SQL, REGISTERED_DOMAIN_SQL
 
     prefixes = [
         "https://WWW.News.example.com/Story/",
@@ -239,8 +236,8 @@ def test_url_host_is_invariant_to_id_suffix(spark):
             [(p,), (p + "0",), (p + "123456789",)], "u string"
         )
         vals = df.select(
-            extract_host(F.col("u")).alias("h"),
-            registered_domain(F.col("u")).alias("d"),
+            F.expr(HOST_SQL("u")).alias("h"),
+            F.expr(REGISTERED_DOMAIN_SQL("u")).alias("d"),
         ).collect()
         assert len({(v["h"], v["d"]) for v in vals}) == 1, vals
 
@@ -248,11 +245,11 @@ def test_url_host_is_invariant_to_id_suffix(spark):
 def test_doc_metrics_stratum_cases_equal_operator_forms(spark):
     """r14 pin: the generated constant-stratum CASE SQL (url host/domain
     + script class counts) equals the per-row operator forms
-    (extract_host/registered_domain over the synthesized URL column,
-    script_counts over the stratum column) for every residue class,
+    (HOST_SQL/REGISTERED_DOMAIN_SQL over the synthesized URL column,
+    SCRIPT_COUNT_SQL over the stratum column) for every residue class,
     including the NULL strata."""
-    from dbbspark.operators.script import SCRIPT_CLASSES, script_counts
-    from dbbspark.operators.urls import extract_host, registered_domain
+    from dbbspark.operators.script import SCRIPT_CLASSES, SCRIPT_COUNT_SQL
+    from dbbspark.operators.urls import HOST_SQL, REGISTERED_DOMAIN_SQL
     from dbbspark.queries.text import (
         _SCRIPT_COUNT_CASE_SQL,
         _URL_DOMAIN_CASE_SQL,
@@ -273,12 +270,17 @@ def test_doc_metrics_stratum_cases_equal_operator_forms(spark):
         .otherwise(F.lit(None).cast("string"))
     )
     rows = docs.select(
+        "doc_id", url.alias("url"), _script_stratum_col().alias("stratum")
+    ).select(
         "doc_id",
-        extract_host(url).alias("h_op"),
+        F.expr(HOST_SQL("url")).alias("h_op"),
         F.expr(_URL_HOST_CASE_SQL).alias("h_case"),
-        registered_domain(url).alias("d_op"),
+        F.expr(REGISTERED_DOMAIN_SQL("url")).alias("d_op"),
         F.expr(_URL_DOMAIN_CASE_SQL).alias("d_case"),
-        *script_counts(_script_stratum_col()),
+        *[
+            F.expr(SCRIPT_COUNT_SQL("stratum", n)).alias(f"n_{n}")
+            for n in SCRIPT_CLASSES
+        ],
         *[
             F.expr(_SCRIPT_COUNT_CASE_SQL[n]).alias(f"case_n_{n}")
             for n in SCRIPT_CLASSES
@@ -310,3 +312,55 @@ def test_round_half_up_py_matches_spark_round(spark):
         want = [round_half_up_py(v, scale) for v in vals]
         assert got == want, list(zip(vals, got, want))
     assert round_half_up_py(None, 4) is None
+
+
+@pytest.mark.parametrize("name", ["n tokens", "we`ird"])
+def test_operators_quote_caller_column_names(spark, name):
+    """Caller-supplied column names reach generated SQL through
+    `sql_ident`: a name with a space or an embedded backtick gives the
+    same result as a plain name (before quoting, each of these raised
+    ParseException or an attribute-name syntax error)."""
+    from dbbspark.functions import sql_ident
+    from dbbspark.operators.fuzzy import fuzzy_join_d1
+    from dbbspark.operators.packing import pack_sequences
+    from dbbspark.operators.sketches import cms_estimate, cms_sketch_weighted
+    from dbbspark.operators.winnow import winnow_fingerprints
+
+    words = ["alpha", "alpah", "beta", "bet", "gamma", "the quick brown fox"]
+
+    def run(col):
+        q = sql_ident(col)
+        df = spark.createDataFrame(
+            [(i, w, len(w)) for i, w in enumerate(words)],
+            f"doc_id long, {q} string, n bigint",
+        )
+        toks = spark.createDataFrame(
+            [(w, i + 1) for i, w in enumerate(words)], f"{q} string, count long"
+        )
+        cms = cms_sketch_weighted(toks, col, depth=3, width=16, portable=True)
+        return [
+            sorted(
+                pack_sequences(
+                    df.select("doc_id", F.col("n").alias(col)), "doc_id", col,
+                    budget=4, num_buckets=2,
+                ).collect()
+            ),
+            sorted(
+                (r[0], sorted(r[1]))
+                for r in winnow_fingerprints(df, "doc_id", col, k=3, w=2).collect()
+            ),
+            sorted(
+                fuzzy_join_d1(
+                    df.withColumnRenamed("doc_id", "id_a"),
+                    df.withColumnRenamed("doc_id", "id_b"),
+                    col,
+                ).collect()
+            ),
+            sorted(cms.collect()),
+            sorted(
+                cms_estimate(cms, toks, col, depth=3, width=16, portable=True).collect()
+            ),
+        ]
+
+    got, want = run(name), run("plain")
+    assert got == want

@@ -247,15 +247,16 @@ def test_verify_archive_rotating_sample(spark, tmp_path):
     b = verify_archive(spark, str(tmp_path / "a"), sample_fraction=0.3)
     assert a.count() == 0 and b.count() == 0  # clean either way
     # determinism + rotation are visible through the sampled row sets
-    from dbbspark.operators.dedup import md5_int_col
-    from pyspark.sql import functions as F
+    from dbbspark.operators.dedup import md5_int_py
 
     def sampled_names(salt):
         arch = spark.read.parquet(str(tmp_path / "a"))
-        gate = md5_int_col(
-            F.concat_ws("\x1f", F.col("filename"), F.lit(str(salt)))
-        ) % 1_000_000
-        return {r["filename"] for r in arch.where(gate < 300_000).collect()}
+        return {
+            r["filename"]
+            for r in arch.select("filename").collect()
+            if md5_int_py(r["filename"] + "\x1f" + str(salt)) % 1_000_000
+            < 300_000
+        }
 
     s0, s1 = sampled_names(0), sampled_names(1)
     assert s0 and s1 and s0 != s1

@@ -8,6 +8,8 @@ here is invisible at sf0.01 and fatal at 100 TB.
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
 
 from dbbspark.catalog import load_all
@@ -16,6 +18,28 @@ from dbbspark.catalog import load_all
 def plan_of(spark, sf_dir, name: str) -> str:
     df = load_all()[name].builder(spark, sf_dir)
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def plan_node_counts(df) -> Counter:
+    """Physical node class name -> occurrences in ``df``'s executed plan,
+    from a walk of the plan TREE (not its string). AQE-aware: the
+    adaptive root and query-stage wrappers are looked through, so the
+    counts are the same before and after adaptive execution starts."""
+    counts: Counter = Counter()
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+            continue
+        if name.endswith("QueryStageExec"):
+            stack.append(node.plan())
+            continue
+        counts[name] += 1
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return counts
 
 
 def test_equi_join_broadcasts_small_side(spark, sf_dir):
@@ -501,10 +525,5 @@ def test_dsir_weights_shared_counts_two_joins(spark, sf_dir):
         "doc_id", "lang", "text"
     )
     lm_t, lm_s = train_ngram_lm_pair(docs, F.col("lang") == "en", "text", n=2)
-    plan = (
-        dsir_weights(docs, lm_t, lm_s)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert plan.count("Join") == 2, plan
+    nodes = plan_node_counts(dsir_weights(docs, lm_t, lm_s))
+    assert sum(n for c, n in nodes.items() if c.endswith("JoinExec")) == 2, nodes

@@ -227,7 +227,7 @@ def test_cms_cells_sql_equals_column_form(spark):
     NULL and non-ASCII tokens."""
     from pyspark.sql import functions as F
 
-    from dbbspark.operators.dedup import md5_int_col
+    from dbbspark.operators.dedup import md5_int_py
     from dbbspark.operators.sketches import _cms_cells
 
     df = spark.createDataFrame(
@@ -240,23 +240,26 @@ def test_cms_cells_sql_equals_column_form(spark):
         ).select("c.row", "c.col").collect()
 
         def col_for(r):
-            if portable:
-                return F.pmod(
-                    md5_int_col(F.concat(F.col("token"), F.lit(f"#{r}"))),
-                    F.lit(64),
-                )
             return F.pmod(F.xxhash64(F.col("token"), F.lit(r)), F.lit(64))
 
-        ref = df.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(r).alias("row"), col_for(r).alias("col")
-                        )
-                        for r in range(5)
-                    ]
-                )
-            ).alias("c")
-        ).select("c.row", "c.col").collect()
+        if portable:
+            # independent reference: the driver-side md5 twin
+            ref = [
+                (r, None if t is None else md5_int_py(f"{t}#{r}") % 64)
+                for (t,) in df.collect()
+                for r in range(5)
+            ]
+        else:
+            ref = df.select(
+                F.explode(
+                    F.array(
+                        *[
+                            F.struct(
+                                F.lit(r).alias("row"), col_for(r).alias("col")
+                            )
+                            for r in range(5)
+                        ]
+                    )
+                ).alias("c")
+            ).select("c.row", "c.col").collect()
         assert got == ref, f"portable={portable}"

@@ -11,9 +11,9 @@ from dbbspark.operators.urls import (
     canonicalize_url,
     cap_per_domain,
     dedup_by_url,
-    extract_host,
     filter_blocklisted,
-    registered_domain,
+    HOST_SQL,
+    REGISTERED_DOMAIN_SQL,
 )
 
 
@@ -63,8 +63,8 @@ def test_host_and_registered_domain(spark):
         ],
         "u string",
     ).select(
-        extract_host(F.col("u")).alias("h"),
-        registered_domain(F.col("u")).alias("d"),
+        F.expr(HOST_SQL("u")).alias("h"),
+        F.expr(REGISTERED_DOMAIN_SQL("u")).alias("d"),
     ).collect()
     assert [(r["h"], r["d"]) for r in rows] == [
         ("sub.news.example.com", "example.com"),

@@ -80,7 +80,8 @@ def test_portable_hash_matches_duckdb_on_short_docs(spark):
     empty, and exactly-k docs in the panel."""
     import duckdb
 
-    from dbbspark.operators.winnow import PORTABLE_HASH_SQL, fingerprints_expr
+    from dbbspark.operators.dedup import MD5_INT_SPARK_SQL
+    from dbbspark.operators.winnow import fingerprints_expr
 
     k, w = 8, 4
     rows = [
@@ -94,7 +95,7 @@ def test_portable_hash_matches_duckdb_on_short_docs(spark):
     got = {
         (r["doc_id"], r["n"], r["mn"])
         for r in df.select(
-            "doc_id", F.expr(gram_hashes_expr("text", k, PORTABLE_HASH_SQL)).alias("g")
+            "doc_id", F.expr(gram_hashes_expr("text", k, MD5_INT_SPARK_SQL("{g}"))).alias("g")
         )
         .select("doc_id", F.expr(fingerprints_expr("g", w)).alias("fp"))
         .select(
