@@ -14,8 +14,7 @@ ingest-time null check; Y → nullable field; N → excluded by projection.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import types as T
 
@@ -25,22 +24,11 @@ class KeywordSchema:
     """keyword -> flag ('Y' optional | 'R' required); 'N' keywords are
     dropped at parse time (excluded by projection).
 
-    ``decoder`` is the per-filetype header parser — the plugin seam the
-    reference dispatches on filetype (bin/save_DBB_stagein_to_DBB.py:160):
-    any Callable[[bytes], dict[str, str]]; None means the kv-text default.
-    `sources.multimodal.fits_header_decode` drops in here for real
-    `.fits`/`.fits.fz` primary HDUs."""
+    The schema declares WHAT to extract, never how: the header format
+    comes from each file's bytes (`sources.multimodal.HEADER_ENTRIES_SQL`
+    reads FITS primary headers and `KEY = value` text alike)."""
 
     flags: tuple[tuple[str, str], ...]
-    decoder: Callable[[bytes], dict[str, str]] | None = field(
-        default=None, compare=False
-    )
-
-    def with_decoder(
-        self, decoder: Callable[[bytes], dict[str, str]]
-    ) -> "KeywordSchema":
-        """Same flags, different header parser (plugin swap-in)."""
-        return KeywordSchema(flags=self.flags, decoder=decoder)
 
     @property
     def required(self) -> tuple[str, ...]:

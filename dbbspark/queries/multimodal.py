@@ -275,7 +275,7 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     "from documents columns, so the oracle knows every expected value; "
     "required-key misses surface in `missing` instead of aborting "
     "(comma-joined string — driver-hashable, unlike an array column).",
-    tags=("multimodal", "udf", "closure"),
+    tags=("multimodal",),
 )
 def q_metadata_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(

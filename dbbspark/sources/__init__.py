@@ -18,7 +18,6 @@ from .logs import read_log, last_matching_line
 from .multimodal import (
     extract_kv_metadata,
     fits_header_decode,
-    kv_text_decode,
     read_binary_docs,
 )
 from .textcorpus import read_csv_docs, read_jsonl_docs
@@ -38,5 +37,4 @@ __all__ = [
     "read_binary_docs",
     "extract_kv_metadata",
     "fits_header_decode",
-    "kv_text_decode",
 ]

@@ -396,7 +396,7 @@ def encode_y4m(
 
 
 # ---------------------------------------------------------------------------
-# FITS primary-HDU image (header parse shared with the metadata seam)
+# FITS primary-HDU image (header cards via multimodal.fits_header_decode)
 
 _BITPIX_DTYPE = {
     8: "u1",
@@ -410,7 +410,8 @@ _BITPIX_DTYPE = {
 
 def decode_fits_image(raw: bytes) -> dict:
     """Decode a FITS primary-HDU image: header cards via
-    `fits_header_decode` (the same real parser the metadata seam uses),
+    `fits_header_decode` (header metadata extraction reads the same cards
+    through its SQL twin, `FITS_ENTRIES_SQL`),
     then the data unit — big-endian array of BITPIX type, NAXIS1 ×
     NAXIS2 (× NAXIS3 planes → n_frames), linearly scaled by
     BSCALE/BZERO (FITS Standard 4.0 §4.4.2, §5.2-5.3)."""

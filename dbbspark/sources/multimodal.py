@@ -4,9 +4,10 @@
 The reference treats file bytes as opaque except for a per-filetype plugin
 that extracts a declared keyword schema from them (FITS headers,
 `etc/decam_src_keywords.txt`; invoked at `bin/save_DBB_stagein_to_DBB.py:160`).
-The Spark-native form: a `binary` column travels with the row; extraction
-is an Arrow-batched transform over `mapInPandas` producing a typed struct
-next to the bytes.
+The Spark-native form: a `binary` column travels with the row; header
+extraction is one Spark SQL projection producing a typed struct next to
+the bytes (no Python worker). Media decoding is an Arrow-batched
+transform over `mapInPandas`.
 
 Decoders for real media formats (image resize, audio resample, frame
 sampling) need libraries not present in this container; they are STUBBED
@@ -17,7 +18,7 @@ and tested.
 Scale notes:
 - `binaryFile` prunes `content` when unprojected, so metadata-only plans
   never read bytes;
-- extraction runs per Arrow batch (`spark.sql.execution.arrow
+- media decoding runs per Arrow batch (`spark.sql.execution.arrow
   .maxRecordsPerBatch` bounds memory per task), not per row;
 - keep bytes out of shuffles: extract → drop `content` → then join/agg.
 """
@@ -31,6 +32,9 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
+
+from ..functions import sql_ident, sql_str
+from .notify import KV_ENTRIES_SQL, STRIP_SQL
 
 # ---------------------------------------------------------------------------
 # Binary document reader
@@ -53,21 +57,24 @@ def read_binary_docs(
 
 
 # ---------------------------------------------------------------------------
-# Header decoders + metadata extraction (JVM-free parse in pandas over
-# Arrow batches). The decoder is PLUGGABLE: any Callable[[bytes],
-# Mapping[str, str]] drops into `extract_kv_metadata`, mirroring the
-# reference's per-filetype plugin dispatch
-# (bin/save_DBB_stagein_to_DBB.py:160, schema etc/decam_src_keywords.txt).
+# Header metadata extraction: one SQL projection, no Python worker. The
+# format comes from the bytes (the reference dispatches a plugin per
+# filetype, bin/save_DBB_stagein_to_DBB.py:160): FITS cards for a file
+# opening with the SIMPLE card, else `notify.KV_ENTRIES_SQL` text lines.
 
-def kv_text_decode(raw: bytes) -> dict[str, str]:
-    """Default header decoder: `KEY = value` text lines (the fixture
-    format). Last occurrence wins, keys uppercased."""
-    kv: dict[str, str] = {}
-    for line in raw.decode("utf-8", "replace").splitlines():
-        if "=" in line:
-            k, v = line.split("=", 1)
-            kv[k.strip().upper()] = v.strip()
-    return kv
+# The first card of every FITS primary header (FITS Standard 4.0 §4.4.1).
+_FITS_MAGIC = b"SIMPLE  = "
+# ASCII `str.isspace()`: FITS headers are ASCII, so no (?U).
+_BLANK = r"[\s\x1c-\x1f]"
+# A card whose first 8 characters strip to END.
+_END_KEY = "|".join(f"{_BLANK}{{{a}}}END{_BLANK}{{{5 - a}}}" for a in range(6))
+# Whole 80-byte cards from the first byte up to the END card: \G chains
+# each match to the end of the previous one, so the scan stops at END.
+_FITS_CARDS = rf"(?s)\G(?!{_END_KEY})(.{{80}})"
+_FITS_STRING = r"^'((?:[^']|'')*)"
+_HIGH_BYTE = r"[\x80-\xff]"
+_LSTRIP, _RSTRIP = f"^{_BLANK}+", rf"{_BLANK}+\z"
+_QUOTE, _QUOTE2 = sql_str("'"), sql_str("''")
 
 
 def fits_header_decode(raw: bytes) -> dict[str, str]:
@@ -79,7 +86,8 @@ def fits_header_decode(raw: bytes) -> dict[str, str]:
     bin/save_DBB_stagein_to_DBB.py:160). String values are
     single-quoted with `''` escaping; non-string values end at the
     comment slash. Returns {KEYWORD: value-string}; typed casting is the
-    caller's schema concern (plans/keywords.py Y/N/R flags)."""
+    caller's schema concern (plans/keywords.py Y/N/R flags).
+    `FITS_ENTRIES_SQL` is the same parse in Spark SQL."""
     out: dict[str, str] = {}
     for off in range(0, len(raw) - len(raw) % 80, 80):
         card = raw[off : off + 80].decode("ascii", "replace")
@@ -106,61 +114,83 @@ def fits_header_decode(raw: bytes) -> dict[str, str]:
     return out
 
 
+def FITS_ENTRIES_SQL(content: str) -> str:
+    """`fits_header_decode` as Spark SQL over the binary expression
+    ``content``, in `KV_ENTRIES_SQL`'s shape: one (lowercased key, value)
+    entry per ``KEYWORD = value`` card before END, in card order. Bytes
+    >= 0x80 read as U+FFFD, as ascii ``replace`` decodes them."""
+    cards = (
+        f"regexp_extract_all(decode({content}, 'ISO-8859-1'), "
+        f"{sql_str(_FITS_CARDS)}, 1)"
+    )
+    keyed = (
+        f"transform(filter(transform({cards}, "
+        f"c -> regexp_replace(c, {sql_str(_HIGH_BYTE)}, '\ufffd')), "
+        "c -> substr(c, 9, 2) = '= '), "
+        f"c -> named_struct('key', lower({STRIP_SQL('substr(c, 1, 8)')}), "
+        f"'body', regexp_replace(substr(c, 11), {sql_str(_LSTRIP)}, '')))"
+    )
+    string = (
+        f"regexp_replace(replace(regexp_extract(e.body, {sql_str(_FITS_STRING)}, 1), "
+        f"{_QUOTE2}, {_QUOTE}), {sql_str(_RSTRIP)}, '')"
+    )
+    plain = STRIP_SQL("substring_index(e.body, '/', 1)")
+    return (
+        f"transform({keyed}, e -> named_struct('key', e.key, 'value', "
+        f"IF(startswith(e.body, {_QUOTE}), {string}, {plain})))"
+    )
+
+
+def HEADER_ENTRIES_SQL(content: str) -> str:
+    """The header's (key, value) entries from the binary expression
+    ``content``: `FITS_ENTRIES_SQL` for a file opening with the SIMPLE
+    card, else `KV_ENTRIES_SQL` over the bytes read as UTF-8 (invalid
+    bytes read as U+FFFD; the cast never raises)."""
+    return (
+        f"CASE WHEN startswith({content}, X'{_FITS_MAGIC.hex()}') "
+        f"THEN {FITS_ENTRIES_SQL(content)} "
+        f"ELSE {KV_ENTRIES_SQL(f'cast({content} AS string)')} END"
+    )
+
+
+def KV_METADATA_SQL(kv: str, keywords: dict[str, bool]) -> tuple[str, str]:
+    """(meta, missing) Spark SQL over the entries expression ``kv``.
+    ``meta`` is a struct with one string field per keyword (the name
+    lowercased) holding that keyword's LAST entry; ``missing`` lists the
+    required keywords with no entry, in ``keywords`` order. A NULL ``kv``
+    reports every required keyword missing. Each lookup is one pass over
+    the entries — linear in the file's line count."""
+
+    def last(k: str) -> str:
+        return f"try_element_at(filter({kv}, e -> e.key = {sql_str(k.lower())}), -1).value"
+
+    fields = ", ".join(f"{sql_str(k.lower())}, {last(k)}" for k in keywords)
+    missing = ", ".join(
+        f"IF({last(k)} IS NULL, {sql_str(k)}, NULL)" for k, req in keywords.items() if req
+    )
+    return (
+        f"named_struct({fields})",
+        f"cast(array_compact(array({missing})) AS array<string>)",
+    )
+
+
 def extract_kv_metadata(
-    df: DataFrame,
-    keywords: dict[str, bool],
-    content_col: str = "content",
-    decoder: Callable[[bytes], dict[str, str]] = kv_text_decode,
+    df: DataFrame, keywords: dict[str, bool], content_col: str = "content"
 ) -> DataFrame:
-    """Extract a declared keyword schema out of file bytes.
-
-    ``keywords`` maps KEYWORD -> required? (the R flag of
-    `etc/decam_src_keywords.txt`; SURVEY.md §1.1.2). ``decoder`` turns one
-    file's bytes into {KEYWORD: value} — `kv_text_decode` (default),
-    `fits_header_decode` for real FITS HDUs, or any custom callable (it is
-    closed over by the Arrow workers, so it must be picklable). A decoder
-    raising on malformed bytes yields an empty header for that row — the
-    row then reports every required key missing and ingest routes it to
-    quarantine instead of aborting, unlike the reference's SystemExit at
-    `bin/save_DBB_stagein_to_DBB.py:212-215`.
-
-    Output adds a ``meta`` struct column with one nullable string field
-    per keyword plus ``meta_missing_required`` listing absent R-flagged
-    keys (joined as a sorted comma string downstream where driver
-    hashing needs it)."""
-    meta_schema = T.StructType(
-        [T.StructField(k.lower(), T.StringType(), True) for k in keywords]
+    """Extract a declared keyword schema out of file bytes: adds a
+    ``meta`` struct (one nullable string field per keyword) and
+    ``meta_missing_required`` (absent R-flagged keys). ``keywords`` maps
+    KEYWORD -> required? (the R flag of `etc/decam_src_keywords.txt`;
+    SURVEY.md §1.1.2). Malformed bytes never raise: they report required
+    keys missing, and ingest quarantines the file instead of aborting
+    like the reference's SystemExit (bin/save_DBB_stagein_to_DBB.py
+    :212-215)."""
+    meta, missing = KV_METADATA_SQL("_kv", keywords)
+    return (
+        df.withColumn("_kv", F.expr(HEADER_ENTRIES_SQL(sql_ident(content_col))))
+        .withColumns({"meta": F.expr(meta), "meta_missing_required": F.expr(missing)})
+        .drop("_kv")
     )
-    out_schema = T.StructType(
-        df.schema.fields
-        + [
-            T.StructField("meta", meta_schema, True),
-            T.StructField(
-                "meta_missing_required", T.ArrayType(T.StringType()), True
-            ),
-        ]
-    )
-    required = [k for k, req in keywords.items() if req]
-    keys = list(keywords)
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas, missings = [], []
-            for raw in pdf[content_col]:
-                kv: dict[str, str] = {}
-                if raw is not None:
-                    try:
-                        kv = dict(decoder(bytes(raw)))
-                    except Exception:  # malformed file → quarantine, not abort
-                        kv = {}
-                metas.append({k.lower(): kv.get(k) for k in keys})
-                missings.append([k for k in required if kv.get(k) is None])
-            pdf = pdf.copy()
-            pdf["meta"] = metas
-            pdf["meta_missing_required"] = missings
-            yield pdf
-
-    return df.mapInPandas(extract, schema=out_schema)
 
 
 # ---------------------------------------------------------------------------

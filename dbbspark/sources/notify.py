@@ -6,7 +6,9 @@ order, parsing ``key = value`` notify lines into a per-file dict
 (`bin/save_DBB_stagein_to_DBB.py:308-321`, `:49-56`). Here the scan is a
 `binaryFile` read (path/modificationTime/length/content columns), the
 pairing is an equi-join on the suffix-stripped path, and the kv parse is
-`str_to_map` over the decoded bytes — all JVM-side, no Python loop.
+`KV_ENTRIES_SQL` — the package's one ``key = value`` line parse, shared
+by notify files, data-file headers (`multimodal.extract_kv_metadata`) and
+the config source — all JVM-side, no Python loop.
 
 Scale notes (100 TB / millions of files):
 - file listing is distributed (InMemoryFileIndex lists in parallel tasks);
@@ -20,48 +22,53 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..functions import sql_str
+
 NOTIFY_SUFFIX = ".dbb"
 
-# key = value lines; keys lowercased (bin/save_DBB_stagein_to_DBB.py:49-56).
-_KV_LINE = r"(?m)^\s*(\S+)\s*=\s*(.*?)\s*$"
+# Python's `str.splitlines()` break set and `str.strip()` whitespace set as
+# Java regexes, so the SQL parse reads a file exactly as the reference's
+# Python dict parse does (Spark's `trim` strips spaces only).
+_LINE_BREAKS = r"\r\n|[\n\r\x0b\x0c\x1c\x1d\x1e\x85\u2028\u2029]"
+_STRIP = r"(?U)^[\s\x1c-\x1f]+|[\s\x1c-\x1f]+\z"
 
 
-def _kv_map_col(text_col: F.Column) -> F.Column:
-    """Parse ``key = value`` text into map<string,string> with lowercased
-    keys, LAST occurrence winning — the semantics of the reference's
-    per-file dict parse (bin/save_DBB_stagein_to_DBB.py:49-56).
+def STRIP_SQL(text: str) -> str:
+    """The SQL expression ``text`` with Python-`strip()` whitespace
+    removed from both ends."""
+    return f"regexp_replace({text}, {sql_str(_STRIP)}, '')"
 
-    Deliberately avoids `str_to_map` / `map_from_arrays`: under Spark's
-    default ``spark.sql.mapKeyDedupPolicy=EXCEPTION`` a notify file that
-    repeats a key (or has two keys differing only by case, collapsed by
-    lower()) would throw DUPLICATED_MAP_KEY and fail the WHOLE micro-batch
-    — one malformed file must classify/quarantine, never crash the batch.
-    Entries are deduped (keep-last) before `map_from_entries`, so the map
-    build can't see a duplicate under any dedup policy. The keep-last scan
-    is O(lines²) interpreted-lambda work per file — notify files are a
-    handful of lines, and this runs once per file, not per query."""
-    lines = F.filter(
-        F.split(text_col, "\n"),
-        lambda ln: (F.trim(ln) != "")
-        & ~F.trim(ln).startswith("#")
-        & ln.contains("="),
+
+def KV_ENTRIES_SQL(text: str) -> str:
+    """The one ``key = value`` parse (bin/save_DBB_stagein_to_DBB.py:49-56),
+    as Spark SQL over the string expression ``text``: an
+    array<struct<key, value>> in file order, one entry per line holding an
+    ``=``. The key is the stripped, lowercased text before the first
+    ``=``; the value is the stripped text after it; ``#`` lines are
+    skipped. A NULL ``text`` gives NULL. Callers read a key's LAST entry
+    (`KV_MAP_SQL`, `multimodal.extract_kv_metadata`)."""
+    key = STRIP_SQL("substring_index(l, '=', 1)")
+    value = STRIP_SQL("substr(l, instr(l, '=') + 1)")
+    return (
+        f"filter(transform(filter(split({text}, {sql_str(_LINE_BREAKS)}), "
+        f"l -> instr(l, '=') > 0), "
+        f"l -> named_struct('key', lower({key}), 'value', {value})), "
+        "e -> NOT startswith(e.key, '#'))"
     )
-    entries = F.transform(
-        lines,
-        lambda ln: F.struct(
-            # key = before first '=', value = after it (split("=", 1)).
-            F.lower(F.trim(F.substring_index(ln, "=", 1))).alias("key"),
-            F.trim(F.regexp_replace(ln, r"^[^=]*=", "")).alias("value"),
-        ),
+
+
+def KV_MAP_SQL(text: str) -> str:
+    """`KV_ENTRIES_SQL` folded into a map<string,string>, a later key
+    replacing an earlier one. Never `str_to_map` / `map_from_entries` over
+    raw lines: under Spark's default ``mapKeyDedupPolicy=EXCEPTION`` a
+    file that repeats a key (or two keys differing only by case) would
+    throw DUPLICATED_MAP_KEY and fail the WHOLE micro-batch. The fold is
+    O(lines²): fine for notify and config files, never for data files."""
+    return (
+        f"aggregate({KV_ENTRIES_SQL(text)}, cast(map() AS map<string,string>), "
+        "(m, e) -> map_concat(map_filter(m, (k, v) -> k != e.key), "
+        "map(e.key, e.value)))"
     )
-    last_wins = F.filter(
-        entries,
-        lambda e, i: ~F.exists(
-            F.slice(entries, i + F.lit(2), F.size(entries)),
-            lambda later: later["key"] == e["key"],
-        ),
-    )
-    return F.map_from_entries(last_wins)
 
 
 def parse_config_text(spark: SparkSession, path: str) -> dict[str, str]:
@@ -70,15 +77,12 @@ def parse_config_text(spark: SparkSession, path: str) -> dict[str, str]:
     Config is plan-time input (it parameterizes the pipeline), so a
     driver-side read is correct — it never scales with data volume.
     """
-    out: dict[str, str] = {}
-    for row in spark.read.text(path).collect():
-        line = row["value"].strip()
-        if not line or line.startswith("#"):
-            continue
-        if "=" in line:
-            k, v = line.split("=", 1)
-            out[k.strip().lower()] = v.strip()
-    return out
+    rows = (
+        spark.read.text(path, wholetext=True)
+        .select(F.expr(KV_MAP_SQL("value")))
+        .collect()
+    )
+    return dict(rows[0][0]) if rows else {}
 
 
 def parse_notify_binary(df: DataFrame) -> DataFrame:
@@ -88,7 +92,7 @@ def parse_notify_binary(df: DataFrame) -> DataFrame:
     notify = df.select(
         F.col("path").alias("notify_path"),
         F.col("modificationTime").alias("delivery_ts"),
-        _kv_map_col(F.decode(F.col("content"), "UTF-8")).alias("notify"),
+        F.expr(KV_MAP_SQL("cast(content AS string)")).alias("notify"),
     )
     return notify.withColumn(
         "data_name",

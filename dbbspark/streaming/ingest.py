@@ -64,7 +64,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from ..plans.keywords import KeywordSchema
-from ..sources.multimodal import extract_kv_metadata
+from ..sources.multimodal import HEADER_ENTRIES_SQL, KV_METADATA_SQL
 from ..sources.notify import NOTIFY_SUFFIX, parse_notify_binary, read_stagein_pairs
 
 # Fixed schema of the binaryFile source (needed explicitly for readStream).
@@ -171,37 +171,21 @@ def classify_pairs(
         )
     )
 
-    # Metadata extraction per filetype with a declared schema (U3). One
-    # union branch per schema'd filetype keeps each mapInPandas schema
-    # static; filetypes without a declared schema pass through.
-    schemad = [ft for ft in cfg.keyword_schemas if cfg.keyword_schemas[ft].flags]
-    if schemad:
-        branches = []
-        passthrough = df.where(
-            ~F.col("filetype").isin(schemad) | F.col("filetype").isNull()
-        )
-        for ft in schemad:
-            spec = cfg.keyword_schemas[ft]
-            dec = {"decoder": spec.decoder} if spec.decoder else {}
-            branch = extract_kv_metadata(
-                df.where(F.col("filetype") == ft), spec.as_required_map(), **dec
-            )
-            branches.append(
-                branch.withColumn("meta_json", F.to_json("meta")).drop("meta")
-            )
-        passthrough = passthrough.withColumn(
-            "meta_json", F.lit(None).cast("string")
-        ).withColumn(
-            "meta_missing_required", F.lit(None).cast("array<string>")
-        )
-        df = branches[0]
-        for b in branches[1:]:
-            df = df.unionByName(b)
-        df = df.unionByName(passthrough.select(*df.columns))
-    else:
-        df = df.withColumn("meta_json", F.lit(None).cast("string")).withColumn(
-            "meta_missing_required", F.lit(None).cast("array<string>")
-        )
+    # Metadata extraction (U3): one CASE filetype projection over header
+    # entries parsed once per row, and only for filetypes with a declared
+    # schema; the others get NULL metadata.
+    schemas = {ft: s.as_required_map() for ft, s in cfg.keyword_schemas.items() if s.flags}
+    df = df.withColumn(
+        "_kv",
+        F.when(F.col("filetype").isin(list(schemas)), F.expr(HEADER_ENTRIES_SQL("content"))),
+    )
+    meta_json, missing = F.lit(None).cast("string"), F.lit(None).cast("array<string>")
+    for ft, keywords in schemas.items():
+        meta, miss = KV_METADATA_SQL("_kv", keywords)
+        is_ft = F.col("filetype") == ft
+        meta_json = F.when(is_ft, F.to_json(F.expr(meta))).otherwise(meta_json)
+        missing = F.when(is_ft, F.expr(miss)).otherwise(missing)
+    df = df.withColumns({"meta_json": meta_json, "meta_missing_required": missing}).drop("_kv")
 
     # Duplicate gate (J8/ST8): left join against registered names. The
     # indicator column avoids a second pass that a semi+anti pair would
@@ -420,19 +404,11 @@ def ingest_batch(
     at 0 — checkpoint resets, multiple streams on one archive — must
     NOT be used: token reuse dynamic-overwrites a prior batch's
     partition)."""
-    # Persist the paired batch: the valid/missing union and the
-    # per-filetype metadata branches each re-derive from it, and without a
-    # cache every branch re-reads the stage-in files (measured 3× file
-    # I/O). MEMORY_AND_DISK (default) spills oversized batches; batch size
-    # itself is bounded by the streaming trigger (maxFilesPerTrigger).
     pairs = read_stagein_pairs(
         spark, cfg.notify_dir, cfg.delivery_dir, notify_df=notify_df
-    ).persist()
-    try:
-        classified = classify_pairs(spark, cfg, pairs)
-        return _write_sinks(classified, cfg, task_id, batch_token=batch_token)
-    finally:
-        pairs.unpersist()
+    )
+    classified = classify_pairs(spark, cfg, pairs)
+    return _write_sinks(classified, cfg, task_id, batch_token=batch_token)
 
 
 def start_ingest_stream(
@@ -518,13 +494,7 @@ def replay_quarantine(
     names = bad.select(
         F.col("orig_filename").alias("data_name")
     ).distinct()
-    pairs = (
-        read_stagein_pairs(spark, cfg.notify_dir, cfg.delivery_dir)
-        .join(F.broadcast(names), "data_name", "left_semi")
-        .persist()
+    pairs = read_stagein_pairs(spark, cfg.notify_dir, cfg.delivery_dir).join(
+        F.broadcast(names), "data_name", "left_semi"
     )
-    try:
-        classified = classify_pairs(spark, cfg, pairs)
-        return _write_sinks(classified, cfg, task_id)
-    finally:
-        pairs.unpersist()
+    return _write_sinks(classify_pairs(spark, cfg, pairs), cfg, task_id)

@@ -9,9 +9,11 @@ aborting; the streaming checkpoint prevents reprocessing.
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 
 import pytest
+from hypothesis import given, settings, strategies as st
 
 from pyspark.sql import functions as F
 
@@ -488,19 +490,17 @@ def test_fits_header_decoder_parses_real_cards():
 
 
 def test_custom_decoder_threads_through_extract(spark, tmp_path):
-    """A pluggable decoder (here the FITS header parser) drives
-    extract_kv_metadata; files whose decoded header misses an R-flagged
-    key report it in meta_missing_required."""
-    from dbbspark.sources.multimodal import extract_kv_metadata, fits_header_decode
+    """A FITS header (SIMPLE card first) drives extract_kv_metadata with
+    no decoder argument — the format comes from the bytes; files whose
+    header misses an R-flagged key report it in meta_missing_required."""
+    from dbbspark.sources.multimodal import extract_kv_metadata
 
-    good = _fits_header([("EXPNUM", "7"), ("OBSTYPE", "'zero'")])
-    bad = _fits_header([("OBSTYPE", "'dark'")])  # EXPNUM (R) absent
+    good = _fits_header([("SIMPLE", "T"), ("EXPNUM", "7"), ("OBSTYPE", "'zero'")])
+    bad = _fits_header([("SIMPLE", "T"), ("OBSTYPE", "'dark'")])  # EXPNUM (R) absent
     _write(str(tmp_path / "good.fits"), good)
     _write(str(tmp_path / "bad.fits"), bad)
     docs = read_binary_docs(spark, str(tmp_path))
-    out = extract_kv_metadata(
-        docs, {"EXPNUM": True, "OBSTYPE": False}, decoder=fits_header_decode
-    )
+    out = extract_kv_metadata(docs, {"EXPNUM": True, "OBSTYPE": False})
     rows = {
         os.path.basename(r["path"]): r
         for r in out.select("path", "meta", "meta_missing_required").collect()
@@ -512,41 +512,140 @@ def test_custom_decoder_threads_through_extract(spark, tmp_path):
 
 
 def test_raising_decoder_quarantines_not_aborts(spark, area):
-    """A decoder that throws on malformed bytes must quarantine that file
+    """A data file of malformed (invalid UTF-8) bytes must quarantine
     (missing required headers), never fail the batch — the pipeline's
     replacement for the reference's SystemExit."""
-
-    def strict_decoder(raw: bytes) -> dict:
-        if b"EXPNUM" not in raw:
-            raise ValueError("malformed header")
-        return {
-            k.strip().upper(): v.strip()
-            for k, v in (
-                line.split("=", 1)
-                for line in raw.decode("utf-8", "replace").splitlines()
-                if "=" in line
-            )
-        }
-
+    _stage(area, "DECam_00000004.fits", b"\xff\xfe\x80OBSTYPE = \xc3\n\xed\xa0\x80")
     cfg = _cfg(area)
-    cfg = IngestConfig(
-        notify_dir=cfg.notify_dir,
-        delivery_dir=cfg.delivery_dir,
-        archive_root=cfg.archive_root,
-        registry_path=cfg.registry_path,
-        quarantine_path=cfg.quarantine_path,
-        keyword_schemas={
-            "raw": parse_keyword_csv("EXPNUM,R,N\nOBSTYPE,Y,N\n").with_decoder(
-                strict_decoder
-            )
-        },
-    )
     res = ingest_batch(spark, cfg, task_id="t-dec")
-    # DECam_00000003.fits has no EXPNUM → decoder raises → quarantined as
-    # missing-header; the good raw file still archives.
+    # neither DECam_00000003.fits nor the malformed file has EXPNUM →
+    # quarantined as missing-header; the good raw file still archives.
     assert res.archived == 2
     reasons = _reasons(spark, cfg)
-    assert reasons[REASON_MISSING_HEADER] == ["DECam_00000003.fits"]
+    assert sorted(reasons[REASON_MISSING_HEADER]) == [
+        "DECam_00000003.fits",
+        "DECam_00000004.fits",
+    ]
+
+
+def test_real_fits_header_archives_through_ingest(spark, area):
+    """A real FITS file (SIMPLE card first, EXPNUM card, binary data
+    block) archives through the default keyword schema with its header
+    values in meta_json."""
+    raw = _fits_header(
+        [
+            ("SIMPLE", "T"),
+            ("BITPIX", "16"),
+            ("NAXIS", "0"),
+            ("EXPNUM", "227557 / exposure number"),
+            ("OBSTYPE", "'object  '           / observation type"),
+        ]
+    ) + bytes(range(256)) * 12
+    _stage(area, "DECam_00227557.fits", raw)
+    cfg = _cfg(area)
+    res = ingest_batch(spark, cfg)
+    assert res.archived == 3
+    meta = (
+        spark.read.parquet(cfg.archive_root)
+        .where(F.col("filename") == "DECam_00227557.fits")
+        .select("meta_json")
+        .collect()
+    )
+    assert [json.loads(r["meta_json"]) for r in meta] == [
+        {"expnum": "227557", "obstype": "object"}
+    ]
+
+
+@pytest.mark.parametrize(
+    "notify, reason",
+    [
+        (lambda md5: f"md5sum = {md5}\r\n".encode(), None),
+        (lambda md5: f"md5sum\t=\t{'0' * 32}\n".encode(), REASON_CHECKSUM),
+        (lambda md5: f"md5sum = {md5}".encode() + b"\xff\n", REASON_CHECKSUM),
+    ],
+    ids=["crlf_line_ends", "tab_separated", "non_utf8_byte"],
+)
+def test_notify_lines_parse_like_the_reference(spark, area, notify, reason):
+    """Notify lines split and strip as Python's splitlines()/strip() do:
+    a CRLF file with the right md5 archives, a tab-separated wrong md5 is
+    a checksum mismatch, and a non-UTF-8 byte corrupts only its own file
+    (quarantined), never the batch."""
+    data = b"EXPNUM = 10\npayload"
+    _write(os.path.join(area, "delivery", "DECam_00000010.fits"), data)
+    _write(
+        os.path.join(area, "notify", "DECam_00000010.fits.dbb"),
+        notify(hashlib.md5(data).hexdigest()),
+    )
+    cfg = _cfg(area)
+    res = ingest_batch(spark, cfg)
+    reasons = _reasons(spark, cfg)
+    if reason is None:
+        assert res.archived == 3
+        assert all("DECam_00000010.fits" not in v for v in reasons.values())
+    else:
+        assert res.archived == 2
+        assert sorted(reasons[reason]) == ["DECam_00000002.fits", "DECam_00000010.fits"]
+
+
+def kv_text_decode(raw: bytes) -> dict[str, str]:
+    """Reference `KEY = value` parse in plain Python (the reference's
+    per-file dict parse, bin/save_DBB_stagein_to_DBB.py:49-56): last
+    occurrence wins, keys uppercased."""
+    kv: dict[str, str] = {}
+    for line in raw.decode("utf-8", "replace").splitlines():
+        if "=" in line:
+            k, v = line.split("=", 1)
+            kv[k.strip().upper()] = v.strip()
+    return kv
+
+
+# Python's splitlines() breaks and strip() blanks (the latter mixing
+# ASCII, \x1c-\x1f and Unicode spaces), plus '=', '#', non-ASCII text and
+# arbitrary bytes: every input on which SQL and Python parses could differ.
+_BREAKS = ["\n", "\r\n", "\r", "\x0b", "\x0c", "\x1c", "\x1d", "\x1e", "\x85",
+           "\u2028", "\u2029"]
+_BLANKS = [" ", "\t", "\x1f", "\xa0", "\u2003", "\u3000"]
+_KV_KEYS = ("A", "B", "AB", "BA")
+_blanks = st.lists(st.sampled_from(_BLANKS), max_size=3).map("".join)
+_noise = st.lists(
+    st.sampled_from(["=", "#", "\xe9", "\U0001F600", *_BREAKS, *_BLANKS]).map(str.encode)
+    | st.text(max_size=3).map(str.encode)
+    | st.binary(max_size=3),
+    max_size=5,
+).map(b"".join)
+_kv_line = st.tuples(
+    _blanks,
+    st.sampled_from(["", "", "#"]),
+    st.sampled_from(["a", "A", "b", "B", "ab", "Ab", "bA", "BA"]),
+    _blanks,
+).map(lambda t: ("".join(t) + "=").encode())
+_kv_file = st.lists(
+    st.tuples(_kv_line | st.just(b""), _noise, st.sampled_from(_BREAKS).map(str.encode)),
+    max_size=8,
+).map(lambda lines: b"".join(b"".join(t) for t in lines))
+
+
+@given(files=st.lists(_kv_file, min_size=1, max_size=8))
+@settings(max_examples=12, deadline=None)
+def test_sql_kv_lookup_matches_python_reference(spark, files):
+    """Property: extract_kv_metadata's SQL lookup of each keyword equals
+    the Python reference parse, on text mixing mixed-case ASCII keys,
+    line breaks, blanks, '#', Unicode and arbitrary bytes."""
+    from hypothesis import assume
+
+    from dbbspark.sources.multimodal import extract_kv_metadata
+
+    assume(not any(f.startswith(b"SIMPLE  = ") for f in files))
+    keywords = {k: i % 2 == 0 for i, k in enumerate(_KV_KEYS)}
+    docs = spark.createDataFrame(list(enumerate(files)), "i int, content binary")
+    rows = {r["i"]: r for r in extract_kv_metadata(docs, keywords).collect()}
+    for i, raw in enumerate(files):
+        row = rows[i]
+        ref = kv_text_decode(raw)
+        assert row["meta"].asDict() == {k.lower(): ref.get(k) for k in _KV_KEYS}, raw
+        assert row["meta_missing_required"] == [
+            k for k, req in keywords.items() if req and k not in ref
+        ], raw
 
 
 def test_duplicate_notify_keys_last_wins_not_crash(spark, area):

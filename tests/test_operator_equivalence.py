@@ -224,16 +224,20 @@ def test_blocked_cosine_matches_bruteforce(spark):
         assert blocked == brute, f"num_blocks={blocks}"
 
 
-def test_fits_decoder_roundtrip_random_headers():
+def test_fits_decoder_roundtrip_random_headers(spark):
     """Property: encode random keyword/value pairs as FITS 80-byte cards
     (string quoting with '' escapes, / comments) → fits_header_decode
-    recovers every pair exactly."""
+    recovers every pair exactly. FITS_ENTRIES_SQL, the Spark SQL form,
+    equals fits_header_decode on those headers and on malformed ones:
+    unterminated quotes, indented or missing END cards, garbage cards and
+    binary tails."""
     import string
 
-    from dbbspark.sources.multimodal import fits_header_decode
+    from dbbspark.sources.multimodal import FITS_ENTRIES_SQL, fits_header_decode
 
     rng = random.Random(20260813)
     alphabet = string.ascii_letters + string.digits + " .'-_+/(),"
+    raws = []
     for _ in range(50):
         kv = {}
         cards = b""
@@ -264,6 +268,29 @@ def test_fits_decoder_roundtrip_random_headers():
         pad = (2880 - len(cards) % 2880) % 2880
         raw = cards + b" " * pad + b"\x01\x02binary payload"
         assert fits_header_decode(raw) == kv
+        raws.append(raw)
+    for _ in range(60):
+        cards = b""
+        for _ in range(rng.randrange(0, 12)):
+            kind = rng.random()
+            key = "".join(rng.choice("ABCab ") for _ in range(rng.randrange(0, 9)))
+            if kind < 0.25:  # unterminated string, maybe with '' escapes
+                val = "".join(rng.choice(alphabet) for _ in range(rng.randrange(0, 60)))
+                card = f"{key:<8}= '{val}".encode("ascii")
+            elif kind < 0.4:  # END, indented, maybe with trailing text
+                card = (" " * rng.randrange(0, 7) + "END" + rng.choice(["", "  x", " / c"])).encode()
+            elif kind < 0.7:  # garbage bytes
+                card = bytes(rng.randrange(256) for _ in range(80))
+            else:
+                card = f"{key:<8}= {rng.randrange(99)} / n".encode("ascii")
+            cards += card[:80].ljust(80)
+        raw = cards + bytes(rng.randrange(256) for _ in range(rng.randrange(0, 100)))
+        raws.append(raw)
+    docs = spark.createDataFrame(list(enumerate(raws)), "i int, raw binary")
+    rows = docs.select("i", F.expr(FITS_ENTRIES_SQL("raw")).alias("kv")).orderBy("i").collect()
+    for raw, row in zip(raws, rows):
+        want = {k.lower(): v for k, v in fits_header_decode(raw).items()}
+        assert {e["key"]: e["value"] for e in row["kv"]} == want, raw
 
 
 def test_pack_sequences_matches_python_reference(spark):

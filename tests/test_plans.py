@@ -527,3 +527,35 @@ def test_dsir_weights_shared_counts_two_joins(spark, sf_dir):
     lm_t, lm_s = train_ngram_lm_pair(docs, F.col("lang") == "en", "text", n=2)
     nodes = plan_node_counts(dsir_weights(docs, lm_t, lm_s))
     assert sum(n for c, n in nodes.items() if c.endswith("JoinExec")) == 2, nodes
+
+
+def test_classify_pairs_runs_no_python_worker(spark, tmp_path):
+    """Header metadata for every schema'd filetype is one CASE filetype
+    projection: no Python map node, and the plan's only Union is the
+    matched/missing-data pairing — not one branch per filetype."""
+    from dbbspark.plans.keywords import parse_keyword_csv
+    from dbbspark.sources.notify import read_stagein_pairs
+    from dbbspark.streaming.ingest import IngestConfig, classify_pairs
+
+    for d, name, data in (
+        ("delivery", "DECam_00000001.fits", b"EXPNUM = 1\n"),
+        ("notify", "DECam_00000001.fits.dbb", b"md5sum = x\n"),
+    ):
+        (tmp_path / d).mkdir()
+        (tmp_path / d / name).write_bytes(data)
+    cfg = IngestConfig(
+        notify_dir=str(tmp_path / "notify"),
+        delivery_dir=str(tmp_path / "delivery"),
+        archive_root=str(tmp_path / "archive"),
+        registry_path=str(tmp_path / "registry"),
+        quarantine_path=str(tmp_path / "quarantine"),
+        keyword_schemas={
+            "raw": parse_keyword_csv("EXPNUM,R,N\nOBSTYPE,Y,N\n"),
+            "snmanifest": parse_keyword_csv("FIELD,R,N\n"),
+        },
+    )
+    pairs = read_stagein_pairs(spark, cfg.notify_dir, cfg.delivery_dir)
+    nodes = plan_node_counts(classify_pairs(spark, cfg, pairs))
+    python = {c: n for c, n in nodes.items() if "Python" in c or "InPandas" in c}
+    assert python == {}, nodes
+    assert nodes["UnionExec"] == 1, nodes
