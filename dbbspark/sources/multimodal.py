@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from ..functions import sql_ident, sql_str
-from .notify import KV_ENTRIES_SQL, STRIP_SQL
+from .notify import KV_ENTRIES_SQL, STRIP_SQL, UTF8_TEXT_SQL
 
 # ---------------------------------------------------------------------------
 # Binary document reader
@@ -144,12 +144,13 @@ def FITS_ENTRIES_SQL(content: str) -> str:
 def HEADER_ENTRIES_SQL(content: str) -> str:
     """The header's (key, value) entries from the binary expression
     ``content``: `FITS_ENTRIES_SQL` for a file opening with the SIMPLE
-    card, else `KV_ENTRIES_SQL` over the bytes read as UTF-8 (invalid
-    bytes read as U+FFFD; the cast never raises)."""
+    card, else `KV_ENTRIES_SQL` over the bytes read as UTF-8 the way
+    Python's ``replace`` decode reads them (`notify.UTF8_TEXT_SQL`; never
+    raises)."""
     return (
         f"CASE WHEN startswith({content}, X'{_FITS_MAGIC.hex()}') "
         f"THEN {FITS_ENTRIES_SQL(content)} "
-        f"ELSE {KV_ENTRIES_SQL(f'cast({content} AS string)')} END"
+        f"ELSE {KV_ENTRIES_SQL(UTF8_TEXT_SQL(content))} END"
     )
 
 

@@ -33,6 +33,15 @@ _LINE_BREAKS = r"\r\n|[\n\r\x0b\x0c\x1c\x1d\x1e\x85\u2028\u2029]"
 _STRIP = r"(?U)^[\s\x1c-\x1f]+|[\s\x1c-\x1f]+\z"
 
 
+def UTF8_TEXT_SQL(content: str) -> str:
+    """The binary expression ``content`` read as UTF-8 text exactly as
+    Python's ``decode('utf-8', 'replace')`` reads it: one U+FFFD per
+    maximal invalid subpart. A bare cast never raises but can fold several
+    invalid bytes into one U+FFFD (``ED A0`` gives one, Python two);
+    `make_valid_utf8` replaces them as Python does."""
+    return f"make_valid_utf8(cast({content} AS string))"
+
+
 def STRIP_SQL(text: str) -> str:
     """The SQL expression ``text`` with Python-`strip()` whitespace
     removed from both ends."""
@@ -79,7 +88,7 @@ def parse_config_text(spark: SparkSession, path: str) -> dict[str, str]:
     """
     rows = (
         spark.read.text(path, wholetext=True)
-        .select(F.expr(KV_MAP_SQL("value")))
+        .select(F.expr(KV_MAP_SQL("make_valid_utf8(value)")))
         .collect()
     )
     return dict(rows[0][0]) if rows else {}
@@ -92,7 +101,7 @@ def parse_notify_binary(df: DataFrame) -> DataFrame:
     notify = df.select(
         F.col("path").alias("notify_path"),
         F.col("modificationTime").alias("delivery_ts"),
-        F.expr(KV_MAP_SQL("cast(content AS string)")).alias("notify"),
+        F.expr(KV_MAP_SQL(UTF8_TEXT_SQL("content"))).alias("notify"),
     )
     return notify.withColumn(
         "data_name",

@@ -11,16 +11,16 @@ declarative pipeline classifies the whole batch, then a single persisted
 DataFrame feeds three sinks:
 
   pairs → filetype (P1) → md5 (F11/P3) → metadata extract (U3) →
-  registry anti-join (J8/ST8) → reject-reason CASE (F16) →
+  registry IN-subquery (J8/ST8) → reject-reason CASE (F16) →
       ├─ valid      → archive parquet, partitionBy(filetype, nite)  (S9)
       │               + registry append                             (S10)
       └─ rejected   → quarantine parquet, partitionBy(year, month)  (S11)
 
 Exactly-once semantics (ST4): the reference's per-file commit/rollback is
 replaced by (a) Spark's committed file output (no torn files), (b) the
-registry anti-join making re-runs no-ops for already-ingested names, and
-(c) the streaming checkpoint ensuring each notify file is processed by at
-most one micro-batch. The notify-delete ack (`:198,293`) is subsumed by
+registry duplicate gate making re-runs no-ops for already-ingested
+names, and (c) the streaming checkpoint ensuring each notify file is
+processed by at most one micro-batch. The notify-delete ack (`:198,293`) is subsumed by
 (b)+(c) — re-presenting an ingested file classifies it as a duplicate.
 The multi-sink batch is not atomic, but the DATA-PLANE sinks are
 crash-replay idempotent: the archive write is partitioned by a
@@ -40,14 +40,19 @@ pattern.
 
 Scale notes (100 TB, 1000 executors):
 - data-file bytes never shuffle: pairing broadcasts the (tiny) notify
-  side; classification is narrow (map-side) from scan to write;
-- the registry gate joins on filename only — at billions of registry rows
-  bucket the registry table by `filename` (`bucketBy(4096, "filename")`)
-  so the anti-join is co-located instead of a full shuffle;
-- archive writes are hash-partitioned by (filetype, nite) — the
-  reference's `${band}/${nite}` directory templating (F6) expressed as
-  data-driven layout, giving partition pruning to every downstream read;
-  the trailing batch=<token> dir accumulates one entry per ingest batch
+  side; classification is narrow (map-side) from scan to write, and the
+  sinks read the cached batch through a `coalesce` sized from its bytes
+  (one partition per `spark.sql.files.maxPartitionBytes`), so the file
+  count of every sink follows data volume, not input splits;
+- the one shuffle is the per-reason summary aggregate (a handful of
+  rows); the registry gate is an ExistenceJoin, broadcast while the
+  registry's names fit the broadcast threshold — past that it shuffles
+  the night and the registry's names on filename (bucket the registry by
+  `filename` to keep that shuffle co-located);
+- archive writes are partitioned by (filetype, nite) — the reference's
+  `${band}/${nite}` directory templating (F6) expressed as data-driven
+  layout, giving partition pruning to every downstream read; the
+  trailing batch=<token> dir accumulates one entry per ingest batch
   (same shape as the gate indexes' batch dirs) — `compact_partitioned`
   with ["filetype", "nite", "batch"] (C24) bounds file/dir counts, and
   tokens never collide, so compacted history stays immutable;
@@ -136,9 +141,12 @@ def _filetype_col(cfg: IngestConfig) -> F.Column:
     return expr
 
 
-def _registry_names(spark: SparkSession, cfg: IngestConfig) -> DataFrame:
-    """Filenames already in the archive (duplicate gate J8). Narrow
-    projection — only `filename` is read from the registry parquet.
+def _registry_names(spark: SparkSession, cfg: IngestConfig) -> DataFrame | None:
+    """Filenames already in the archive (duplicate gate J8), or None
+    before the first ingest. Read with a declared ``filename string``
+    schema: only that column is scanned and no footer job infers the
+    schema. Duplicate names are harmless to the IN-subquery that reads
+    them (`classify_pairs`), so there is no ``distinct``.
 
     First-run detection goes through Spark's own filesystem layer (catch
     PATH_NOT_FOUND / empty-path AnalysisException), NOT os.path.exists:
@@ -146,20 +154,22 @@ def _registry_names(spark: SparkSession, cfg: IngestConfig) -> DataFrame:
     which would silently disable the duplicate gate on exactly the
     deployments that need it."""
     try:
-        return spark.read.parquet(cfg.registry_path).select(
-            F.col("filename").alias("data_name")
-        ).distinct()
+        return spark.read.schema("filename string").parquet(cfg.registry_path).select(
+            "filename"
+        )
     except AnalysisException:
         # registry not created yet (first ingest) — nothing registered.
-        return spark.createDataFrame([], "data_name string")
+        return None
 
 
 def classify_pairs(
     spark: SparkSession, cfg: IngestConfig, pairs: DataFrame
 ) -> DataFrame:
-    """Add filetype, md5, extracted metadata, duplicate flag, and the
-    reject-reason CASE column to stage-in pairs. Pure transformation — no
-    writes, no actions."""
+    """Add filetype, md5, extracted metadata and the reject-reason CASE
+    column to stage-in pairs. The duplicate check is an IN-subquery
+    against the registry's names (an ExistenceJoin — no ``distinct``, no
+    left join); before the first ingest there is no registry and no
+    file is a duplicate. Pure transformation — no writes, no actions."""
     df = (
         pairs.withColumn("filetype", _filetype_col(cfg))
         .withColumn("md5sum", F.md5(F.col("content")))
@@ -187,15 +197,18 @@ def classify_pairs(
         missing = F.when(is_ft, F.expr(miss)).otherwise(missing)
     df = df.withColumns({"meta_json": meta_json, "meta_missing_required": missing}).drop("_kv")
 
-    # Duplicate gate (J8/ST8): left join against registered names. The
-    # indicator column avoids a second pass that a semi+anti pair would
-    # need.
-    reg = _registry_names(spark, cfg).withColumn("_registered", F.lit(True))
-    df = df.join(reg, "data_name", "left")
+    # Duplicate gate (J8/ST8): an IN-subquery against the registered
+    # names, planned as an ExistenceJoin — no registry shuffle, no
+    # dedup. Before the first ingest there is no registry: the flag is
+    # NULL and no subquery is planned.
+    names = _registry_names(spark, cfg)
+    registered = (
+        F.lit(None).cast("boolean") if names is None else F.col("data_name").isin(names)
+    )
 
     reason = (
         F.when(F.col("content").isNull(), REASON_MISSING_DATA)
-        .when(F.col("_registered").isNotNull(), REASON_DUPLICATE)
+        .when(registered, REASON_DUPLICATE)
         .when(F.col("filetype").isNull(), REASON_UNKNOWN_FILETYPE)
         .when(
             F.col("declared_md5").isNotNull()
@@ -207,7 +220,7 @@ def classify_pairs(
             REASON_MISSING_HEADER,
         )
     )
-    return df.withColumn("reject_reason", reason).drop("_registered")
+    return df.withColumn("reject_reason", reason)
 
 
 def _registry_partitioned(spark: SparkSession, path: str) -> bool:
@@ -232,20 +245,32 @@ def _registry_partitioned(spark: SparkSession, path: str) -> bool:
     return not has_root_data
 
 
-def _batch_token(classified: DataFrame) -> str:
-    """Deterministic, order/partition-independent token for a batch:
-    a commutative hash-sum over the batch's data names (+ row count), so
-    a crash replay of the SAME batch derives the SAME token and its
-    dynamic-partition overwrite replaces the crashed attempt's rows.
-    Shuffle-free (one partial-aggregated sum — no collect_list row that
-    would grow with batch size)."""
+def _batch_summary(classified: DataFrame) -> tuple[str, dict[str | None, int], int]:
+    """(token, rows per reject reason, data bytes) of a classified batch
+    from ONE aggregate (a partial-aggregated groupBy over a handful of
+    reasons).
+
+    The token is deterministic and order/partition-independent: a
+    commutative hash-sum over the batch's data names (+ row count), so a
+    crash replay of the SAME batch derives the SAME token and its
+    dynamic-partition overwrite replaces the crashed attempt's rows. The
+    per-reason sums add up to the whole batch's, so grouping leaves the
+    token unchanged. ``None`` keys the valid rows."""
     from ..operators.dedup import MD5_INT_SPARK_SQL
 
-    row = classified.agg(
-        F.sum(F.expr(MD5_INT_SPARK_SQL("data_name")) % F.lit(1_000_000_007)).alias("s"),
-        F.count("*").alias("n"),
-    ).first()
-    return f"c{(row['s'] or 0) % (1 << 60):x}n{row['n']}"
+    rows = (
+        classified.groupBy("reject_reason")
+        .agg(
+            F.sum(F.expr(MD5_INT_SPARK_SQL("data_name")) % F.lit(1_000_000_007)).alias("s"),
+            F.count("*").alias("n"),
+            F.sum("filesize").alias("bytes"),
+        )
+        .collect()
+    )
+    s = sum(r["s"] or 0 for r in rows)
+    n = sum(r["n"] for r in rows)
+    by_reason = {r["reject_reason"]: r["n"] for r in rows}
+    return f"c{s % (1 << 60):x}n{n}", by_reason, sum(r["bytes"] or 0 for r in rows)
 
 
 def _write_sinks(
@@ -256,18 +281,31 @@ def _write_sinks(
 ) -> IngestResult:
     """Fan the classified batch into archive + registry + quarantine.
 
+    The batch is cached once; one aggregate over the cache (which also
+    fills it) yields the reason counts, the token and the batch's bytes.
+    The sinks then read the cache coalesced to one partition per
+    ``spark.sql.files.maxPartitionBytes`` of data: a small night writes
+    one file per archive leaf, and the file count follows bytes, not the
+    scan's input splits. Coalescing merges cached partitions without a
+    shuffle.
+
     ``batch_token`` keys the archive/quarantine dynamic-partition
     overwrite (crash-replay idempotence, module docstring); both the
     streaming and cron/replay paths derive a content token (explicit
     tokens are honored but must be globally unique — see ingest_batch)."""
-    classified = classified.withColumn(
+    spark = classified.sparkSession
+    cached = classified.withColumn(
         "task_id", F.lit(task_id).cast("string")
     ).persist()
     try:
+        token, by_reason, data_bytes = _batch_summary(cached)
         if batch_token is None:
-            batch_token = _batch_token(classified)
-        valid = classified.where(F.col("reject_reason").isNull())
-        rejected = classified.where(F.col("reject_reason").isNotNull())
+            batch_token = token
+        archived = by_reason.pop(None, 0)
+        split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+        sized = cached.coalesce(max(1, -(-data_bytes // split)))
+        valid = sized.where(F.col("reject_reason").isNull())
+        rejected = sized.where(F.col("reject_reason").isNotNull())
 
         # S9: archive placement — partitioned layout replaces the
         # reference's per-file templated copy (+retry+verify: Spark's file
@@ -339,14 +377,6 @@ def _write_sinks(
             "append"
         ).parquet(cfg.quarantine_path)
 
-        by_reason = {
-            r["reject_reason"]: r["cnt"]
-            for r in classified.groupBy("reject_reason")
-            .agg(F.count("*").alias("cnt"))
-            .collect()
-        }
-        archived = by_reason.pop(None, 0)
-
         # S10: registry append (no bytes — narrow rows). MUST be the LAST
         # action of the batch: the classification plan READS the registry
         # (duplicate gate), and under foreachBatch the persisted cache is
@@ -372,7 +402,6 @@ def _write_sinks(
             F.col("delivery_ts").alias("delivery_date"),
             "task_id",
         ).write.mode("append")
-        spark = classified.sparkSession
         if _registry_partitioned(spark, cfg.registry_path):
             reg_writer = reg_writer.partitionBy("nite")
         reg_writer.parquet(cfg.registry_path)
@@ -382,7 +411,7 @@ def _write_sinks(
             by_reason=by_reason,
         )
     finally:
-        classified.unpersist()
+        cached.unpersist()
 
 
 def ingest_batch(
@@ -442,7 +471,7 @@ def start_ingest_stream(
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         notify = parse_notify_binary(batch_df)
-        # batch_token=None => the content-hash token (_batch_token) is
+        # batch_token=None => the content-hash token (_batch_summary) is
         # derived inside _write_sinks, exactly as in the cron path. The
         # epoch id (f"b{batch_id}") is NOT a safe token here: epoch ids
         # restart at 0 after a checkpoint reset, and two streams sharing

@@ -8,7 +8,8 @@ a persisted (h, df) index — one row per distinct normalized line ever
 seen, the compact state — and per micro-batch:
 
 1. explodes the batch into line mentions with normalized-line hashes
-   (`line_mentions` — map-side);
+   (`line_mentions` — map-side), once: `process_batch` caches them for
+   all of its writes;
 2. folds the batch's own per-hash counts into the index counts: a line
    is boilerplate once its cumulative df (index + batch) reaches
    ``min_df``, so a banner repeated 100× inside ONE batch is caught
@@ -277,7 +278,7 @@ def index_df(
             except AnalysisException:
                 pass
         return spark.createDataFrame([], "h bigint, df bigint")
-    return spark.read.parquet(path).select("h", "df")
+    return spark.read.schema("h bigint, df bigint").parquet(path)
 
 
 def gate_batch(
@@ -291,6 +292,13 @@ def gate_batch(
     """(deduped_docs, updated_index) for one batch against the index.
     Pure DataFrame logic — shared by the streaming foreachBatch and
     direct batch callers (pins streaming == cumulative batch in tests).
+
+    Both frames derive from ``line_mentions(batch, id_col, text_col)``,
+    and the updated index adds the same per-hash batch ``counts`` the
+    gate decision uses. Nothing is cached here: a caller that runs both
+    frames owns the caching — persist that ``line_mentions`` frame first
+    (Spark's cache lookup substitutes it by plan) and unpersist it after
+    the last action, as `process_batch` does.
 
     ``index_bloom`` (a word table from operators.bloom covering the
     index's line hashes) short-circuits the index join for lines the
@@ -353,11 +361,8 @@ def gate_batch(
             F.coalesce(F.col(text_col), F.lit("")).alias(text_col),
         )
     )
-    batch_counts = (
-        mentions.where(F.col("h").isNotNull()).groupBy("h").agg(F.count("*").alias("df_batch"))
-    )
     updated = (
-        batch_counts.join(prior, "h", "full")
+        counts.join(prior, "h", "full")
         .select(
             "h",
             (
@@ -482,6 +487,11 @@ def process_batch(
     resolves by batch id, skipping any snapshot a crashed attempt of
     this very batch committed).
 
+    The batch's line mentions are exploded once: this function persists
+    them, every write below (docs, sketch, index snapshot, bloom) reads
+    that copy, and the ``finally`` releases it — on success or on a
+    crash mid-batch.
+
     ``sketch_dir`` adds per-batch telemetry (operators/sketches.py): a
     one-row mergeable sketch of the EMITTED documents lands under
     ``sketch_dir/batch=<id>`` (same dynamic-overwrite idempotence as the
@@ -499,56 +509,60 @@ def process_batch(
     spark = batch.sparkSession
     bid = int(batch_id)
     prior_bloom = load_bloom(spark, index_dir, before=bid) if use_bloom else None
-    deduped, updated = gate_batch(
-        batch,
-        index_df(spark, index_dir, before=bid),
-        id_col,
-        text_col,
-        min_df,
-        index_bloom=prior_bloom,
-    )
-    (
-        deduped.withColumn("batch", F.lit(bid))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch")
-        .parquet(out_dir)
-    )
-    if sketch_dir is not None:
-        from ..operators.sketches import write_batch_sketch
+    # gate_batch re-derives these mentions; Spark's cache lookup matches
+    # the identical plan, so every write below reads this one copy.
+    mentions = line_mentions(batch, id_col, text_col).persist()
+    try:
+        deduped, updated = gate_batch(
+            batch,
+            index_df(spark, index_dir, before=bid),
+            id_col,
+            text_col,
+            min_df,
+            index_bloom=prior_bloom,
+        )
+        (
+            deduped.withColumn("batch", F.lit(bid))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch")
+            .parquet(out_dir)
+        )
+        if sketch_dir is not None:
+            from ..operators.sketches import write_batch_sketch
 
-        # Telemetry of what this batch EMITTED; a retry recomputes the
-        # identical deduped frame and replaces its own partition.
-        write_batch_sketch(deduped, bid, sketch_dir, text_col=text_col)
-    # New snapshot reads the predecessor and stage-writes into a private
-    # _staging dir before the CAS rename — no read-under-write and no
-    # checkpoint materialization, and a crash mid-write leaves only an
-    # orphan staging dir (gc_staging's business), never a readable
-    # partial snapshot.
-    _commit_for_batch(spark, index_dir, updated, bid)
-    if use_bloom:
-        # No prior filter but the index may hold pre-flag history (flag
-        # enabled mid-stream, or a snapshot healed to None): build from
-        # the full updated index, not the batch alone — a batch-only
-        # filter saved as corpus coverage makes every later batch
-        # silently skip joins against the older corpus (ADVICE r9).
-        src = (
-            line_mentions(batch, id_col, text_col)
-            .where(F.col("h").isNotNull())
-            .select("h")
-            if prior_bloom is not None
-            else updated.select("h")
-        )
-        batch_words = build_bloom(
-            src.distinct(),
-            "h",
-            # Union compatibility: a filter is only OR-able with one of
-            # the same geometry, so inherit the prior's size.
-            num_bits=(len(prior_bloom) * 64) if prior_bloom else 1 << 24,
-        )
-        if prior_bloom is not None:
-            batch_words = [a | b for a, b in zip(prior_bloom, batch_words)]
-        _save_bloom(spark, index_dir, bid, batch_words)
+            # Telemetry of what this batch EMITTED; a retry recomputes the
+            # identical deduped frame and replaces its own partition.
+            write_batch_sketch(deduped, bid, sketch_dir, text_col=text_col)
+        # New snapshot reads the predecessor and stage-writes into a private
+        # _staging dir before the CAS rename — no read-under-write and no
+        # checkpoint materialization, and a crash mid-write leaves only an
+        # orphan staging dir (gc_staging's business), never a readable
+        # partial snapshot.
+        _commit_for_batch(spark, index_dir, updated, bid)
+        if use_bloom:
+            # No prior filter but the index may hold pre-flag history (flag
+            # enabled mid-stream, or a snapshot healed to None): build from
+            # the full updated index, not the batch alone — a batch-only
+            # filter saved as corpus coverage makes every later batch
+            # silently skip joins against the older corpus (ADVICE r9).
+            src = (
+                mentions.where(F.col("h").isNotNull()).select("h")
+                if prior_bloom is not None
+                else updated.select("h")
+            )
+            batch_words = build_bloom(
+                src.distinct(),
+                "h",
+                # Union compatibility: a filter is only OR-able with one of
+                # the same geometry, so inherit the prior's size.
+                num_bits=(len(prior_bloom) * 64) if prior_bloom else 1 << 24,
+            )
+            if prior_bloom is not None:
+                batch_words = [a | b for a, b in zip(prior_bloom, batch_words)]
+            _save_bloom(spark, index_dir, bid, batch_words)
+    finally:
+        mentions.unpersist()
     # Pruning happens inside _commit_for_batch: keep the newest snapshot
     # of the two highest BATCH ids. The predecessor must survive until
     # the checkpoint commits (a retry of this batch_id re-reads it);

@@ -217,7 +217,6 @@ SLOW: dict[str, object] = {
     },
     "test_takedown.py": {
         "test_takedown_partial_crash_heals",  # 25s
-        "test_takedown_reopens_duplicate_gate",  # 20s
     },
 }
 

@@ -13,7 +13,7 @@ import json
 import os
 
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from pyspark.sql import functions as F
 
@@ -122,6 +122,31 @@ def test_batch_ingest_routing(spark, area):
     assert {r["task_id"] for r in reg.collect()} == {"t-1"}
 
 
+def _parquet_files_per_leaf(root: str) -> dict[str, int]:
+    out = {}
+    for dirpath, _dirs, files in os.walk(root):
+        n = sum(f.endswith(".parquet") for f in files)
+        if n:
+            out[os.path.relpath(dirpath, root)] = n
+    return out
+
+
+def test_small_night_writes_one_file_per_leaf(spark, area):
+    """A small night is written from one right-sized partition: one
+    Parquet file per archive (filetype, nite, batch) leaf and per
+    registry nite partition, however many input splits the scan made."""
+    for i in range(10, 22):
+        _stage(area, f"DECam_{i:08d}.fits", f"EXPNUM = {i}\npayload".encode())
+    for i in range(4):
+        _stage(area, f"manifest_SN_Y{i}.json", b"{}")
+    cfg = _cfg(area)
+    assert ingest_batch(spark, cfg).archived == 18
+    archive = _parquet_files_per_leaf(cfg.archive_root)
+    assert len(archive) == 2 and set(archive.values()) == {1}, archive
+    registry = _parquet_files_per_leaf(cfg.registry_path)
+    assert set(registry.values()) == {1}, registry
+
+
 def test_reingest_is_idempotent(spark, area):
     cfg = _cfg(area)
     first = ingest_batch(spark, cfg)
@@ -169,16 +194,21 @@ def test_archive_exactly_once_on_crash_replay(spark, area):
     # clobber): re-present only new files by clearing the registry gate
     # for them is not possible here, so assert the token derivation
     # directly instead.
-    from dbbspark.streaming.ingest import _batch_token
+    from dbbspark.streaming.ingest import _batch_summary
 
+    schema = "data_name string, reject_reason string, filesize long"
     other = spark.createDataFrame(
-        [("zzz.fits",), ("aaa.fits",)], "data_name string"
+        [("zzz.fits", None, 1), ("aaa.fits", None, 1)], schema
     )
-    t_other = _batch_token(other)
-    t_same_reordered = _batch_token(
-        spark.createDataFrame([("aaa.fits",), ("zzz.fits",)], "data_name string")
-    )
+    t_other = _batch_summary(other)[0]
+    t_same_reordered = _batch_summary(
+        spark.createDataFrame([("aaa.fits", None, 1), ("zzz.fits", None, 1)], schema)
+    )[0]
+    t_split = _batch_summary(
+        spark.createDataFrame([("aaa.fits", None, 1), ("zzz.fits", REASON_DUPLICATE, 1)], schema)
+    )[0]
     assert t_other == t_same_reordered, "token must be order-independent"
+    assert t_split == t_other, "token must not depend on the reason split"
     assert t_other not in tok1
 
 
@@ -377,6 +407,22 @@ def test_config_source(spark, tmp_path):
     p = str(tmp_path / "x.cfg")
     _write(p, b"# comment\nNotify_Dir = /a/b\n\narchive = root\n")
     assert parse_config_text(spark, p) == {"notify_dir": "/a/b", "archive": "root"}
+
+
+def test_config_and_notify_read_invalid_utf8_like_python(spark, tmp_path):
+    """Invalid UTF-8 in a config or notify value reads as Python's
+    'replace' decode reads it: ``ED A0`` is two U+FFFD, not the one a
+    bare cast gives."""
+    from dbbspark.sources.notify import read_notify_dir
+
+    raw = b"key = a\xed\xa0b\n"
+    expected = {"key": "a\ufffd\ufffdb"}  # raw.decode("utf-8", "replace")
+    p = str(tmp_path / "bad.cfg")
+    _write(p, raw)
+    assert parse_config_text(spark, p) == expected
+    os.makedirs(tmp_path / "notify")
+    _write(str(tmp_path / "notify" / "x.fits.dbb"), raw)
+    assert read_notify_dir(spark, str(tmp_path / "notify")).collect()[0]["notify"] == expected
 
 
 def test_log_source_last_matching(spark, tmp_path):
@@ -626,6 +672,8 @@ _kv_file = st.lists(
 
 
 @given(files=st.lists(_kv_file, min_size=1, max_size=8))
+# a surrogate-half byte run: Python reads two U+FFFD, a bare cast one
+@example(files=[b"a=\xed\xa0\n"])
 @settings(max_examples=12, deadline=None)
 def test_sql_kv_lookup_matches_python_reference(spark, files):
     """Property: extract_kv_metadata's SQL lookup of each keyword equals

@@ -20,12 +20,11 @@ def plan_of(spark, sf_dir, name: str) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def plan_node_counts(df) -> Counter:
-    """Physical node class name -> occurrences in ``df``'s executed plan,
-    from a walk of the plan TREE (not its string). AQE-aware: the
-    adaptive root and query-stage wrappers are looked through, so the
-    counts are the same before and after adaptive execution starts."""
-    counts: Counter = Counter()
+def plan_nodes(df):
+    """The physical nodes of ``df``'s executed plan, from a walk of the
+    plan TREE (not its string). AQE-aware: the adaptive root and
+    query-stage wrappers are looked through, so the walk is the same
+    before and after adaptive execution starts."""
     stack = [df._jdf.queryExecution().executedPlan()]
     while stack:
         node = stack.pop()
@@ -36,10 +35,15 @@ def plan_node_counts(df) -> Counter:
         if name.endswith("QueryStageExec"):
             stack.append(node.plan())
             continue
-        counts[name] += 1
+        yield node
         children = node.children()
         stack.extend(children.apply(i) for i in range(children.size()))
-    return counts
+
+
+def plan_node_counts(df) -> Counter:
+    """Physical node class name -> occurrences in ``df``'s executed plan
+    (`plan_nodes`)."""
+    return Counter(node.getClass().getSimpleName() for node in plan_nodes(df))
 
 
 def test_equi_join_broadcasts_small_side(spark, sf_dir):
@@ -543,6 +547,12 @@ def test_classify_pairs_runs_no_python_worker(spark, tmp_path):
     ):
         (tmp_path / d).mkdir()
         (tmp_path / d / name).write_bytes(data)
+    # a registry that already lists the file (twice: duplicate rows are
+    # harmless to the gate)
+    spark.createDataFrame(
+        [("DECam_00000001.fits", "20260101"), ("DECam_00000001.fits", "20260102")],
+        "filename string, nite string",
+    ).write.partitionBy("nite").parquet(str(tmp_path / "registry"))
     cfg = IngestConfig(
         notify_dir=str(tmp_path / "notify"),
         delivery_dir=str(tmp_path / "delivery"),
@@ -555,7 +565,53 @@ def test_classify_pairs_runs_no_python_worker(spark, tmp_path):
         },
     )
     pairs = read_stagein_pairs(spark, cfg.notify_dir, cfg.delivery_dir)
-    nodes = plan_node_counts(classify_pairs(spark, cfg, pairs))
+    classified = classify_pairs(spark, cfg, pairs)
+    nodes = plan_node_counts(classified)
     python = {c: n for c, n in nodes.items() if "Python" in c or "InPandas" in c}
     assert python == {}, nodes
     assert nodes["UnionExec"] == 1, nodes
+    # the duplicate gate reads the registry through an IN-subquery: an
+    # existence join with no dedup aggregate and no shuffle of the
+    # registry (the pairing itself is all broadcast)
+    assert nodes["HashAggregateExec"] == 0 and nodes["ShuffleExchangeExec"] == 0, nodes
+    assert any(
+        "ExistenceJoin" in n.joinType().toString()
+        for n in plan_nodes(classified)
+        if n.getClass().getSimpleName().endswith("JoinExec")
+    ), nodes
+    assert [r["reject_reason"] for r in classified.collect()] == ["duplicate file"]
+
+
+def test_line_gate_writes_share_one_cached_mention_pass(spark, tmp_path, monkeypatch):
+    """process_batch explodes the batch into line mentions once: both of
+    its writes (gated docs, index snapshot) read the mentions from the
+    same InMemoryRelation and run no Generate of their own."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from dbbspark.streaming.linededup import process_batch
+
+    writes = []
+    parquet = DataFrameWriter.parquet
+
+    def capture(self, path, *args, **kwargs):
+        nodes = list(plan_nodes(self._df))
+        writes.append((
+            Counter(n.getClass().getSimpleName() for n in nodes),
+            {
+                spark._jvm.System.identityHashCode(n.relation().cacheBuilder())
+                for n in nodes
+                if n.getClass().getSimpleName() == "InMemoryTableScanExec"
+            },
+        ))
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", capture)
+    docs = [(i, f"nav home\nbody {i} text\n\nfooter") for i in range(6)]
+    index, out = str(tmp_path / "index"), str(tmp_path / "out")
+    for bid in (0, 1):
+        writes.clear()
+        process_batch(spark.createDataFrame(docs, "doc_id long, text string"), bid, index, out)
+        assert len(writes) == 2, writes
+        for counts, _ in writes:
+            assert counts["GenerateExec"] == 0 and counts["InMemoryTableScanExec"] >= 1, counts
+        assert len(set().union(*(rels for _, rels in writes))) == 1, writes
