@@ -104,11 +104,17 @@ def _chain_edges(spark):
 def _bpe_tokens(big):
     """Train 50 merges on the corpus word counts, then tokenize the
     corpus — the full tokenizer-fitting stage (train is K vocab-sized
-    aggregations; apply is the Arrow-batched encode)."""
+    aggregations on the distributed rounds; apply is the Arrow-batched
+    encode)."""
+    from unittest import mock
+
+    from dbbspark.operators import bpe as bpe_mod
     from dbbspark.operators.bpe import apply_bpe, train_bpe, word_counts
 
     wc = word_counts(big).localCheckpoint(eager=True)
-    merges = train_bpe(wc, 50)
+    # the vocab fits the driver bound; patch it to time the rounds
+    with mock.patch.object(bpe_mod, "DRIVER_VOCAB_LIMIT", 0):
+        merges = train_bpe(wc, 50)
     return apply_bpe(big, merges)
 
 
@@ -489,7 +495,9 @@ def _bpe_scale(spark, sf_dir: str) -> None:
     distinct hash-derived words under a Zipf-ish count law — enough
     pair diversity to sustain a production-depth merge schedule."""
     import time as _t
+    from unittest import mock
 
+    from dbbspark.operators import bpe as bpe_mod
     from dbbspark.operators.bpe import train_bpe
 
     wc = (
@@ -516,7 +524,8 @@ def _bpe_scale(spark, sf_dir: str) -> None:
     }))
 
     t0 = _t.time()
-    seq = train_bpe(wc, 50, batch_size=1, driver_vocab_limit=0)
+    with mock.patch.object(bpe_mod, "DRIVER_VOCAB_LIMIT", 0):
+        seq = train_bpe(wc, 50, batch_size=1)
     seq_sec = _t.time() - t0
     per_merge = seq_sec / max(len(seq), 1)
     print(json.dumps({
@@ -1486,12 +1495,7 @@ def main() -> None:
             budget=2048,
         ),
         # CC over the LSH candidate graph (~266k edges, 10-cliques):
-        # times the label-propagation loop itself on a big edge set
-        "connected_components": lambda: D.connected_components(
-            D.lsh_candidate_pairs_direct(big, "doc_id", "text"),
-            src="doc_a",
-            dst="doc_b",
-        ),
+        # times the distributed star rounds on a big edge set
         "connected_components_star": lambda: D.connected_components_star(
             D.lsh_candidate_pairs_direct(big, "doc_id", "text"),
             src="doc_a",
@@ -1505,15 +1509,9 @@ def main() -> None:
             src="doc_a",
             dst="doc_b",
         ),
-        # deep-graph crossover (VERDICT r3 item 6): 2000 chains of 33
-        # nodes — diameter 32, the shape where per-round min-label
-        # propagation pays O(diameter) shuffles and the star rounds pay
-        # O(log). Near-dup graphs are shallow cliques (where min-label
-        # wins); chained revisions are where the star variant is the
-        # right default.
-        "cc_chain_minlabel": lambda: D.connected_components(
-            _chain_edges(big.sparkSession), src="a", dst="b", max_iter=100
-        ),
+        # deep graph: 2000 chains of 33 nodes — diameter 32, where the
+        # star rounds pay O(log) shuffles (a per-round label loop would
+        # pay O(diameter))
         "cc_chain_star": lambda: D.connected_components_star(
             _chain_edges(big.sparkSession), src="a", dst="b", max_iter=100
         ),

@@ -191,11 +191,7 @@ def cmd_curate(args: argparse.Namespace) -> int:
         # dissimilar docs stay in the corpus instead of being deleted.
         from .operators.audit import cluster_purity
 
-        # counted driver regime (r12): dup-cluster membership is the
-        # same size class the CC/PageRank driver paths already bound
-        per_member, _ = cluster_purity(
-            docs, comps, driver_member_bound=200_000
-        )
+        per_member, _ = cluster_purity(docs, comps)
         dropped = per_member.where(
             F.col("jaccard") >= F.lit(args.purity_floor)
         ).select(F.col("member").alias("doc_id"))

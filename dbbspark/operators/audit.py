@@ -10,7 +10,7 @@ audit measures that before the delete:
 
 - per member: exact Jaccard between the member and its cluster
   REPRESENTATIVE (the min-id node — which is exactly the component
-  label min-label CC produces, and the doc `q_dedup_clusters`-style
+  label connected components produce, and the doc `q_dedup_clusters`-style
   policies keep);
 - per cluster: member count + min/avg member-to-rep Jaccard;
 - a `suspect` flag for members below a floor (the evidence for
@@ -18,9 +18,11 @@ audit measures that before the delete:
 
 Member-to-rep is LINEAR in corpus size (one comparison per member),
 not the O(cluster²) of all-pairs purity — the 100 TB-visitable version
-of the check. Shapes: one semi-join to restrict shingling to involved
-docs, one (component, shingle-hash) equi-join between member and rep
-mention streams, two aggregations. No posting arrays, no driver data.
+of the check. Distributed shape: one semi-join to restrict shingling to
+involved docs, one (component, shingle-hash) equi-join between member
+and rep mention streams, two aggregations, no posting arrays. A
+membership relation that fits the driver bound runs the same
+arithmetic on the driver instead.
 """
 
 from __future__ import annotations
@@ -28,7 +30,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions import sql_ident
+from ..session import collect_if_small
 from .dedup import shingle_hash_docs
+
+# Driver bound of `cluster_purity`, in membership rows — the same size
+# class as the dup-cluster graphs the CC driver regime takes.
+DRIVER_MEMBER_BOUND = 200_000
 
 
 def cluster_purity(
@@ -38,7 +45,6 @@ def cluster_purity(
     text_col: str = "text",
     shingle_n: int = 3,
     suspect_below: float = 0.5,
-    driver_member_bound: int = 0,
 ) -> tuple[DataFrame, DataFrame]:
     """(per_member, per_cluster) purity relations.
 
@@ -55,30 +61,30 @@ def cluster_purity(
     per-cluster min/avg count them and a purity-floor delete policy
     still drops genuinely identical short duplicates.
 
-    ``driver_member_bound > 0`` turns on the counted driver regime
-    (connected_components_adaptive's discipline, r12): when the
-    clustered-doc count fits the bound, the involved docs' shingle sets
-    collect to the driver (one semi-joined aggregation instead of the
-    six tiny-relation joins of the distributed plan — ~2.2 s of
-    shuffle-stage overhead at sf0.1 for a KB-scale audit) and the exact
-    same jaccard/identity arithmetic runs in python. Past the bound the
-    distributed plan runs unchanged — the 100 TB audit shape. Driver ≡
-    distributed pinned in tests/test_audit.py.
+    Size-adaptive through `session.collect_if_small`: when the
+    membership relation fits ``DRIVER_MEMBER_BOUND`` rows, the involved
+    docs' shingle sets collect to the driver (one semi-joined
+    aggregation instead of the six tiny-relation joins of the
+    distributed plan — ~2.2 s of shuffle-stage overhead at sf0.1 for a
+    KB-scale audit) and the exact same jaccard/identity arithmetic runs
+    in python. Past the bound the distributed plan runs unchanged — the
+    100 TB audit shape. Driver ≡ distributed pinned in
+    tests/test_audit.py.
     """
     comp = components.select(
         F.col("node").cast("long").alias("node"),
         F.col("component").cast("long").alias("component"),
     )
     involved = comp.select(F.col("node").alias(id_col)).distinct()
-    if driver_member_bound:
-        # COUNT before collecting (connected_components_adaptive's
-        # discipline): collecting first would pull the full membership
-        # relation to the driver unconditionally, OOMing exactly the
-        # large-graph case the bound exists to protect against.
-        if comp.count() <= driver_member_bound:
-            return _cluster_purity_driver(
-                docs, comp.collect(), id_col, text_col, shingle_n, suspect_below
-            )
+    pdf = collect_if_small(comp, DRIVER_MEMBER_BOUND)
+    if pdf is not None:
+        comp_rows = [
+            {"node": n, "component": c}
+            for n, c in zip(pdf["node"].tolist(), pdf["component"].tolist())
+        ]
+        return _cluster_purity_driver(
+            docs, comp_rows, id_col, text_col, shingle_n, suspect_below
+        )
     # distinct shingle hashes per involved doc + per-doc set size —
     # tuple-hashed without building shingle strings (r14; equality
     # classes identical, see shingle_hash_docs)
@@ -182,7 +188,7 @@ def member_rep_jaccard_map(
     shingle_n: int = 3,
 ) -> dict:
     """{member → exact member-to-rep jaccard} for pre-collected
-    (node, component) rows — the counted driver regime's core, shared
+    (node, component) rows — the driver regime's core, shared
     by `_cluster_purity_driver` and the q_dedup_clusters C50 fold
     (which already holds the component rows and fuses the result into
     one output frame instead of paying a join). ONE distributed job:
@@ -202,7 +208,7 @@ def member_rep_jaccard_map(
     # instead. Two projections so the token split evaluates once.
     from .dedup import shingles_from_tokens, tokens_col
 
-    # Small id sets (every counted-regime call by construction) restrict
+    # Small id sets (every driver-regime call by construction) restrict
     # via an IN-set predicate instead of the broadcast semi-join: the
     # filter PUSHES DOWN into the parquet scan (row-group stats + late
     # materialization prune the text column before it is read), where a
@@ -262,7 +268,7 @@ def member_rep_jaccard_map(
 def _cluster_purity_driver(
     docs, comp_rows, id_col, text_col, shingle_n, suspect_below
 ):
-    """Counted-bound fast path for `cluster_purity` — one job via
+    """Driver regime for `cluster_purity` — one job via
     `member_rep_jaccard_map`, then local assembly."""
     from pyspark.sql import types as T
 

@@ -17,7 +17,9 @@ distinct words, so:
   the chosen merge. The driver holds one row per round (the argmax
   pair), never data;
 - lineage is cut every few rounds (localCheckpoint) so round N doesn't
-  replay rounds 1..N-1 — same device as connected_components.
+  replay rounds 1..N-1 — same device as connected_components_star;
+- a vocab that fits ``DRIVER_VOCAB_LIMIT`` words skips the rounds: it
+  collects once (`session.collect_if_small`) and trains in memory.
 
 Application (`apply_bpe`) runs the learned merge ranks greedily per word
 inside an Arrow-batched pandas iterator with a per-batch word cache —
@@ -36,7 +38,7 @@ from collections.abc import Iterator
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from dbbspark.session import cut_lineage
+from dbbspark.session import collect_if_small, cut_lineage
 
 END_WORD = "▁"  # sentencepiece-style end-of-word marker
 
@@ -259,6 +261,11 @@ def _train_bpe_driver(
     return merges
 
 
+# Driver bound of `train_bpe`, in distinct words (~10⁶ words × ~20 B is
+# tens of MB on the driver): at or under it the merge loop runs in memory.
+DRIVER_VOCAB_LIMIT = 1_000_000
+
+
 def train_bpe(
     words: DataFrame,
     num_merges: int,
@@ -267,7 +274,6 @@ def train_bpe(
     count_col: str = "count",
     checkpoint_every: int = 8,
     batch_size: int = 32,
-    driver_vocab_limit: int = 1_000_000,
 ) -> list[tuple[str, str]]:
     """Learn an ordered BPE merge list from a (word, count) table.
 
@@ -275,15 +281,16 @@ def train_bpe(
     per merge is ~32k jobs for a production vocab, hours of pure
     scheduling):
 
-    - DRIVER regime (vocab fits ``driver_vocab_limit`` rows): the merge
+    - DRIVER regime (vocab fits ``DRIVER_VOCAB_LIMIT`` rows): the merge
       schedule depends only on the word-frequency table, which the one
       corpus-scale aggregation (`word_counts`) already reduced to vocab
-      size — so collect it once and run the exact incremental in-memory
-      trainer (`_train_bpe_driver`). 32k merges cost ZERO further Spark
-      jobs. This is the production-tokenizer shape: distributed count,
-      local merge loop. ~10⁶ words × ~20 B is tens of MB on the driver.
-    - DISTRIBUTED regime (vocab above the limit, or limit=0): per
-      ROUND, one vocab-sized pair-count aggregation, then fold in up to
+      size — so collect it once (`session.collect_if_small`, which
+      pulls at most 100 001 rows before deciding) and run the exact
+      incremental in-memory trainer (`_train_bpe_driver`). 32k merges
+      cost ZERO further Spark jobs. This is the production-tokenizer
+      shape: distributed count, local merge loop.
+    - DISTRIBUTED regime (vocab above the limit): per ROUND, one
+      vocab-sized pair-count aggregation, then fold in up to
       ``batch_size`` merges at once. `_select_safe_batch` picks the
       longest rank-prefix PROVABLY identical to the sequential merge
       sequence (symbol-disjointness + no-preexisting-merged-symbol + a
@@ -298,18 +305,18 @@ def train_bpe(
         raise ValueError("num_merges must be >= 1")
     if batch_size < 1:
         raise ValueError("batch_size must be >= 1")
-    if driver_vocab_limit and driver_vocab_limit > 0:
-        head = (
-            words.select(
-                F.col(word_col).cast("string"), F.col(count_col).cast("long")
-            )
-            .limit(driver_vocab_limit + 1)
-            .collect()
+    pdf = collect_if_small(
+        words.select(
+            F.col(word_col).cast("string").alias("w"),
+            F.col(count_col).cast("long").alias("c"),
+        ),
+        DRIVER_VOCAB_LIMIT,
+    )
+    if pdf is not None:
+        return _train_bpe_driver(
+            list(zip(pdf["w"].tolist(), pdf["c"].tolist())),
+            num_merges, min_pair_count,
         )
-        if len(head) <= driver_vocab_limit:
-            return _train_bpe_driver(
-                [(r[0], r[1]) for r in head], num_merges, min_pair_count
-            )
     syms = words.select(
         F.col(count_col).alias("count"),
         F.concat(

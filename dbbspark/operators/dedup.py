@@ -19,7 +19,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from dbbspark.functions import sql_ident
-from dbbspark.session import cut_lineage
+from dbbspark.session import collect_if_small, cut_lineage
 
 # 31-bit Mersenne prime for the Carter-Wegman permutations: with 28-bit
 # base hashes (7 md5 hex digits) and a,b < 2^31, a*h+b < 2^60 — no int64
@@ -709,45 +709,53 @@ def simhash(docs: DataFrame, id_col: str, text_col: str, bits: int = 32) -> Data
     return hs.select("doc", F.expr(terms).cast("bigint").alias("simhash"))
 
 
+# Driver bound of the size-adaptive graph operators, in edges:
+# `connected_components_adaptive` and `cluster_rank_adaptive` run on the
+# driver at or under it and delegate to the distributed formulations
+# past it. At this value the collected pandas edges take ≈32 MB and the
+# union-find's Python edge list ~0.2-0.4 GB (~100-200 B per tuple).
+DRIVER_EDGE_THRESHOLD = 2_000_000
+
+
 def connected_components_adaptive(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 50,
-    driver_edge_threshold: int = 2_000_000,
 ) -> DataFrame:
     """(node, component) with size-adaptive execution — the same
     small-side adaptivity AQE applies to joins, applied to the CC loop:
 
     The edge set reaching CC is the REDUCED relation (near-dup pairs
     after blocking/capping — orders of magnitude smaller than the
-    corpus). When its materialized count fits the driver bound
-    (``driver_edge_threshold`` edges ≈ 32 MB at the default), a single
-    O(E α(E)) union-find pass replaces 5-15 distributed rounds of 2-3
-    jobs each — measured 1.5 s → 0.1 s on the sf0.1 cluster query,
-    and the win GROWS with round count, not data. Past the bound it
-    delegates to the large-star/small-star formulation unchanged, so
-    the plan at 100 TB is exactly `connected_components_star`'s.
+    corpus). When it fits ``DRIVER_EDGE_THRESHOLD`` edges
+    (`session.collect_if_small` decides on the lineage-cut edge set), a
+    single O(E α(E)) union-find pass replaces 5-15 distributed rounds
+    of 2-3 jobs each — measured 1.5 s → 0.1 s on the sf0.1 cluster
+    query, and the win GROWS with round count, not data. Past the bound
+    it delegates to `connected_components_star` unchanged, so the plan
+    at 100 TB is exactly the star formulation's.
 
-    The count that picks the path comes from the same localCheckpoint
-    the distributed loop needs anyway — adaptivity costs zero extra
-    jobs. Identical output contract (component = min reachable id);
-    cross-checked against both distributed variants in tests."""
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .where(F.col(src) != F.col(dst))
-        .transform(cut_lineage, eager=True)
-    )
-    n_edges = e.count()
-    if n_edges > driver_edge_threshold:
-        return connected_components_star(e, "u", "v", max_iter)
-    rows = union_find_components(
-        (row["u"], row["v"]) for row in e.collect()
-    )
-    # schema follows the edge id type — node ids are longs for doc
-    # corpora but PATHS (strings) for the media keep-one chains
+    Contract, identical on both paths: every non-null id in ``edges``
+    gets a row; component = min reachable id; a node whose only edges
+    are self-loops or NULL-ended is its own component; NULL gets no
+    row. An edge with one NULL end is read as a self-loop on the other
+    end, so the collected relation never carries a NULL id."""
     from pyspark.sql import types as T
 
+    e = (
+        edges.select(
+            F.coalesce(src, dst).alias("u"), F.coalesce(dst, src).alias("v")
+        )
+        .where(F.col("u").isNotNull())
+        .transform(cut_lineage, eager=True)
+    )
+    pdf = collect_if_small(e, DRIVER_EDGE_THRESHOLD)
+    if pdf is None:
+        return connected_components_star(e, "u", "v", max_iter)
+    rows = union_find_components(zip(pdf["u"].tolist(), pdf["v"].tolist()))
+    # schema follows the edge id type — node ids are longs for doc
+    # corpora but PATHS (strings) for the media keep-one chains
     ntype = e.schema["u"].dataType
     schema = T.StructType(
         [T.StructField("node", ntype), T.StructField("component", ntype)]
@@ -757,10 +765,12 @@ def connected_components_adaptive(
 
 def union_find_components(pairs) -> list[tuple]:
     """[(node, component)] over an iterable of collected (a, b) pairs —
-    the O(E α(E)) union-find pass the counted driver regimes share
-    (`connected_components_adaptive` and `cluster_rank_adaptive`).
+    the O(E α(E)) union-find pass the driver regimes share
+    (`connected_components_adaptive` and `cluster_rank_adaptive`) and
+    the pure-Python reference the distributed CC is tested against.
     component = min reachable id, the same contract as the distributed
-    star formulation."""
+    star formulation; a self-loop (a, a) registers a as its own
+    component."""
     parent: dict = {}
 
     def find(x):
@@ -788,88 +798,55 @@ def cluster_rank_adaptive(
     dst: str = "doc_b",
     damping: float = 0.85,
     max_iter: int = 3,
-    driver_edge_threshold: int = 2_000_000,
-    with_local_rows: bool = False,
 ):
-    """(node, component, rank): connected components AND N-scaled
-    fixed-iteration PageRank over the symmetrized near-dup pair graph,
-    from ONE materialization of the reduced pair relation.
+    """(df, rows): connected components AND N-scaled fixed-iteration
+    PageRank over the symmetrized near-dup pair graph, from ONE
+    materialization of the reduced pair relation. ``df`` is
+    (node, component, rank) over every endpoint of a non-self-loop
+    pair.
 
     The composed form (connected_components_adaptive + graph.pagerank +
-    a join) pays the counted-driver machinery TWICE for the same
-    kilobyte-scale graph — two lineage cuts, two counts, two collects,
-    two createDataFrames, one join: ~1.3 s of pure driver round-trips
-    at sf0.1 against a graph that fits in L2. Here the small path
-    counts once, collects once, runs union-find and the shared
-    `pagerank_numpy` power iteration on the same edge list, and emits
-    ONE local DataFrame. Past ``driver_edge_threshold`` it delegates to
-    the unchanged distributed operators — the 100 TB plan is exactly
-    the star CC + per-round-shuffle PageRank composition, pinned
-    equivalent in tests/test_graph.py.
+    a join) pays the driver-regime machinery TWICE for the same
+    kilobyte-scale graph — two lineage cuts, two probes, two
+    createDataFrames, one join: ~1.3 s of pure driver round-trips at
+    sf0.1 against a graph that fits in L2. Here the small path probes
+    once (`session.collect_if_small`, bound ``DRIVER_EDGE_THRESHOLD``),
+    runs union-find and the shared `pagerank_numpy` power iteration on
+    the same edge list, and emits ONE local DataFrame. Past the bound
+    it delegates to the unchanged distributed operators — the 100 TB
+    plan is exactly the star CC + per-round-shuffle PageRank
+    composition, pinned equivalent in tests/test_graph.py.
+
+    ``rows`` is the small path's sorted local [(node, component, rank)]
+    list (None on the distributed path): driver-regime callers (the
+    q_dedup_clusters purity stratum) that need the rows anyway derive
+    them without re-collecting the local relation just built.
 
     PageRank semantics match q_dedup_clusters' historical call: the
     graph is symmetrized (both directions of each canonical a<b pair),
     so no dangling mass; tol=0 (exactly ``max_iter`` rounds — the
-    replayable mode the oracle unrolls); rank scaled by N (mean 1.0).
-
-    The path decision rides ONE bounded collect (r13): instead of a
-    count job followed by a collect job, the materialized edge set is
-    collected through ``limit(threshold + 1)`` — driver memory stays
-    bounded by the threshold exactly as before (≈32 MB of narrow rows
-    at the default), overflow discards the probe and delegates to the
-    distributed operators reading the same checkpoint, and the small
-    path saves a full driver round-trip per call.
-
-    ``with_local_rows=True`` returns ``(df, rows)`` where ``rows`` is
-    the small path's sorted local [(node, component, rank)] list (None
-    on the distributed path) — driver-regime callers (the
-    q_dedup_clusters purity stratum) that need the rows anyway then
-    derive them without re-collecting the local relation they just
-    built.
-
-    Probe memory (r14, ADVICE r13): the path decision is TWO-phase so
-    the distributed path never materializes threshold-many driver rows.
-    Phase 1 pulls at most ``small_probe_cap`` + 1 edges (Arrow
-    ``toPandas`` — two numeric columns, ~16 B/edge in pandas) — the
-    common case for counted-regime graphs, still one job. Only when
-    that overflows does a bounded ``limit(threshold+1).count()`` decide
-    between collecting the full edge set (now KNOWN ≤ threshold) and
-    delegating. The small path's Python edge list costs ~100-200 B/
-    tuple — ~0.2-0.4 GB at the 2 M default threshold, which is the
-    driver-regime price for O(E α(E)) union-find, not the probe's."""
+    replayable mode the oracle unrolls); rank scaled by N (mean 1.0)."""
     from pyspark.sql import types as T
 
     from .graph import pagerank, pagerank_numpy
 
-    small_probe_cap = min(100_000, driver_edge_threshold)
     e = (
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .where(F.col(src) != F.col(dst))
         .transform(cut_lineage, eager=True)
     )
-    ntype = e.schema["u"].dataType
-    schema = T.StructType([
-        T.StructField("node", ntype),
-        T.StructField("component", ntype),
-        T.StructField("rank", T.DoubleType()),
-    ])
-    pdf = e.limit(small_probe_cap + 1).toPandas()
-    if len(pdf) > small_probe_cap:
-        cnt = e.limit(driver_edge_threshold + 1).count()
-        if cnt > driver_edge_threshold:
-            del pdf
-            cc = connected_components_star(e, "u", "v")
-            edges = e.select(
-                F.col("u").alias("s"), F.col("v").alias("d")
-            ).union(e.select("v", "u"))
-            pr = pagerank(
-                edges, src="s", dst="d", damping=damping, max_iter=max_iter,
-                tol=0.0, assume_no_dangling=True, assume_distinct=True,
-                scaled=True,
-            )
-            out = cc.join(pr, "node").select("node", "component", "rank")
-            return (out, None) if with_local_rows else out
-        pdf = e.toPandas()
+    pdf = collect_if_small(e, DRIVER_EDGE_THRESHOLD)
+    if pdf is None:
+        cc = connected_components_star(e, "u", "v")
+        edges = e.select(
+            F.col("u").alias("s"), F.col("v").alias("d")
+        ).union(e.select("v", "u"))
+        pr = pagerank(
+            edges, src="s", dst="d", damping=damping, max_iter=max_iter,
+            tol=0.0, assume_no_dangling=True, assume_distinct=True,
+            scaled=True,
+        )
+        return cc.join(pr, "node").select("node", "component", "rank"), None
     und = list(zip(pdf["u"].tolist(), pdf["v"].tolist()))
     comp = dict(union_find_components(und))
     ranks = pagerank_numpy(
@@ -877,8 +854,13 @@ def cluster_rank_adaptive(
         scaled=True,
     )
     rows = sorted((n, c, ranks[n]) for n, c in comp.items())
-    out = e.sparkSession.createDataFrame(rows, schema)
-    return (out, rows) if with_local_rows else out
+    ntype = e.schema["u"].dataType
+    schema = T.StructType([
+        T.StructField("node", ntype),
+        T.StructField("component", ntype),
+        T.StructField("rank", T.DoubleType()),
+    ])
+    return e.sparkSession.createDataFrame(rows, schema), rows
 
 
 def connected_components_star(
@@ -888,20 +870,24 @@ def connected_components_star(
     max_iter: int = 50,
 ) -> DataFrame:
     """(node, component) via alternating large-star / small-star rounds —
-    the O(log² n)-round formulation for graphs whose DIAMETER is too big
-    for per-round label propagation (billions of edges, long chains;
+    the package's one distributed CC formulation: O(log² n) rounds
+    whatever the graph's DIAMETER (billions of edges, long chains;
     Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14). Same contract as `connected_components`: component = min
-    reachable node id; randomized cross-checked against it in
+    SoCC'14). Contract: every non-null id in ``edges`` gets a row,
+    component = min reachable node id, a self-loop-only node is its
+    own component, NULL gets no row — the same as
+    `connected_components_adaptive`'s driver regime, randomized
+    cross-checked against `union_find_components` in
     tests/test_operator_equivalence.py.
 
     Each round is one groupBy per star operation over the CURRENT edge
-    set (which only shrinks toward star graphs), with the same
-    localCheckpoint lineage cut and sum-based convergence the label loop
-    uses. Near-dup graphs are shallow, so the default `connected_components`
-    usually converges in fewer wall-clock rounds; prefer this variant when
-    components can be long paths (e.g. chained near-dup transitive
-    closures over timestamped revisions)."""
+    set (which only shrinks toward star graphs), with a lazy lineage
+    cut and a sum-based convergence check. Measured with bench_scale.py
+    at 10× sf0.1 (4 cores, best of 2) against a per-round min-label
+    loop: 5.3 s vs 18.5 s on a 2000×33 chain graph, 12.4 s vs 10.4 s
+    on the 266k-edge clique graph — where the adaptive operator's
+    driver regime takes 6.6 s, so the star rounds only run past the
+    driver bound."""
     sym = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .where(F.col(src) != F.col(dst))
@@ -947,81 +933,12 @@ def connected_components_star(
     members = e.select(F.col("u").alias("node"), F.col("v").alias("component"))
     # component roots and self-loop-only nodes appear in no final edge —
     # they are their own component (node set from the UNFILTERED input so
-    # self-loops still register the node).
+    # self-loops and NULL-ended edges still register their non-null ids).
     roots = (
         edges.select(F.explode(F.array(src, dst)).alias("node"))
+        .where(F.col("node").isNotNull())
         .distinct()
         .join(members.select("node"), "node", "left_anti")
         .select("node", F.col("node").alias("component"))
     )
     return members.unionByName(roots)
-
-
-def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 50,
-) -> DataFrame:
-    """(node, component) for every node in `edges`, where component = the
-    smallest node id reachable — the canonical-representative rule that
-    matches keep-lowest-key exact dedup.
-
-    Iterative min-label propagation: each round every node takes the min
-    of its own label and its neighbors' labels; converges in O(graph
-    diameter) rounds (near-dup graphs are shallow — clusters are cliques
-    or near-cliques, so typically 2-3 rounds). Each round is one shuffle
-    (join + groupBy); `localCheckpoint` truncates the growing lineage so
-    round N doesn't replay rounds 1..N-1. At billions of edges switch to
-    the large-star/small-star formulation (same primitive, fewer rounds).
-
-    The driver-side loop holds only a convergence counter — never data.
-    """
-    # Materialize the (symmetrized) edge set ONCE: every round's join
-    # would otherwise re-evaluate the upstream pair-generation pipeline
-    # (e.g. the full Jaccard blocking) — measured 5× slowdown. The edge
-    # set is the reduced data (near-dup pairs ≪ corpus), so this is small.
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .transform(cut_lineage, eager=True)
-    )
-    labels = (
-        sym.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        # lazy: the prev_sum aggregate below is the first action and
-        # materializes it — same one-job-per-step rule as the round loop.
-        .transform(cut_lineage, eager=False)
-    )
-    # Convergence check: labels only ever decrease, so sum(label) is
-    # strictly monotone until the fixpoint — one cheap aggregate per round
-    # instead of an old-vs-new join. No seed aggregate: the first round's
-    # sum initializes the comparison (saves one job per call; only a
-    # fully-converged input — every node a singleton — pays one extra
-    # round, and singletons don't reach this loop's input shape).
-    prev_sum = None
-    for _ in range(max_iter):
-        neigh = (
-            sym.join(labels, sym.b == labels.node)
-            .groupBy("a")
-            .agg(F.min("label").alias("nlabel"))
-        )
-        labels = (
-            labels.join(neigh, labels.node == neigh.a, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce("nlabel", F.col("label"))
-                ).alias("label"),
-            )
-            # LAZY checkpoint: the convergence aggregate right below is the
-            # round's first action and materializes it — one job per round
-            # instead of two (eager checkpoint + aggregate).
-            .transform(cut_lineage, eager=False)
-        )
-        new_sum = labels.agg(F.sum("label")).first()[0]
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    return labels.select("node", F.col("label").alias("component"))

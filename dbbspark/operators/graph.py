@@ -8,7 +8,7 @@ module provides distributed PageRank over an edge list — composes with
 `operators.urls.REGISTERED_DOMAIN_SQL` (build host edges from page links)
 and joins back onto documents as a quality prior.
 
-Spark mapping (same iterative discipline as dedup.connected_components):
+Spark mapping (same iterative discipline as dedup.connected_components_star):
 
 - one shuffle per power-iteration round (join ranks→edges, groupBy dst);
 - out-degrees computed ONCE and cached with the symmetrized edge set;
@@ -26,7 +26,6 @@ equivalence test checks against a dense numpy power iteration.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql import types as T
 
 from dbbspark.session import cut_lineage
 
@@ -39,7 +38,6 @@ def pagerank(
     max_iter: int = 30,
     tol: float = 1e-6,
     assume_no_dangling: bool = False,
-    driver_edge_bound: int = 0,
     assume_distinct: bool = False,
     scaled: bool = False,
 ) -> DataFrame:
@@ -58,21 +56,15 @@ def pagerank(
     (early exit would make the result depend on float convergence
     order). Together they cut 2 driver round-trips per iteration.
 
-    ``driver_edge_bound > 0`` turns on the size-adaptive regime
-    (connected_components_adaptive's discipline, operators/dedup.py):
-    if the distinct edge relation's COUNTED size fits the bound, the
-    whole iteration runs as one numpy power iteration on the driver —
-    identical arithmetic, no per-round shuffles (a dedup pair graph is
-    kilobytes; 30 Spark jobs for it is pure overhead) — while larger
-    graphs take the distributed plan unchanged. Driver ≡ distributed is
-    pinned in tests/test_graph.py.
-
     ``assume_distinct=True`` skips the de-duplicating exchange when the
     caller's edge list is unique by construction (e.g. both directions
     of a canonical a<b pair relation). ``scaled=True`` returns
     rank × N (mean 1.0 — the comparable-across-graph-sizes form) using
-    the N both regimes already hold, sparing callers a second node
-    count."""
+    the N the loop already holds, sparing callers a second node count.
+
+    A graph small enough for the driver takes `pagerank_numpy` on its
+    collected edges instead (dedup.cluster_rank_adaptive's small path);
+    the two are pinned equal in tests/test_graph.py."""
     if not 0.0 < damping < 1.0:
         raise ValueError("damping must be in (0, 1)")
     e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).where(
@@ -81,8 +73,6 @@ def pagerank(
     if not assume_distinct:
         e = e.distinct()
     e = e.transform(cut_lineage, eager=True)
-    if driver_edge_bound and e.count() <= driver_edge_bound:
-        return _pagerank_driver(e, damping, max_iter, tol, scaled)
     nodes = (
         e.select(F.col("s").alias("node"))
         .union(e.select(F.col("d").alias("node")))
@@ -153,8 +143,7 @@ def pagerank_numpy(
     scaled: bool = False,
 ) -> dict:
     """node → rank over a collected (src, dst) edge list — the numpy
-    power iteration both driver regimes share (`_pagerank_driver` here
-    and the fused small path of dedup.cluster_rank_adaptive). Identical
+    power iteration of dedup.cluster_rank_adaptive's small path. Identical
     arithmetic to the distributed loop; summation order differs only at
     float ulps (callers that value-compare round, as q_dedup_clusters
     does)."""
@@ -186,28 +175,6 @@ def pagerank_numpy(
     if scaled:
         ranks = ranks * float(n)
     return {nodes_l[i]: float(ranks[i]) for i in range(n)}
-
-
-def _pagerank_driver(
-    e: DataFrame, damping: float, max_iter: int, tol: float,
-    scaled: bool = False,
-) -> DataFrame:
-    """Counted-bound fast path: the SAME power iteration as the
-    distributed loop, on collected edges (``e`` is already distinct and
-    lineage-cut, so the collect re-reads a local checkpoint, not the
-    upstream DAG). Dangling mass and the tol early-exit follow the
-    distributed semantics exactly."""
-    rows = e.collect()
-    node_type = e.schema["s"].dataType
-    spark = e.sparkSession
-    schema = T.StructType([
-        T.StructField("node", node_type),
-        T.StructField("rank", T.DoubleType()),
-    ])
-    ranks = pagerank_numpy(
-        [(r["s"], r["d"]) for r in rows], damping, max_iter, tol, scaled
-    )
-    return spark.createDataFrame(sorted(ranks.items()), schema)
 
 
 def domain_rank_prior(

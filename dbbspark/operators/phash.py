@@ -895,7 +895,7 @@ def hamming_groups(
     cross-bucket edges survive because representative hashes are the
     bucket hashes. Note the usual CC caveat: components chain, so two
     members of one group can exceed ``max_distance`` from each other
-    (use `audit_clusters`/`cluster_purity` to verify before deleting,
+    (use `audit.cluster_purity` to verify before deleting,
     exactly as for text LSH clusters)."""
     hashes, reps, pairs = _rep_graph(df, id_col, hash_col, max_distance, bands)
     from .dedup import connected_components_adaptive
@@ -955,13 +955,17 @@ def _rep_graph(
     return hashes, reps, pairs
 
 
+# Driver bound of `hamming_ball_stats`, in distinct-hash reps: at or
+# under it the rep graph is banded and labelled on the driver.
+DRIVER_REP_THRESHOLD = 2_000_000
+
+
 def hamming_ball_stats(
     df: DataFrame,
     id_col: str,
     hash_col: str,
     max_distance: int = 6,
     bands: int | None = None,
-    driver_rep_threshold: int = 2_000_000,
     by_hash: bool = False,
 ) -> DataFrame:
     """(id, group, n_near, n_group): near-dup group label, Hamming-ball
@@ -983,9 +987,9 @@ def hamming_ball_stats(
     no row, same stance as `hamming_pairs`. All reduce steps run on
     rep-sized relations (distinct hashes), never on the row corpus.
 
-    Size-adaptive like `connected_components_adaptive`: when the rep
-    graph fits the driver bound (``driver_rep_threshold`` reps, with a
-    hot-bucket guard on the candidate volume), one O(R·bands + E α)
+    Size-adaptive through `session.collect_if_small`: when the
+    distinct-hash reps fit ``DRIVER_REP_THRESHOLD`` (with a hot-bucket
+    guard on the candidate volume), one O(R·bands + E α)
     dict-banding + union-find + weight pass over the collected reps
     replaces the distributed banding join, CC, and three rep-level
     joins — at small scale those are pure scheduler floor (~15 extra
@@ -1006,22 +1010,11 @@ def hamming_ball_stats(
     id-keyed output composed through the (id, hash) projection, NULL
     hashes absent from both; pinned in tests/test_phash.py."""
     hashes, reps, pairs = _rep_graph(df, id_col, hash_col, max_distance, bands)
-    from ..session import cut_lineage
+    from ..session import collect_if_small, cut_lineage
 
-    # r14 (the cluster_rank_adaptive two-phase device): ONE bounded
-    # Arrow probe decides the common case — limit(cap+1).toPandas()
-    # both materializes the lineage-cut reps AND ships them when they
-    # fit, replacing the r9-r13 count job + collect job. Only an
-    # overflowing probe pays the count, and the distributed regime
-    # never materializes threshold-many driver rows (ADVICE r9's
-    # original complaint stays fixed).
-    cap = min(100_000, driver_rep_threshold)
-    pdf = reps.limit(cap + 1).toPandas()
-    if len(pdf) > cap:
-        if reps.limit(driver_rep_threshold + 1).count() <= driver_rep_threshold:
-            pdf = reps.toPandas()
-        else:
-            pdf = None
+    # the probe both materializes the lineage-cut reps AND ships them
+    # when they fit — one job in the common case
+    pdf = collect_if_small(reps, DRIVER_REP_THRESHOLD)
     if pdf is not None:
         rep_rows = [
             {"_ph": a, "_rep": b, "_cnt": c}
@@ -1224,7 +1217,7 @@ def phash_near_dup(
     """End-to-end perceptual near-dup: decode → thumbnail → 64-bit hash
     (dhash/ahash for images, energy-delta for wav) → Hamming-ball pairs.
     Feed the result to `connected_components_adaptive` for clusters and
-    `audit_clusters` for purity — the text-dedup machinery applies
+    `audit.cluster_purity` for purity — the text-dedup machinery applies
     unchanged."""
     hash_fn = {
         "dhash": dhash_col,

@@ -115,8 +115,8 @@ def leakage_safe_split(
     """Train/validation split that cannot leak near-duplicates across
     the boundary: the split coin is flipped per GROUP (domain, source,
     or — strongest — the near-dup component id from
-    `connected_components`), never per document, so every member of a
-    group lands on the same side.
+    `connected_components_adaptive`), never per document, so every
+    member of a group lands on the same side.
 
     A per-document split looks fine at fixture scale but is the classic
     eval-contamination bug at corpus scale: web crawls hold the same

@@ -37,7 +37,7 @@ closes that gap Spark-first, reusing every proven piece:
 
 Downstream, scored pairs feed the SAME machinery every other dedup
 family uses: C12 `connected_components_adaptive` for clusters, C50
-`audit_clusters` for purity before deletion.
+`cluster_purity` for purity before deletion.
 
 The container is concatenated binary netpbm (``pnmseq``) — a real
 public format (the netpbm spec allows back-to-back images) whose frames
@@ -219,7 +219,7 @@ def video_near_dup(
     neither pair nor dilute scores (see `score_clip_pairs`).
 
     Feed the pairs to `connected_components_adaptive` for clusters and
-    `audit_clusters` before keep-one deletion, exactly as for text LSH
+    `audit.cluster_purity` before keep-one deletion, exactly as for text LSH
     and still-image near-dup; group all-degenerate clips separately
     with `degenerate_clip_groups`."""
     if not 0.0 < min_frac <= 1.0:

@@ -315,12 +315,12 @@ def q_embed_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Training-pipeline closure: near-dup CLUSTERING — Jaccard pairs → "
     "connected components → canonical representative (min doc id per "
     "component, consistent with keep-first exact dedup). Spark side is "
-    "cluster_rank_adaptive (operators/dedup.py, r12): ONE materialized "
-    "count of the REDUCED pair relation picks the path — driver-safe "
-    "edge sets take one collect feeding BOTH the O(E α(E)) union-find "
-    "pass and the numpy 3-iteration power method (the composed "
-    "operators paid the counted-driver machinery twice and breached "
-    "the 2.5 s fold budget), larger ones delegate unchanged to the "
+    "cluster_rank_adaptive (operators/dedup.py, r12): ONE bounded probe "
+    "of the REDUCED pair relation (session.collect_if_small) picks the "
+    "path — driver-safe edge sets are collected once, feeding BOTH the "
+    "O(E α(E)) union-find pass and the numpy 3-iteration power method "
+    "(the composed operators paid the driver-regime machinery twice and "
+    "breached the 2.5 s fold budget), larger ones delegate unchanged to the "
     "large-star/small-star formulation (Kiveris et al. SoCC'14, "
     "O(log²) rounds regardless of diameter) + per-round-shuffle "
     "PageRank, so the 100 TB plan is exactly the distributed "
@@ -336,7 +336,7 @@ def q_embed_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "rounded to 4 so both engines' float accumulation orders agree — "
     "the dup-graph centrality signal for representative selection. "
     "FOLDED C50 (r13, VERDICT r12 item 2): `purity_j` runs the "
-    "dedup-cluster purity audit's counted driver core "
+    "dedup-cluster purity audit's driver-regime core "
     "(operators/audit.py member_rep_jaccard_map — the exact "
     "member-to-rep shingle-set Jaccard with the both-empty short-doc "
     "identity rule) over a deterministic 25% portable-md5 member "
@@ -345,7 +345,7 @@ def q_embed_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "full-audit fold read 3.2-4.0 s and was reverted; the stratum plus "
     "the audit's r13 IN-set scan pushdown fit the budget). The stratum "
     "is bounded driver state by construction; the unbounded audit "
-    "remains the operator's own counted/distributed regime. "
+    "remains the operator's own driver/distributed regime. "
     "FOLDED C22 (r10): `is_val` is operators/scrub.py leakage_safe_split "
     "keyed on the COMPONENT — the whole near-dup cluster lands on one "
     "side of train/val (the eval-contamination guard), via the salted "
@@ -361,28 +361,27 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # fused adaptive regime (r12): ONE materialization + collect of the
     # reduced pair graph feeds union-find CC and the numpy 3-iteration
-    # PageRank together; the composed operators paid the counted-driver
+    # PageRank together; the composed operators paid the driver-regime
     # machinery twice (~1.3 s of driver round-trips for a KB graph) and
-    # breached the 2.5 s fold budget. Past the counted bound the fused
+    # breached the 2.5 s fold budget. Past the driver bound the fused
     # operator delegates to the unchanged distributed composition.
     # (A C50 purity fold was prototyped here in r12 and REVERTED: even
-    # through the counted driver regime its extra scan+shingle job put
+    # through the driver regime its extra scan+shingle job put
     # the row at 3.2-4.0 s against the 2.5 s budget — C50 remains
     # pytest-verified via operators/audit.py, whose driver regime the
     # prototype contributed.)
     ranked, local_rows = D.cluster_rank_adaptive(
-        pairs, src="doc_a", dst="doc_b", damping=0.85, max_iter=3,
-        with_local_rows=True,
+        pairs, src="doc_a", dst="doc_b", damping=0.85, max_iter=3
     )
     # C50 fold (r13): member-to-rep purity on a deterministic 25%
-    # portable-md5 member stratum, through the audit's counted driver
+    # portable-md5 member stratum, through the audit's driver-regime
     # core (one IN-set-pushdown scan + python Jaccard — the arithmetic
     # the distributed audit plan shares). On the driver regime the
     # stratum gate runs in PYTHON over the rows the fused operator just
     # collected (md5_int_py ≡ MD5_INT_SPARK_SQL, pinned in tests/test_dedup)
     # — zero extra Spark jobs; the distributed path keeps the bounded
     # stratum collect (25% of non-rep members, driver-safe by the same
-    # argument as the audit's counted regime).
+    # argument as the audit's driver regime).
     from ..operators.audit import member_rep_jaccard_map
     from ..operators.dedup import MD5_INT_SPARK_SQL, md5_int_py
 

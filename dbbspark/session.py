@@ -146,6 +146,35 @@ def cut_lineage(df, eager: bool = False, replicated: bool = False):
     return df.checkpoint(eager=eager)
 
 
+def collect_if_small(df, bound: int):
+    """``df``'s rows as a pandas frame, or None when ``df`` has more than
+    ``bound`` rows — the package's one driver-vs-distributed decision.
+
+    Every size-adaptive operator (CC, cluster rank, Hamming-ball stats,
+    cluster purity, BPE training) runs its driver regime on the frame
+    this returns and its distributed plan on None, so the bound is the
+    only thing that differs between them. The small case evaluates
+    ``df`` once; an overflowing probe evaluates it again for the count
+    (and a third time for the full collect), so callers cut an
+    expensive upstream first.
+
+    Probe memory: the decision is TWO-phase so the distributed path
+    never materializes bound-many driver rows. Phase 1 pulls at most
+    min(100 000, bound) + 1 rows through Arrow ``toPandas`` (narrow
+    numeric rows cost ~16 B/row in pandas) — the common small case,
+    one job. Only when that overflows does a bounded
+    ``limit(bound + 1).count()`` decide between collecting the full
+    relation (now KNOWN ≤ bound) and returning None."""
+    cap = min(100_000, bound)
+    pdf = df.limit(cap + 1).toPandas()
+    if len(pdf) <= cap:
+        return pdf
+    del pdf
+    if df.limit(bound + 1).count() > bound:
+        return None
+    return df.toPandas()
+
+
 def _ship_package(spark: SparkSession) -> None:
     """Distribute the dbbspark package to Python workers via addPyFile.
 

@@ -251,8 +251,7 @@ def stages_dedup_clusters(spark):
         # its jobs at call time — time the call, emit a dummy frame
         t0 = time.perf_counter()
         ranked, local_rows = D.cluster_rank_adaptive(
-            pairs(), src="doc_a", dst="doc_b", damping=0.85, max_iter=3,
-            with_local_rows=True,
+            pairs(), src="doc_a", dst="doc_b", damping=0.85, max_iter=3
         )
         print(f"    [cluster_rank_adaptive call: "
               f"{time.perf_counter() - t0:.3f}s rows="
@@ -264,8 +263,7 @@ def stages_dedup_clusters(spark):
         from dbbspark.operators.dedup import md5_int_py
 
         _ranked, local_rows = D.cluster_rank_adaptive(
-            pairs(), src="doc_a", dst="doc_b", damping=0.85, max_iter=3,
-            with_local_rows=True,
+            pairs(), src="doc_a", dst="doc_b", damping=0.85, max_iter=3
         )
         stratum = [
             (n, c)

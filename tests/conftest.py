@@ -118,7 +118,6 @@ SLOW: dict[str, object] = {
     },
     "test_checkpoint_seam.py": {
         "test_reliable_checkpoint_survives_executor_kill",  # 26s
-        "test_flip_produces_identical_results_and_writes_blocks",  # 14s
     },
     "test_cli_quality.py": {
         "test_nightly_ops_script_composes_monitor_scrub_profile",  # 328s

@@ -2,7 +2,30 @@
 
 from __future__ import annotations
 
+import pytest
+
+import dbbspark.operators.audit as audit_mod
 from dbbspark.operators.audit import cluster_purity
+
+
+def _rounded(df):
+    return sorted(
+        tuple(round(v, 9) if isinstance(v, float) else v for v in r)
+        for r in df.collect()
+    )
+
+
+def _purity(docs, comps, **kwargs):
+    """cluster_purity on both regimes: the driver regime these small
+    inputs take and the distributed plan (DRIVER_MEMBER_BOUND patched
+    to 0) must agree row-for-row; returns the driver regime's frames."""
+    out = cluster_purity(docs, comps, **kwargs)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(audit_mod, "DRIVER_MEMBER_BOUND", 0)
+        dist = cluster_purity(docs, comps, **kwargs)
+    for got, want in zip(out, dist):
+        assert _rounded(got) == _rounded(want)
+    return out
 
 
 def _jac(a, b, n=3):
@@ -27,7 +50,7 @@ def test_transitive_overmerge_flagged(spark):
     comps = spark.createDataFrame(
         [(1, 1), (2, 1), (3, 1)], "node long, component long"
     )
-    per_member, per_cluster = cluster_purity(docs, comps, suspect_below=0.3)
+    per_member, per_cluster = _purity(docs, comps, suspect_below=0.3)
     pm = {r["member"]: r for r in per_member.collect()}
     assert abs(pm[2]["jaccard"] - _jac(a, b)) < 1e-9
     assert abs(pm[3]["jaccard"] - _jac(a, c)) < 1e-9
@@ -45,7 +68,7 @@ def test_identical_docs_perfect_purity(spark):
     comps = spark.createDataFrame(
         [(10, 10), (11, 10), (12, 10)], "node long, component long"
     )
-    per_member, per_cluster = cluster_purity(docs, comps)
+    per_member, per_cluster = _purity(docs, comps)
     assert all(r["jaccard"] == 1.0 for r in per_member.collect())
     [pc] = per_cluster.collect()
     assert pc["min_jaccard"] == 1.0 and pc["n_suspect"] == 0
@@ -61,7 +84,7 @@ def test_singletons_absent_and_multiple_clusters(spark):
     comps = spark.createDataFrame(
         [(1, 1), (2, 1), (5, 5)], "node long, component long"
     )
-    per_member, per_cluster = cluster_purity(docs, comps)
+    per_member, per_cluster = _purity(docs, comps)
     assert {r["component"] for r in per_cluster.collect()} == {1}
     assert per_member.count() == 1
 
@@ -80,7 +103,7 @@ def test_end_to_end_with_real_clustering(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     pairs = lsh_candidate_pairs_direct(docs, "doc_id", "text")
     comps = connected_components_adaptive(pairs, "doc_a", "doc_b")
-    per_member, per_cluster = cluster_purity(docs, comps)
+    per_member, per_cluster = _purity(docs, comps)
     rows_pc = per_cluster.collect()
     assert rows_pc, "replicated docs must cluster"
     # near-identical family: purity high everywhere
@@ -101,7 +124,7 @@ def test_short_docs_scored_by_text_identity_not_null(spark):
     comps = spark.createDataFrame(
         [(1, 1), (2, 1), (3, 1)], "node long, component long"
     )
-    per_member, per_cluster = cluster_purity(docs, comps, shingle_n=3)
+    per_member, per_cluster = _purity(docs, comps, shingle_n=3)
     pm = {r["member"]: r for r in per_member.collect()}
     assert pm[2]["jaccard"] == 1.0 and pm[2]["suspect"] is False
     assert pm[3]["jaccard"] == 0.0 and pm[3]["suspect"] is True
@@ -111,7 +134,7 @@ def test_short_docs_scored_by_text_identity_not_null(spark):
 
 
 def test_cluster_purity_driver_matches_distributed(spark):
-    """The counted driver regime (r12) must equal the distributed plan
+    """The driver regime must equal the distributed plan
     row-for-row — including the both-empty short-doc identity rule and
     singleton clusters (absent from per_member on both paths)."""
     from dbbspark.operators.audit import cluster_purity
@@ -132,15 +155,15 @@ def test_cluster_purity_driver_matches_distributed(spark):
         [(1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (12, 10), (99, 99)],
         "node long, component long",
     )
-    dist = {
-        (r["component"], r["member"]): (round(r["jaccard"], 9), r["suspect"])
-        for r in cluster_purity(docs, comps)[0].collect()
-    }
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(audit_mod, "DRIVER_MEMBER_BOUND", 0)
+        dist = {
+            (r["component"], r["member"]): (round(r["jaccard"], 9), r["suspect"])
+            for r in cluster_purity(docs, comps)[0].collect()
+        }
     drv = {
         (r["component"], r["member"]): (round(r["jaccard"], 9), r["suspect"])
-        for r in cluster_purity(docs, comps, driver_member_bound=1000)[
-            0
-        ].collect()
+        for r in cluster_purity(docs, comps)[0].collect()
     }
     assert dist == drv
     assert (10, 11) in drv and drv[(10, 11)][0] == 1.0  # identical short
@@ -163,21 +186,21 @@ def test_driver_regime_missing_doc_nodes_score_zero(spark):
     comps = spark.createDataFrame(
         [(1, 1), (2, 1), (7, 7), (8, 7)], "node long, component long"
     )
-    for kwargs in ({}, {"driver_member_bound": 1000}):
-        pm = {
-            r["member"]: r
-            for r in cluster_purity(docs, comps, **kwargs)[0].collect()
-        }
-        assert pm[8]["jaccard"] == 0.0 and pm[8]["suspect"] is True, kwargs
+    for bound in (0, 1000):
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(audit_mod, "DRIVER_MEMBER_BOUND", bound)
+            pm = {
+                r["member"]: r
+                for r in cluster_purity(docs, comps)[0].collect()
+            }
+        assert pm[8]["jaccard"] == 0.0 and pm[8]["suspect"] is True, bound
 
 
 def test_driver_member_bound_counts_before_collecting(spark):
     """Regression (ADVICE r12 medium): a membership relation LARGER
-    than ``driver_member_bound`` must take the distributed plan without
+    than ``DRIVER_MEMBER_BOUND`` must take the distributed plan without
     ever entering the driver regime (the old code collected the full
     relation first, defeating the bound's OOM protection)."""
-    import dbbspark.operators.audit as audit_mod
-
     docs = spark.createDataFrame(
         [(i, f"tok{i} alpha beta gamma delta common tail") for i in range(12)],
         "doc_id long, text string",
@@ -190,14 +213,11 @@ def test_driver_member_bound_counts_before_collecting(spark):
     def trap(*a, **k):  # pragma: no cover - failure path
         raise AssertionError("driver regime entered past the bound")
 
-    audit_mod._cluster_purity_driver = trap
-    try:
-        per_member, _ = audit_mod.cluster_purity(
-            docs, comps, driver_member_bound=3
-        )
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(audit_mod, "_cluster_purity_driver", trap)
+        mp.setattr(audit_mod, "DRIVER_MEMBER_BOUND", 3)
+        per_member, _ = audit_mod.cluster_purity(docs, comps)
         assert per_member.count() == 11  # 12 nodes minus the rep
-    finally:
-        audit_mod._cluster_purity_driver = orig
     # and under the bound it still routes to the driver regime
     called = {}
 
@@ -205,9 +225,8 @@ def test_driver_member_bound_counts_before_collecting(spark):
         called["yes"] = True
         return orig(*a, **k)
 
-    audit_mod._cluster_purity_driver = probe
-    try:
-        audit_mod.cluster_purity(docs, comps, driver_member_bound=100)[0].count()
-    finally:
-        audit_mod._cluster_purity_driver = orig
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(audit_mod, "_cluster_purity_driver", probe)
+        mp.setattr(audit_mod, "DRIVER_MEMBER_BOUND", 100)
+        audit_mod.cluster_purity(docs, comps)[0].count()
     assert called.get("yes")

@@ -23,6 +23,15 @@ CORPUS = [
 ]
 
 
+def _train_distributed(*args, **kwargs):
+    """train_bpe forced onto the distributed rounds (vocab bound 0)."""
+    import dbbspark.operators.bpe as bpe_mod
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(bpe_mod, "DRIVER_VOCAB_LIMIT", 0)
+        return train_bpe(*args, **kwargs)
+
+
 def _reference_bpe(words: dict[str, int], num_merges: int, min_pair_count: int = 2):
     """Sennrich-style reference trainer: count adjacent pairs weighted by
     word frequency, merge the (count desc, pair asc) argmax."""
@@ -126,11 +135,11 @@ def test_batched_equals_sequential_on_corpus(spark, docs):
     sequential merge list — batching is a scheduling optimization, never
     a semantic one."""
     wc = word_counts(docs)
-    seq = train_bpe(wc, 20, batch_size=1, driver_vocab_limit=0)
+    seq = _train_distributed(wc, 20, batch_size=1)
     # driver regime (default): same list, zero per-merge Spark jobs
     assert train_bpe(wc, 20) == seq
     for bs in (2, 4, 32):
-        got = train_bpe(wc, 20, batch_size=bs, driver_vocab_limit=0)
+        got = _train_distributed(wc, 20, batch_size=bs)
         assert got == seq, f"batch_size={bs}"
 
 
@@ -158,9 +167,7 @@ def test_batched_equals_sequential_adversarial(spark):
         seq = _reference_bpe(words, 12, min_pair_count=1)
         assert train_bpe(wc, 12, min_pair_count=1) == seq, f"corpus#{i} driver"
         for bs in (2, 3, 8):
-            got = train_bpe(
-                wc, 12, min_pair_count=1, batch_size=bs, driver_vocab_limit=0
-            )
+            got = _train_distributed(wc, 12, min_pair_count=1, batch_size=bs)
             assert got == seq, f"corpus#{i} batch_size={bs}"
 
 
@@ -185,9 +192,7 @@ def test_batched_equals_sequential_random(spark):
             train_bpe(wc, 15, min_pair_count=1) == seq
         ), f"trial={trial} driver words={words}"
         for bs in (4, 16):
-            got = train_bpe(
-                wc, 15, min_pair_count=1, batch_size=bs, driver_vocab_limit=0
-            )
+            got = _train_distributed(wc, 15, min_pair_count=1, batch_size=bs)
             assert got == seq, f"trial={trial} bs={bs} words={words}"
 
 
@@ -195,7 +200,7 @@ def test_driver_regime_runs_no_per_merge_jobs(spark, docs):
     """The scaling contract (VERDICT r5 item 2): below the vocab limit
     the merge loop runs ONCE on the driver — `_select_safe_batch` (the
     distributed round machinery) is never entered, however many merges
-    are requested. Above the limit (forced via driver_vocab_limit=0) the
+    are requested. Above the limit (forced via DRIVER_VOCAB_LIMIT=0) the
     distributed rounds run, batched, with the identical result."""
     import dbbspark.operators.bpe as bpe_mod
 
@@ -211,7 +216,7 @@ def test_driver_regime_runs_no_per_merge_jobs(spark, docs):
     try:
         driver_merges = train_bpe(wc, 40)
         assert calls["n"] == 0  # zero distributed rounds in driver regime
-        dist_merges = train_bpe(wc, 40, driver_vocab_limit=0)
+        dist_merges = _train_distributed(wc, 40)
         assert calls["n"] > 0
     finally:
         bpe_mod._select_safe_batch = orig
@@ -248,12 +253,5 @@ def test_tiebreak_consistent_with_control_chars(spark):
     wc = spark.createDataFrame(list(words.items()), "word string, count long")
     want = _reference_bpe(words, 8, min_pair_count=1)
     assert train_bpe(wc, 8, min_pair_count=1) == want
-    assert (
-        train_bpe(wc, 8, min_pair_count=1, driver_vocab_limit=0) == want
-    )
-    assert (
-        train_bpe(
-            wc, 8, min_pair_count=1, batch_size=1, driver_vocab_limit=0
-        )
-        == want
-    )
+    assert _train_distributed(wc, 8, min_pair_count=1) == want
+    assert _train_distributed(wc, 8, min_pair_count=1, batch_size=1) == want

@@ -231,8 +231,7 @@ def test_dedup_clusters_fused_local_assembly_matches_composed(spark, sf_dir):
     pairs = D.jaccard_pairs(docs, "doc_id", "text", shingle_n=3,
                             threshold=0.5, max_df=1000)
     ranked, local_rows = D.cluster_rank_adaptive(
-        pairs, src="doc_a", dst="doc_b", damping=0.85, max_iter=3,
-        with_local_rows=True,
+        pairs, src="doc_a", dst="doc_b", damping=0.85, max_iter=3
     )
     assert local_rows is not None  # fixture graphs take the driver path
     stratum = [(n, c) for n, c, _r in local_rows
@@ -283,4 +282,27 @@ def test_md5_int_formula_defined_once():
             if path == home and fn.lineno <= line <= fn.end_lineno:
                 continue
             hits.append(f"{path.relative_to(pkg.parent)}:{line}")
+    assert not hits, hits
+
+
+def test_driver_regime_decided_once():
+    """The driver-vs-distributed decision has one definition,
+    session.collect_if_small: no bounded collect (``.limit(<n> + 1)``)
+    and no count-based path decision (``.count() <=`` / ``>``) may
+    appear in the operators or queries. (monitor's raise-on-overflow
+    guard lives outside both packages and decides no path.)"""
+    import pathlib
+    import re
+
+    probe = re.compile(
+        r"\.limit\([^()]*\+\s*1\s*\)|\.count\(\)\s*(?:<=|>=|<|>)"
+    )
+    pkg = pathlib.Path(D.__file__).resolve().parents[1]
+    hits = []
+    for sub in ("operators", "queries"):
+        for path in sorted((pkg / sub).rglob("*.py")):
+            text = path.read_text()
+            for m in probe.finditer(text):
+                line = text.count("\n", 0, m.start()) + 1
+                hits.append(f"{path.relative_to(pkg.parent)}:{line}")
     assert not hits, hits

@@ -77,22 +77,20 @@ def test_damping_validation(spark):
 
 
 def test_driver_regime_matches_distributed(spark):
-    """r10 adaptive regime: under driver_edge_bound the numpy fast path
-    must agree with the distributed loop (same dangling/teleport/tol
-    semantics — GRAPH includes a dangling node), and the fixed-iteration
-    eliders (tol=0, assume_no_dangling on a symmetrized graph) must not
-    change values."""
+    """The driver power iteration (`pagerank_numpy`, cluster_rank_adaptive's
+    small path) must agree with the distributed loop (same dangling/
+    teleport/tol semantics — GRAPH includes a dangling node), and the
+    fixed-iteration eliders (tol=0, assume_no_dangling and
+    assume_distinct on a symmetrized graph, scaled) must not change
+    values."""
+    from dbbspark.operators.graph import pagerank_numpy
+
     edges = spark.createDataFrame(GRAPH, "src long, dst long")
     dist = {
         r["node"]: r["rank"]
         for r in pagerank(edges, max_iter=7, tol=0.0).collect()
     }
-    drv = {
-        r["node"]: r["rank"]
-        for r in pagerank(
-            edges, max_iter=7, tol=0.0, driver_edge_bound=10_000
-        ).collect()
-    }
+    drv = pagerank_numpy(GRAPH, 0.85, 7, tol=0.0)
     assert set(dist) == set(drv)
     for node in dist:
         assert dist[node] == pytest.approx(drv[node], abs=1e-12)
@@ -107,16 +105,18 @@ def test_driver_regime_matches_distributed(spark):
         r["node"]: r["rank"]
         for r in pagerank(sym, max_iter=5, tol=0.0).collect()
     }
-    for bound in (0, 10_000):
-        fast = {
-            r["node"]: r["rank"]
-            for r in pagerank(
-                sym, max_iter=5, tol=0.0, assume_no_dangling=True,
-                assume_distinct=True, scaled=True, driver_edge_bound=bound,
-            ).collect()
-        }
-        for node in base_r:
-            assert fast[node] == pytest.approx(base_r[node] * n, abs=1e-9)
+    fast = {
+        r["node"]: r["rank"]
+        for r in pagerank(
+            sym, max_iter=5, tol=0.0, assume_no_dangling=True,
+            assume_distinct=True, scaled=True,
+        ).collect()
+    }
+    sym_pairs = GRAPH + [(d, s) for s, d in GRAPH]
+    numpy_scaled = pagerank_numpy(sym_pairs, 0.85, 5, tol=0.0, scaled=True)
+    for node in base_r:
+        assert fast[node] == pytest.approx(base_r[node] * n, abs=1e-9)
+        assert numpy_scaled[node] == pytest.approx(base_r[node] * n, abs=1e-9)
 
 
 def test_domain_rank_prior_join(spark):
@@ -147,11 +147,11 @@ def test_cluster_rank_adaptive_fused_matches_composed(spark):
     tolerance — and the forced-distributed fused path must agree too."""
     from pyspark.sql import functions as F
 
+    from dbbspark.operators import dedup as D
     from dbbspark.operators.dedup import (
         cluster_rank_adaptive,
         connected_components_adaptive,
     )
-    from dbbspark.operators.graph import pagerank
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 23), (1, 3)],
@@ -159,7 +159,7 @@ def test_cluster_rank_adaptive_fused_matches_composed(spark):
     )
     fused = {
         r["node"]: (r["component"], r["rank"])
-        for r in cluster_rank_adaptive(pairs, max_iter=3).collect()
+        for r in cluster_rank_adaptive(pairs, max_iter=3)[0].collect()
     }
     cc = {
         r["node"]: r["component"]
@@ -180,12 +180,12 @@ def test_cluster_rank_adaptive_fused_matches_composed(spark):
         assert fused[n][0] == cc[n]
         assert abs(fused[n][1] - pr[n]) < 1e-9, n
     # forced-distributed fused path: identical component + rank values
-    dist = {
-        r["node"]: (r["component"], r["rank"])
-        for r in cluster_rank_adaptive(
-            pairs, max_iter=3, driver_edge_threshold=0
-        ).collect()
-    }
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(D, "DRIVER_EDGE_THRESHOLD", 0)
+        dist = {
+            r["node"]: (r["component"], r["rank"])
+            for r in cluster_rank_adaptive(pairs, max_iter=3)[0].collect()
+        }
     assert set(dist) == set(fused)
     for n in fused:
         assert dist[n][0] == fused[n][0]
@@ -196,30 +196,57 @@ def test_cluster_rank_adaptive_empty(spark):
     from dbbspark.operators.dedup import cluster_rank_adaptive
 
     pairs = spark.createDataFrame([], "doc_a long, doc_b long")
-    assert cluster_rank_adaptive(pairs).count() == 0
+    df, rows = cluster_rank_adaptive(pairs)
+    assert df.count() == 0 and rows == []
 
 
 def test_cluster_rank_adaptive_local_rows_exposure(spark):
-    """with_local_rows=True (r13): the small path returns its collected
-    [(node, component, rank)] list alongside the DataFrame — identical
-    content, saving driver-regime callers a re-collect — and the
-    distributed path returns None rows with the same frame values."""
+    """The small path returns its collected [(node, component, rank)]
+    list alongside the DataFrame — identical content, saving
+    driver-regime callers a re-collect — and the distributed path
+    returns None rows with the same frame values."""
+    from dbbspark.operators import dedup as D
     from dbbspark.operators.dedup import cluster_rank_adaptive
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (1, 3)], "doc_a long, doc_b long"
     )
-    df, rows = cluster_rank_adaptive(pairs, max_iter=3, with_local_rows=True)
+    df, rows = cluster_rank_adaptive(pairs, max_iter=3)
     assert rows is not None
     got = sorted((r["node"], r["component"], r["rank"]) for r in df.collect())
     assert [(n, c) for n, c, _ in got] == [(n, c) for n, c, _ in rows]
     for (_, _, a), (_, _, b) in zip(got, rows):
         assert abs(a - b) < 1e-12
-    ddf, drows = cluster_rank_adaptive(
-        pairs, max_iter=3, with_local_rows=True, driver_edge_threshold=0
-    )
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(D, "DRIVER_EDGE_THRESHOLD", 0)
+        ddf, drows = cluster_rank_adaptive(pairs, max_iter=3)
     assert drows is None
     dist = sorted((r["node"], r["component"], r["rank"]) for r in ddf.collect())
     assert [(n, c) for n, c, _ in dist] == [(n, c) for n, c, _ in rows]
     for (_, _, a), (_, _, b) in zip(dist, rows):
         assert abs(a - b) < 1e-9
+
+
+def test_adaptive_cc_launches_no_more_jobs_than_cluster_rank(spark):
+    """Both adaptive graph operators decide their regime through the one
+    bounded probe (session.collect_if_small) over one lineage cut, so
+    plain CC on a small graph launches no more Spark jobs than the
+    fused CC + PageRank operator on the same graph."""
+    from dbbspark.operators.dedup import (
+        cluster_rank_adaptive,
+        connected_components_adaptive,
+    )
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11), (20, 21), (1, 3)], "doc_a long, doc_b long"
+    )
+    sc = spark.sparkContext
+    jt = sc._jsc.sc().statusTracker()
+    sc.setJobGroup("cc_adaptive_jobs", "pin")
+    connected_components_adaptive(pairs, "doc_a", "doc_b")
+    cc_jobs = len(jt.getJobIdsForGroup("cc_adaptive_jobs"))
+    sc.setJobGroup("cluster_rank_jobs", "pin")
+    cluster_rank_adaptive(pairs)
+    rank_jobs = len(jt.getJobIdsForGroup("cluster_rank_jobs"))
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    assert 0 < cc_jobs <= rank_jobs, (cc_jobs, rank_jobs)

@@ -14,6 +14,7 @@ import random
 from datetime import datetime, timedelta
 
 import pandas as pd
+import pytest
 
 from pyspark.sql import Row, functions as F
 
@@ -167,17 +168,16 @@ def test_salted_join_matches_plain_join(spark):
 
 
 def test_connected_components_matches_union_find(spark):
-    from dbbspark.operators.dedup import connected_components
+    """The package's union-find reference (union_find_components) and
+    both regimes of connected_components_adaptive equal an independent
+    union-find on a random graph (self-loops and repeated edges
+    included)."""
+    from dbbspark.operators import dedup as D
 
     rng = random.Random(31)
     edges = [
         Row(src=rng.randrange(60), dst=rng.randrange(60)) for _ in range(50)
     ]
-    got = {
-        r["node"]: r["component"]
-        for r in connected_components(spark.createDataFrame(edges)).collect()
-    }
-
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:
@@ -197,7 +197,21 @@ def test_connected_components_matches_union_find(spark):
     for n, r in want.items():
         comp_min[r] = min(comp_min.get(r, n), n)
     want = {n: comp_min[r] for n, r in want.items()}
+    assert dict(D.union_find_components((e.src, e.dst) for e in edges)) == want
+
+    df = spark.createDataFrame(edges)
+    got = {
+        r["node"]: r["component"]
+        for r in D.connected_components_adaptive(df).collect()
+    }
     assert got == want
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(D, "DRIVER_EDGE_THRESHOLD", 0)
+        dist = {
+            r["node"]: r["component"]
+            for r in D.connected_components_adaptive(df).collect()
+        }
+    assert dist == want
 
 
 def test_blocked_cosine_matches_bruteforce(spark):
@@ -317,53 +331,68 @@ def test_pack_sequences_matches_python_reference(spark):
 
 def test_star_cc_matches_label_propagation(spark):
     """large-star/small-star CC must compute the same components as the
-    min-label loop on random graphs (self-loops and singleton groups
-    included)."""
+    union-find reference on random graphs (self-loops and singleton
+    groups included)."""
     from dbbspark.operators.dedup import (
-        connected_components,
         connected_components_star,
+        union_find_components,
     )
 
     rng = random.Random(47)
     edges = [Row(src=rng.randrange(60), dst=rng.randrange(60)) for _ in range(50)]
     df = spark.createDataFrame(edges)
-    a = {r["node"]: r["component"] for r in connected_components(df).collect()}
-    b = {r["node"]: r["component"] for r in connected_components_star(df).collect()}
-    assert a == b
+    want = dict(union_find_components((e.src, e.dst) for e in edges))
+    got = {r["node"]: r["component"] for r in connected_components_star(df).collect()}
+    assert got == want
+
+
+# A node whose only edge is a self-loop (1) and a NULL-ended edge's
+# non-null end (7) are their own components; NULL gets no row.
+SELF_LOOP_NULL_EDGES = [(1, 1), (2, 3), (7, None)]
+SELF_LOOP_NULL_WANT = {1: 1, 2: 2, 3: 2, 7: 7}
 
 
 def test_adaptive_cc_matches_both_paths(spark):
-    """connected_components_adaptive: the driver union-find path (edge
-    count under threshold) and the forced-distributed path (threshold=0)
-    must both equal the label-propagation reference on random graphs —
-    self-loops, singletons, and multi-component shapes included."""
-    from dbbspark.operators.dedup import (
-        connected_components,
-        connected_components_adaptive,
-    )
+    """connected_components_adaptive: the driver union-find path and
+    the forced-distributed path (DRIVER_EDGE_THRESHOLD patched to 0)
+    must both equal the union-find reference on random graphs —
+    self-loops, singletons, and multi-component shapes included — and
+    on the explicit self-loop-only / NULL-ended edge list, where the
+    star formulation agrees too."""
+    from dbbspark.operators import dedup as D
+
+    def both_paths(df):
+        fast = {
+            r["node"]: r["component"]
+            for r in D.connected_components_adaptive(df).collect()
+        }
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(D, "DRIVER_EDGE_THRESHOLD", 0)
+            distributed = {
+                r["node"]: r["component"]
+                for r in D.connected_components_adaptive(df).collect()
+            }
+        return fast, distributed
 
     for seed in (21, 22):
         rng = random.Random(seed)
         edges = [
             Row(src=rng.randrange(80), dst=rng.randrange(80)) for _ in range(60)
         ]
-        df = spark.createDataFrame(edges)
-        want = {
-            r["node"]: r["component"]
-            for r in connected_components(df).collect()
-        }
-        fast = {
-            r["node"]: r["component"]
-            for r in connected_components_adaptive(df).collect()
-        }
-        distributed = {
-            r["node"]: r["component"]
-            for r in connected_components_adaptive(
-                df, driver_edge_threshold=0
-            ).collect()
-        }
+        want = dict(D.union_find_components((e.src, e.dst) for e in edges))
+        fast, distributed = both_paths(spark.createDataFrame(edges))
         assert fast == want, seed
         assert distributed == want, seed
+
+    df = spark.createDataFrame(SELF_LOOP_NULL_EDGES, "src long, dst long")
+    fast, distributed = both_paths(df)
+    assert fast == SELF_LOOP_NULL_WANT
+    assert distributed == SELF_LOOP_NULL_WANT
+    star = [
+        (r["node"], r["component"])
+        for r in D.connected_components_star(df).collect()
+    ]
+    assert sorted(star) == sorted(SELF_LOOP_NULL_WANT.items())
 
 
 def test_jaccard_prefix_matches_plain(spark):

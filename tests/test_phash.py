@@ -391,13 +391,14 @@ def test_hamming_ball_stats_regimes_equal_brute(spark):
     """hamming_ball_stats must equal the brute-force ball count and the
     hamming_groups partition in BOTH regimes: the driver union-find fast
     path (default threshold) and the distributed rep-graph plan (forced
-    via driver_rep_threshold=0). Duplicate-heavy corpus — identical-hash
-    buckets, a chained bucket, far bucket, singleton, NULL, sign-bit
-    hash — so the closed-form bucket-count weighting is actually
+    by patching DRIVER_REP_THRESHOLD to 0). Duplicate-heavy corpus —
+    identical-hash buckets, a chained bucket, far bucket, singleton,
+    NULL, sign-bit hash — so the closed-form bucket-count weighting is actually
     exercised (n_near inside a 10-copy bucket is 9+|chained|, never a
     materialized 45-pair explosion)."""
     from collections import Counter
 
+    import dbbspark.operators.phash as phash_mod
     from dbbspark.operators.phash import hamming_ball_stats, hamming_groups
 
     rows = (
@@ -425,12 +426,14 @@ def test_hamming_ball_stats_regimes_equal_brute(spark):
         i: (groups[i], brute_near[i], gsize[groups[i]]) for i, _ in live
     }
     for thr in (2_000_000, 0):  # driver regime, then forced distributed
-        got = {
-            r["id"]: (r["group"], r["n_near"], r["n_group"])
-            for r in hamming_ball_stats(
-                df, "id", "phash", max_distance=2, driver_rep_threshold=thr
-            ).collect()
-        }
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(phash_mod, "DRIVER_REP_THRESHOLD", thr)
+            got = {
+                r["id"]: (r["group"], r["n_near"], r["n_group"])
+                for r in hamming_ball_stats(
+                    df, "id", "phash", max_distance=2
+                ).collect()
+            }
         assert got == expect, f"regime threshold={thr}"
         assert 41 not in got  # null hash: no row, same stance as pairs
     # sanity on the closed form itself: every member of bucket A sees
@@ -670,6 +673,7 @@ def test_ball_stats_by_hash_equals_id_keyed(spark):
     NULL hashes absent from both), on BOTH regimes."""
     from pyspark.sql import functions as F
 
+    import dbbspark.operators.phash as phash_mod
     from dbbspark.operators.phash import hamming_ball_stats
 
     rows = [
@@ -681,16 +685,17 @@ def test_ball_stats_by_hash_equals_id_keyed(spark):
     ]
     df = spark.createDataFrame(rows, "id long, h long")
     for thresh in (2_000_000, 0):  # driver regime, then distributed
-        ids = {
-            tuple(r)
-            for r in hamming_ball_stats(
-                df, "id", "h", max_distance=2, driver_rep_threshold=thresh
-            ).collect()
-        }
-        byh = hamming_ball_stats(
-            df, "id", "h", max_distance=2, driver_rep_threshold=thresh,
-            by_hash=True,
-        )
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(phash_mod, "DRIVER_REP_THRESHOLD", thresh)
+            ids = {
+                tuple(r)
+                for r in hamming_ball_stats(
+                    df, "id", "h", max_distance=2
+                ).collect()
+            }
+            byh = hamming_ball_stats(
+                df, "id", "h", max_distance=2, by_hash=True
+            )
         joined = {
             tuple(r)
             for r in df.join(byh, df.h == byh.h)

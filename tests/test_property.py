@@ -6,6 +6,7 @@ hand-written cases miss."""
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
 
@@ -403,6 +404,7 @@ def test_hamming_ball_stats_matches_brute_on_random_hashes(spark, hs, d):
     max_distance, hamming_ball_stats' n_near must equal the brute count
     of other rows within the ball, and n_group must sum the true
     connected component — in BOTH regimes."""
+    import dbbspark.operators.phash as phash_mod
     from dbbspark.operators.phash import hamming_ball_stats
 
     rows = [(i, h) for i, h in enumerate(hs)]
@@ -430,12 +432,14 @@ def test_hamming_ball_stats_matches_brute_on_random_hashes(spark, hs, d):
         gsize[comp[i]] = gsize.get(comp[i], 0) + 1
     expect = {i: (comp[i], brute[i], gsize[comp[i]]) for i, _ in rows}
     for thr in (2_000_000, 0):
-        got = {
-            r["id"]: (r["group"], r["n_near"], r["n_group"])
-            for r in hamming_ball_stats(
-                df, "id", "phash", max_distance=d, driver_rep_threshold=thr
-            ).collect()
-        }
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(phash_mod, "DRIVER_REP_THRESHOLD", thr)
+            got = {
+                r["id"]: (r["group"], r["n_near"], r["n_group"])
+                for r in hamming_ball_stats(
+                    df, "id", "phash", max_distance=d
+                ).collect()
+            }
         assert got == expect
 
 
