@@ -48,6 +48,18 @@ def template_columns(pattern: str) -> list[str]:
 # --- generated Spark SQL: every interpolated name or literal goes through these
 
 
+def batch_lit(batch_id: int) -> Column:
+    """The ``batch`` partition column of a per-batch write
+    (``batch=<id>`` directories).
+
+    A string literal on purpose: Spark inlines an int or long literal
+    into the generated Java source, so each new batch id would compile
+    the write's stage again, while a string literal reaches the compiled
+    class by reference. The directory name is the same either way, and
+    partition discovery still reads the column back as an int."""
+    return F.lit(str(int(batch_id)))
+
+
 def sql_ident(name: str) -> str:
     """Spark-SQL quoted identifier (embedded backticks doubled) — also a
     valid ``F.col`` / ``select`` reference for any column name."""

@@ -32,7 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..functions import sql_ident
+from ..functions import batch_lit, sql_ident
 from .dedup import tokens_col
 
 # Defaults: eps = e/width ~ 0.00066, delta = 2^-5 ~ 3% per query.
@@ -107,7 +107,7 @@ def write_batch_sketch(
     dynamic-partition overwrite — the same retry-idempotence contract as
     the streaming gates' doc sinks: a re-run of the same batch_id
     replaces exactly its own row, never appends a duplicate."""
-    row = corpus_sketch(docs, text_col).withColumn("batch", F.lit(int(batch_id)))
+    row = corpus_sketch(docs, text_col).withColumn("batch", batch_lit(batch_id))
     (
         row.coalesce(1)
         .write.mode("overwrite")

@@ -47,7 +47,7 @@ from __future__ import annotations
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..functions import sql_ident
+from ..functions import batch_lit, sql_ident
 from ..operators.pq import ivfpq_encode, ivfpq_topk
 
 
@@ -276,7 +276,7 @@ def _process_batch_locked(
         accepted_codes = accepted_codes.withColumn("gen", F.lit(int(gen)))
     for df, sink in ((accepted, accepted_dir), (accepted_codes, index_dir)):
         (
-            df.withColumn("batch", F.lit(bid))
+            df.withColumn("batch", batch_lit(bid))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch")

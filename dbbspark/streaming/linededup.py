@@ -9,7 +9,9 @@ seen, the compact state — and per micro-batch:
 
 1. explodes the batch into line mentions with normalized-line hashes
    (`line_mentions` — map-side), once: `process_batch` caches them for
-   all of its writes;
+   all of its writes, and the emitted documents' spine (one row per
+   input row) comes from the same mentions, so the batch's source is
+   read once per batch;
 2. folds the batch's own per-hash counts into the index counts: a line
    is boilerplate once its cumulative df (index + batch) reaches
    ``min_df``, so a banner repeated 100× inside ONE batch is caught
@@ -70,6 +72,7 @@ from ..commit import (
     committed_versions,
     prune_commit_records,
 )
+from ..functions import batch_lit
 from ..maintenance import _fs_and_path
 from ..operators.bloom import split_by_bloom
 from ..operators.lines import line_mentions
@@ -293,12 +296,17 @@ def gate_batch(
     Pure DataFrame logic — shared by the streaming foreachBatch and
     direct batch callers (pins streaming == cumulative batch in tests).
 
-    Both frames derive from ``line_mentions(batch, id_col, text_col)``,
-    and the updated index adds the same per-hash batch ``counts`` the
-    gate decision uses. Nothing is cached here: a caller that runs both
-    frames owns the caching — persist that ``line_mentions`` frame first
-    (Spark's cache lookup substitutes it by plan) and unpersist it after
-    the last action, as `process_batch` does.
+    Both frames derive from ``line_mentions(batch, id_col, text_col,
+    outer=True)`` alone — the emitted documents' spine too, so ``batch``
+    is never read outside them — and the updated index adds the same
+    per-hash batch ``counts`` the gate decision uses. Nothing is cached
+    here: a caller that runs both frames owns the caching — persist that
+    mentions frame first (Spark's cache lookup substitutes it by plan)
+    and unpersist it after the last action, as `process_batch` does.
+
+    Every input row comes out once, keyed by its id: a NULL text is
+    emitted as ``""``, and rows sharing an id each get the lines of all
+    of them, merged in line-number order.
 
     ``index_bloom`` (a word table from operators.bloom covering the
     index's line hashes) short-circuits the index join for lines the
@@ -311,7 +319,7 @@ def gate_batch(
     """
     if min_df < 2:
         raise ValueError("min_df must be >= 2 (1 would delete every line)")
-    mentions = line_mentions(batch, id_col, text_col)
+    mentions = line_mentions(batch, id_col, text_col, outer=True)
     # Blank lines (h NULL) are exempt from dedup — and routed AROUND the
     # hash-keyed shuffles entirely: a window or join keyed on h would
     # otherwise send every blank line in the batch to ONE task (the NULL
@@ -353,7 +361,11 @@ def gate_batch(
             ),
         ).alias(text_col)
     )
-    spine = batch.select(F.col(id_col).alias("doc"))
+    # one row per input row: line 0 of each text, or the single
+    # NULL-line row of a NULL text
+    spine = mentions.where(
+        F.coalesce(F.col("line_no"), F.lit(0)) == 0
+    ).select("doc")
     deduped = (
         spine.join(reassembled, "doc", "left")
         .select(
@@ -392,7 +404,7 @@ def _commit_for_batch(
     wrong under retries — a retried batch commits a SECOND snapshot for
     the same batch id, and keep-2-by-version would then prune the
     predecessor a further retry still needs."""
-    tagged = df.withColumn("batch", F.lit(int(batch_id)))
+    tagged = df.withColumn("batch", batch_lit(batch_id))
     if coalesce is not None:
         tagged = tagged.coalesce(coalesce)
 
@@ -510,8 +522,9 @@ def process_batch(
     bid = int(batch_id)
     prior_bloom = load_bloom(spark, index_dir, before=bid) if use_bloom else None
     # gate_batch re-derives these mentions; Spark's cache lookup matches
-    # the identical plan, so every write below reads this one copy.
-    mentions = line_mentions(batch, id_col, text_col).persist()
+    # the identical plan, so every write below reads this one copy and
+    # the batch's source runs once.
+    mentions = line_mentions(batch, id_col, text_col, outer=True).persist()
     try:
         deduped, updated = gate_batch(
             batch,
@@ -522,7 +535,7 @@ def process_batch(
             index_bloom=prior_bloom,
         )
         (
-            deduped.withColumn("batch", F.lit(bid))
+            deduped.withColumn("batch", batch_lit(bid))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch")

@@ -53,6 +53,7 @@ from __future__ import annotations
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..functions import batch_lit
 from ..operators.phash import (
     ahash_col,
     audio_hash_col,
@@ -295,7 +296,7 @@ def _process_batch_locked(
         (accepted_hashes, index_dir),
     ):
         (
-            df.withColumn("batch", F.lit(bid))
+            df.withColumn("batch", batch_lit(bid))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch")
@@ -728,7 +729,7 @@ def _process_clip_batch_locked(
     )
     for df, sink in ((accepted, accepted_dir), (accepted_frames, index_dir)):
         (
-            df.withColumn("batch", F.lit(bid))
+            df.withColumn("batch", batch_lit(bid))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch")

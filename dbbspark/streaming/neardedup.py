@@ -42,6 +42,7 @@ from __future__ import annotations
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..functions import batch_lit
 from ..operators.dedup import lsh_incremental_pairs, minhash_signatures
 
 
@@ -198,7 +199,7 @@ def _process_batch_locked(
     )
     for df, sink in ((accepted, accepted_dir), (accepted_sigs, index_dir)):
         (
-            df.withColumn("batch", F.lit(bid))
+            df.withColumn("batch", batch_lit(bid))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch")

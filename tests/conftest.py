@@ -256,11 +256,11 @@ def pytest_collection_modifyitems(config, items):
 def spark():
     from pyspark.sql import SparkSession
 
-    from dbbspark.session import apply_runtime_confs
+    from dbbspark.session import STATIC_CONFS, apply_runtime_confs
 
     import tempfile
 
-    s = (
+    builder = (
         SparkSession.builder.master("local[4]")
         .appName("dbbspark-tests")
         .config("spark.sql.shuffle.partitions", "8")
@@ -274,8 +274,10 @@ def spark():
         # ContextCleaner GC cadence keeps reclamation ahead of growth.
         .config("spark.driver.memory", "4g")
         .config("spark.cleaner.periodicGC.interval", "5min")
-        .getOrCreate()
     )
+    for k, v in STATIC_CONFS.items():
+        builder = builder.config(k, v)
+    s = builder.getOrCreate()
     apply_runtime_confs(s)
     yield s
     s.stop()

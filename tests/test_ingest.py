@@ -8,6 +8,7 @@ aborting; the streaming checkpoint prevents reprocessing.
 
 from __future__ import annotations
 
+import dataclasses
 import hashlib
 import json
 import os
@@ -800,3 +801,36 @@ def test_registry_legacy_layout_preserved(spark, area):
     ), "legacy registry layout must be preserved"
     reg = spark.read.parquet(cfg.registry_path)
     assert reg.count() == 3  # old.fits + the 2 archived files
+
+
+def test_repeated_night_compiles_no_new_classes(spark, area, tmp_path):
+    """A night's generated classes stay in the code cache for the next
+    one (session.STATIC_CONFS): a second, identical ingest + line-gate
+    pass compiles almost nothing. With Spark's default 100-entry cache a
+    night's working set (well over 100 classes) evicts itself, and the
+    second pass recompiles most of it."""
+    from dbbspark.streaming.linededup import process_batch
+
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    docs = [(i, f"nav home\nbody {i}\n\nfooter") for i in range(4)] + [(9, None)]
+
+    def night(root) -> int:
+        before = compiles.METRIC_COMPILATION_TIME().getCount()
+        cfg = dataclasses.replace(
+            _cfg(area),
+            archive_root=str(root / "archive"),
+            registry_path=str(root / "registry"),
+            quarantine_path=str(root / "quarantine"),
+        )
+        ingest_batch(spark, cfg, task_id="t-1")
+        batch = spark.createDataFrame(docs, "doc_id long, text string")
+        process_batch(batch, 0, str(root / "index"), str(root / "gated"))
+        return compiles.METRIC_COMPILATION_TIME().getCount() - before
+
+    first = night(tmp_path / "a")
+    second = night(tmp_path / "b")
+    # the quarantine sink's rejected_date is current_timestamp(), which
+    # Spark folds into a long literal inlined into the generated source:
+    # one class per pass, compiled for the driver's and the executor's
+    # class loader; the rest is headroom for AQE's runtime choices
+    assert second <= 8, (first, second)

@@ -615,3 +615,37 @@ def test_line_gate_writes_share_one_cached_mention_pass(spark, tmp_path, monkeyp
         for counts, _ in writes:
             assert counts["GenerateExec"] == 0 and counts["InMemoryTableScanExec"] >= 1, counts
         assert len(set().union(*(rels for _, rels in writes))) == 1, writes
+
+
+def test_line_gate_reads_its_source_only_through_the_cache(spark, tmp_path, monkeypatch):
+    """Neither of process_batch's writes scans the batch's source outside
+    the cached mentions: the emitted documents' spine comes from the
+    mentions too, so a Python-fed source runs once per batch."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from dbbspark.streaming.linededup import process_batch
+
+    def rdd_scans(df):
+        return {
+            n.rdd().id() for n in plan_nodes(df)
+            if n.getClass().getSimpleName() == "RDDScanExec"
+        }
+
+    writes = []
+    parquet = DataFrameWriter.parquet
+
+    def capture(self, path, *args, **kwargs):
+        writes.append(rdd_scans(self._df))
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", capture)
+    docs = [(i, f"nav home\nbody {i} text\n\nfooter") for i in range(6)] + [(6, None)]
+    index, out = str(tmp_path / "index"), str(tmp_path / "out")
+    for bid in (0, 1):
+        writes.clear()
+        batch = spark.createDataFrame(docs, "doc_id long, text string")
+        source = rdd_scans(batch)
+        assert len(source) == 1, source
+        process_batch(batch, bid, index, out)
+        assert len(writes) == 2, writes
+        assert all(not (source & scans) for scans in writes), (source, writes)

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from dbbspark.streaming.linededup import (
     gate_batch,
     index_df,
+    process_batch,
     streaming_line_dedup,
 )
 
@@ -112,6 +113,49 @@ def test_batch_caller_equals_streaming(spark, tmp_path):
     counts = {r["df"] for r in updated.collect()}
     assert 2 in counts  # the boiler line
     assert updated.where(F.col("h").isNull()).count() == 0
+
+
+def _gated_rows(spark, rows, tmp_path):
+    """(doc_id, text) rows the gate emits for one batch, sorted — the
+    cached path (`process_batch`) and the direct one (`gate_batch`)
+    must agree, then the cached path's output is returned."""
+    schema = "doc_id long, text string"
+    deduped, _ = gate_batch(
+        spark.createDataFrame(rows, schema),
+        index_df(spark, str(tmp_path / "nonexistent-idx")),
+    )
+    direct = sorted(tuple(r) for r in deduped.collect())
+    out = str(tmp_path / "out")
+    process_batch(spark.createDataFrame(rows, schema), 0, str(tmp_path / "idx"), out)
+    cached = sorted(
+        tuple(r) for r in spark.read.parquet(out).select("doc_id", "text").collect()
+    )
+    assert cached == direct
+    return cached
+
+
+def test_null_text_emits_one_empty_document(spark, tmp_path):
+    """A NULL text counts no lines and comes out once, as ``""``."""
+    rows = [(1, f"{BOILER}\n{BODY1}"), (2, None), (3, f"{BOILER}\n{BODY3}")]
+    assert _gated_rows(spark, rows, tmp_path) == [(1, BODY1), (2, ""), (3, BODY3)]
+    index = {r["df"] for r in index_df(spark, str(tmp_path / "idx")).collect()}
+    assert index == {1, 2}
+
+
+def test_duplicate_ids_each_emit_the_merged_lines(spark, tmp_path):
+    """Rows sharing an id keep one output row each; every one of them
+    carries the surviving lines of all of them in line-number order, and
+    a NULL-text row among them adds nothing."""
+    rows = [
+        (1, f"{BOILER}\n{BODY1}"),
+        (1, f"{BODY2}\n{BOILER}"),
+        (1, None),
+        (2, BODY3),
+    ]
+    merged = f"{BODY2}\n{BODY1}"
+    assert _gated_rows(spark, rows, tmp_path) == [
+        (1, merged), (1, merged), (1, merged), (2, BODY3)
+    ]
 
 
 def test_min_df_validation(spark, tmp_path):
