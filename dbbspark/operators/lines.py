@@ -56,21 +56,21 @@ def normalized_line_col(line: Column) -> Column:
     return F.trim(norm)
 
 
-def line_mentions(
-    docs: DataFrame, id_col: str, text_col: str, outer: bool = False
-) -> DataFrame:
+def line_mentions(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(doc, line_no, line, h): every line of every document with the
     xxhash64 of its normalized form. line_no is 0-based; h is null for
     blank/whitespace-only lines (exempt from dedup).
 
-    A NULL text has no lines. ``outer=True`` gives it one row with NULL
-    line_no, line and h instead, so every input row keeps a row whose
+    A NULL text has no lines and comes out as one row with NULL line_no,
+    line and h (posexplode_outer), so every input row keeps a row whose
     ``coalesce(line_no, 0)`` is 0 — the streaming line gate takes its
-    document spine from those rows."""
-    explode = F.posexplode_outer if outer else F.posexplode
+    document spine from those rows. Callers that count lines filter on
+    ``h IS NOT NULL``, which drops that row with the blank lines."""
     lines = docs.select(
         F.col(id_col).alias("doc"),
-        explode(F.split(F.col(text_col), "\n")).alias("line_no", "line"),
+        F.posexplode_outer(F.split(F.col(text_col), "\n")).alias(
+            "line_no", "line"
+        ),
     )
     norm = normalized_line_col(F.col("line"))
     return lines.withColumn(

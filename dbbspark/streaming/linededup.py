@@ -296,13 +296,13 @@ def gate_batch(
     Pure DataFrame logic — shared by the streaming foreachBatch and
     direct batch callers (pins streaming == cumulative batch in tests).
 
-    Both frames derive from ``line_mentions(batch, id_col, text_col,
-    outer=True)`` alone — the emitted documents' spine too, so ``batch``
-    is never read outside them — and the updated index adds the same
-    per-hash batch ``counts`` the gate decision uses. Nothing is cached
-    here: a caller that runs both frames owns the caching — persist that
-    mentions frame first (Spark's cache lookup substitutes it by plan)
-    and unpersist it after the last action, as `process_batch` does.
+    Both frames derive from ``line_mentions(batch, id_col, text_col)``
+    alone — the emitted documents' spine too, so ``batch`` is never read
+    outside them — and the updated index adds the same per-hash batch
+    ``counts`` the gate decision uses. Nothing is cached here: a caller
+    that runs both frames owns the caching — persist that mentions frame
+    first (Spark's cache lookup substitutes it by plan) and unpersist it
+    after the last action, as `process_batch` does.
 
     Every input row comes out once, keyed by its id: a NULL text is
     emitted as ``""``, and rows sharing an id each get the lines of all
@@ -319,7 +319,7 @@ def gate_batch(
     """
     if min_df < 2:
         raise ValueError("min_df must be >= 2 (1 would delete every line)")
-    mentions = line_mentions(batch, id_col, text_col, outer=True)
+    mentions = line_mentions(batch, id_col, text_col)
     # Blank lines (h NULL) are exempt from dedup — and routed AROUND the
     # hash-keyed shuffles entirely: a window or join keyed on h would
     # otherwise send every blank line in the batch to ONE task (the NULL
@@ -524,7 +524,7 @@ def process_batch(
     # gate_batch re-derives these mentions; Spark's cache lookup matches
     # the identical plan, so every write below reads this one copy and
     # the batch's source runs once.
-    mentions = line_mentions(batch, id_col, text_col, outer=True).persist()
+    mentions = line_mentions(batch, id_col, text_col).persist()
     try:
         deduped, updated = gate_batch(
             batch,
