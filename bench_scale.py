@@ -1057,95 +1057,6 @@ def _clip_gate_soak(spark, n_batches: int = 15, fresh_per_batch: int = 4) -> Non
     shutil.rmtree(root, ignore_errors=True)
 
 
-def _media_gate_backfill(
-    spark, n_corpus: int = 4000, n_batch: int = 2000
-) -> None:
-    """VERDICT r9 item 7 — the C34 staged-bloom measurement, for the
-    media gate: C34 showed a broadcast Bloom only wins when the batch is
-    mostly GENUINELY NEW (the filter proves most band rows collide with
-    nothing and the join skips them); a dup-heavy batch pays the filter
-    for nothing. The media gate wires the same knob (use_bloom) but had
-    no equivalent regime point. This stages exactly that: seed a
-    corpus-index of ``n_corpus`` accepted stills over 4 batches, then
-    gate ONE backfill-shaped batch of ``n_batch`` all-new files with the
-    flag off and on — decision identity asserted, per-regime gate wall
-    and the incremental band join's candidate volume (telemetry) both
-    reported so BASELINE.md can record when the knob pays."""
-    import shutil
-    import tempfile
-    import time as _t
-
-    from dbbspark.operators.phash import (
-        dhash_col,
-        hamming_incremental_pairs,
-        thumbnails,
-    )
-    from dbbspark.streaming.linededup import load_bloom
-    from dbbspark.streaming.mediadedup import _index_hashes, process_batch
-
-    seed_per = n_corpus // 4
-    out = {}
-    for tag, bloom in (("plain", False), ("bloom", True)):
-        root = tempfile.mkdtemp(prefix=f"dbbspark-bf-{tag}-")
-        idx, acc = f"{root}/idx", f"{root}/acc"
-        for b in range(4):
-            rows = [
-                (f"s{b}/f{j}.pgm", _soak_img(b * seed_per + j))
-                for j in range(seed_per)
-            ]
-            process_batch(
-                spark.createDataFrame(rows, "path string, content binary"),
-                b, idx, acc, kind="pgm", use_bloom=bloom,
-            )
-        bf_rows = [
-            (f"bf/f{j}.pgm", _soak_img(1_000_000 + j)) for j in range(n_batch)
-        ]
-        bf = spark.createDataFrame(bf_rows, "path string, content binary")
-        t = _t.time()
-        process_batch(bf, 4, idx, acc, kind="pgm", use_bloom=bloom)
-        wall = _t.time() - t
-        accepted = {
-            r["path"]
-            for r in spark.read.parquet(acc)
-            .where(F.col("batch") == 4)
-            .collect()
-        }
-        # join-volume telemetry of the same backfill pairing, with the
-        # regime's filter: candidates = Σ new·corpus over shared buckets
-        hashed = thumbnails(bf, kind="pgm").select(
-            "path", dhash_col("thumb").alias("phash")
-        ).localCheckpoint()
-        tel = {}
-        hamming_incremental_pairs(
-            hashed,
-            _index_hashes(spark, idx, before=4).select(
-                F.col("mid").alias("path"), F.col("phash")
-            ),
-            "path",
-            "phash",
-            max_distance=4,
-            corpus_band_bloom=load_bloom(spark, idx, before=5) if bloom else None,
-            telemetry=tel,
-        ).count()
-        out[tag] = {"wall": round(wall, 2), "accepted": accepted, "tel": tel}
-        shutil.rmtree(root, ignore_errors=True)
-    assert out["plain"]["accepted"] == out["bloom"]["accepted"], (
-        "bloom changed gate decisions"
-    )
-    print(json.dumps({
-        "op": "media_gate_backfill",
-        "corpus": n_corpus,
-        "batch": n_batch,
-        "accepted": len(out["plain"]["accepted"]),
-        "plain_gate_sec": out["plain"]["wall"],
-        "bloom_gate_sec": out["bloom"]["wall"],
-        "plain_candidates": out["plain"]["tel"].get("sum_bucket_sq"),
-        "bloom_candidates": out["bloom"]["tel"].get("sum_bucket_sq"),
-        "plain_band_buckets": out["plain"]["tel"].get("n_buckets"),
-        "bloom_band_buckets": out["bloom"]["tel"].get("n_buckets"),
-    }))
-
-
 def _composed_soak(spark, sf_dir: str, n_batches: int = 150) -> None:
     """VERDICT r8 item 6 (r7 item 8): the nightly_ops composition as ONE
     loop — every trigger drives ALL FIVE gates (line-dedup commit-
@@ -1588,9 +1499,6 @@ def main() -> None:
 
     if wanted and "media_gate_soak" in wanted:
         _media_gate_soak(spark, n_batches=args.soak_batches)
-
-    if wanted and "media_gate_backfill" in wanted:
-        _media_gate_backfill(spark)
 
     if wanted and "clip_gate_soak" in wanted:
         _clip_gate_soak(spark, n_batches=min(15, args.soak_batches))

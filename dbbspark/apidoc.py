@@ -86,8 +86,6 @@ def public_symbols(module) -> list[tuple[str, object]]:
 
 
 def iter_modules() -> list[str]:
-    import dbbspark
-
     names = []
     for pkg in PUBLIC_PACKAGES:
         sub = importlib.import_module(f"dbbspark.{pkg}")

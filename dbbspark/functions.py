@@ -40,11 +40,6 @@ def compile_template(pattern: str) -> Column:
     return F.concat(*parts)
 
 
-def template_columns(pattern: str) -> list[str]:
-    """Column names referenced by a template (for validation/partitioning)."""
-    return _TEMPLATE_RE.findall(pattern)
-
-
 # --- generated Spark SQL: every interpolated name or literal goes through these
 
 

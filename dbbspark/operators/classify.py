@@ -28,11 +28,20 @@ Spark ML primitives so both training and scoring are distributed:
 score > threshold OR when a per-document deterministic lottery
 (xxhash64-seeded, so re-runs keep the same documents) beats
 exp(-alpha * (threshold - score)) — soft boundary sampling that keeps
-some near-miss documents instead of a hard cliff."""
+some near-miss documents instead of a hard cliff.
+
+`score_linear_portable` is the one scorer the declared queries run
+(q_exact_dedup): the same hashed-ngram linear arithmetic with an md5
+gram hash and a pinned weight map (``CLF_NUM_FEATURES``,
+``CLF_WEIGHT_SCALE``), so the DuckDB oracle re-derives every margin
+from `CLF_TOKS_SQL` / `CLF_MARGIN_SQL`. It has a single formulation, an
+Arrow pass over `_clf_grams`."""
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+import re
+
+from pyspark.sql import DataFrame, functions as F
 
 _TOKEN_PATTERN = r"[^\p{L}\p{N}]+"  # split on non-alphanumeric runs
 
@@ -95,12 +104,31 @@ def score_quality(
            "rawPrediction", "probability", "prediction")
 
 
+# The portable scorer's fixed hashed-ngram model: gram buckets and the
+# spread of the pinned weights, shared by the Spark scorer and the
+# DuckDB oracle SQL below.
+CLF_NUM_FEATURES = 4096
+CLF_WEIGHT_SCALE = 0.01
+
+_NONPRINT = re.compile(r"[^ -~]")
+_NON_ALNUM = re.compile(r"[^a-z0-9]+")
+
+
+def _clf_grams(text: str) -> list[str]:
+    """The portable scorer's gram list for one text, in fold order:
+    ASCII-fold (bytes outside 0x20-0x7E become spaces), lowercase, split
+    on non-alphanumeric runs, drop empties, then the unigrams followed by
+    the adjacent bigrams."""
+    toks = [t for t in _NON_ALNUM.split(_NONPRINT.sub(" ", text).lower()) if t]
+    if len(toks) < 2:
+        return toks
+    return toks + [f"{a} {b}" for a, b in zip(toks, toks[1:])]
+
+
 def score_linear_portable(
     docs: DataFrame,
     text_col: str = "text",
     score_col: str = "clf_score",
-    num_features: int = 4096,
-    weight_scale: float = 0.01,
 ) -> DataFrame:
     """Engine-portable scoring twin of `score_quality` — the same
     hashed-ngram linear-model arithmetic (lowercase, split on
@@ -108,92 +136,41 @@ def score_linear_portable(
     linear margin → logistic link), re-expressed so EVERY step is
     re-derivable in a second SQL engine, which is what puts the
     classifier scoring path under the DuckDB value oracle
-    (q_exact_dedup fold, r13). Two substitutions vs the ml pipeline,
-    both pinned and documented:
+    (q_exact_dedup fold, r13; `CLF_TOKS_SQL` / `CLF_MARGIN_SQL`). Two
+    substitutions vs the ml pipeline, both pinned:
 
-    - the gram hash is the md5-derived bigint (`dedup.MD5_INT_SPARK_SQL` %
-      ``num_features``) — HashingTF's murmur3_x86_32 has no DuckDB
+    - the gram hash is the md5-derived bigint (`dedup.md5_int_py` %
+      ``CLF_NUM_FEATURES``) — HashingTF's murmur3_x86_32 has no DuckDB
       equivalent; the hash FAMILY changes, the hashed-bag-of-grams
-      architecture does not (featurization parity with
-      RegexTokenizer+NGram is pinned in tests/test_classify.py);
+      architecture does not (`_clf_grams` is pinned against
+      RegexTokenizer+NGram in tests/test_classify.py);
     - the coefficient vector is the pinned deterministic map
       w(j) = ((j·2654435761 mod 2000003) − 1000001)/1000001 ·
-      ``weight_scale`` (a Knuth-multiplicative spread of the bucket
+      ``CLF_WEIGHT_SCALE`` (a Knuth-multiplicative spread of the bucket
       index over (−scale, scale)) instead of fitted L-BFGS weights —
       scoring arithmetic is identical either way: the sparse dot
       product is the sum over gram OCCURRENCES of w(h(gram)).
 
-    Tokenization is ASCII-folded first (bytes outside 0x20-0x7E become
-    separators) so both engines tokenize identically without depending
-    on locale/ICU case-mapping differences for exotic code points.
-    Map-only, JVM-side, no UDF — fuses into the scan like the ml
-    scorer's transform. Returns docs + ``score_col`` (sigmoid of the
-    margin) and ``{score_col}_margin``."""
-    from .dedup import MD5_INT_SPARK_SQL
+    Tokenization is ASCII-folded first so both engines tokenize
+    identically without depending on locale/ICU case-mapping
+    differences for exotic code points.
 
-    ascii_txt = F.regexp_replace(F.col(text_col), "[^ -~]", " ")
-    toks = F.filter(
-        F.split(F.lower(ascii_txt), "[^a-z0-9]+"), lambda t: t != F.lit("")
-    )
-    d = docs.withColumn("__toks", toks)
-    grams = (
-        "CASE WHEN size(__toks) >= 2 THEN concat(__toks, "
-        "transform(sequence(1, greatest(size(__toks) - 1, 0)), "
-        "i -> concat(__toks[i-1], ' ', __toks[i]))) ELSE __toks END"
-    )
-    # doubles as 1.0D: a bare 1.0 is DECIMAL in Spark SQL
-    weight = (
-        f"(((({MD5_INT_SPARK_SQL('g')} % {int(num_features)}) * 2654435761L) "
-        f"% 2000003 - 1000001) / 1000001.0D * {float(weight_scale)!r}D)"
-    )
-    margin = F.expr(f"aggregate({grams}, 0.0D, (acc, g) -> acc + {weight})")
-    return (
-        d.withColumn(f"{score_col}_margin", margin)
-        .withColumn(
-            score_col,
-            F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col(f"{score_col}_margin"))),
-        )
-        .drop("__toks")
-    )
+    One ArrowEvalPython node computes the margin per batch (r14, guide
+    §4): the weight arithmetic is exact int64 then one float64
+    division/multiply, folded left to right over `_clf_grams`. Gram
+    weights are a pure function of the gram, so a per-batch memo
+    collapses Zipf-repeated grams to one md5 each (558× repetition in
+    the fixture; bounded at 1M entries so executor memory stays capped
+    on adversarial vocabularies). No cross-run state: the memo lives and
+    dies inside each Arrow batch call. Interleaved A/B on the
+    q_exact_dedup host at sf0.1 against a Spark higher-order-function
+    form of the same margin: 1.19 → 0.55 s.
 
-
-def score_linear_portable_arrow(
-    docs: DataFrame,
-    text_col: str = "text",
-    score_col: str = "clf_score",
-    num_features: int = 4096,
-    weight_scale: float = 0.01,
-) -> DataFrame:
-    """Arrow-pass twin of `score_linear_portable` — bit-identical output
-    (r14, guide §4): the expression form pays an interpreted
-    higher-order `aggregate` with one JVM md5 per gram OCCURRENCE
-    (~120/doc) and never reaches whole-stage codegen. Here ONE
-    ArrowEvalPython node computes the margin per batch:
-
-    - tokenize/bigram rules mirror the expression form per code point
-      (ASCII fold regex, lower, split on non-alphanumeric runs — all
-      exact-equivalent on the post-fold ASCII text);
-    - the weight arithmetic is exact int64 → one float64 division/
-      multiply in the same order, and the margin is the same
-      left-to-right float fold, so margins are BIT-identical (pinned
-      against the expression form in tests/test_classify.py, 0
-      mismatches at sf0.1 in plans/r14/probe_exact_dedup_arrow.py);
-    - gram weights are a pure function of the gram, so a per-batch memo
-      collapses Zipf-repeated grams to one md5 each (558× repetition in
-      the fixture; bounded at 1M entries so executor memory stays
-      capped on adversarial vocabularies). No cross-run state: the memo
-      lives and dies inside each Arrow batch call.
-
-    Interleaved A/B on the q_exact_dedup host at sf0.1: 1.19 → 0.55 s.
-    Returns docs + ``{score_col}_margin`` + ``score_col`` exactly like
-    the expression form (NULL text → NULL margin/score)."""
+    Map-only, no shuffle. Returns docs + ``{score_col}_margin`` +
+    ``score_col`` (sigmoid of the margin); NULL text → NULL
+    margin/score."""
     import pandas as pd
     from pyspark.sql import types as T
-
-    import re as _re
-
-    nonprint = _re.compile(r"[^ -~]")
-    splitter = _re.compile(r"[^a-z0-9]+")
 
     # no type annotations: pandas_udf would try to resolve them against
     # the function-local `pd` import and reject the signature
@@ -208,9 +185,9 @@ def score_linear_portable_arrow(
             if v is None:
                 h = int(md5(g.encode()).hexdigest()[:15], 16)
                 v = (
-                    ((h % num_features) * 2654435761 % 2000003 - 1000001)
+                    ((h % CLF_NUM_FEATURES) * 2654435761 % 2000003 - 1000001)
                     / 1000001.0
-                    * weight_scale
+                    * CLF_WEIGHT_SCALE
                 )
                 if len(memo) < 1_000_000:
                     memo[g] = v
@@ -221,15 +198,8 @@ def score_linear_portable_arrow(
             if t is None:
                 out.append(None)
                 continue
-            toks = [x for x in splitter.split(nonprint.sub(" ", t).lower()) if x]
-            if len(toks) >= 2:
-                grams = toks + [
-                    f"{toks[i]} {toks[i + 1]}" for i in range(len(toks) - 1)
-                ]
-            else:
-                grams = toks
             acc = 0.0
-            for g in grams:
+            for g in _clf_grams(t):
                 acc += w(g)
             out.append(acc)
         # float64 end to end: NaN never arises from finite weight sums,
@@ -254,11 +224,11 @@ def CLF_TOKS_SQL(text_expr: str) -> str:
     )
 
 
-def CLF_MARGIN_SQL(toks_expr: str, num_features: int = 4096,
-                   weight_scale: float = 0.01) -> str:
+def CLF_MARGIN_SQL(toks_expr: str) -> str:
     """DuckDB SQL re-deriving `score_linear_portable`'s margin from an
-    already-derived token-list column — kept in lockstep with the Spark
-    expressions above (the oracle side of the r13 fold)."""
+    already-derived token-list column — kept in lockstep with
+    `_clf_grams` and the scorer's weight map (the oracle side of the
+    r13 fold)."""
     return f"""coalesce(list_sum(list_transform(
         CASE WHEN len({toks_expr}) >= 2
              THEN list_concat({toks_expr},
@@ -266,8 +236,8 @@ def CLF_MARGIN_SQL(toks_expr: str, num_features: int = 4096,
                       i -> {toks_expr}[i] || ' ' || {toks_expr}[i+1]))
              ELSE {toks_expr} END,
         g -> (((CAST(('0x' || substr(md5(g), 1, 15)) AS BIGINT)
-                % {num_features}) * 2654435761) % 2000003 - 1000001)
-             / 1000001.0 * {weight_scale})), 0.0)"""
+                % {CLF_NUM_FEATURES}) * 2654435761) % 2000003 - 1000001)
+             / 1000001.0 * {CLF_WEIGHT_SCALE})), 0.0)"""
 
 
 def quality_filter(

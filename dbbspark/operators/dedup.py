@@ -16,7 +16,6 @@ Scale design notes (100 TB):
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.window import Window
 
 from dbbspark.functions import sql_ident
 from dbbspark.session import collect_if_small, cut_lineage
@@ -144,7 +143,7 @@ def shingle_hash_docs(
     interleaved full-pipeline A/B 1.50 → 1.12 s best-of-7).
 
     ONLY for consumers whose hashes stay internal (jaccard_pairs,
-    _kept_shingle_structs, the purity audit): minhash/simhash/scrub keep
+    _kept_shingle_hashes, the purity audit): minhash/simhash/scrub keep
     md5-derived STRING hashes because theirs are output values the
     DuckDB oracle must reproduce."""
     toks = F.col("__toks")
@@ -512,35 +511,33 @@ def jaccard_pairs(
     return inter.where(jac >= threshold).select("doc_a", "doc_b")
 
 
-def _kept_shingle_structs(
+def _kept_shingle_hashes(
     docs: DataFrame,
     id_col: str,
     text_col: str,
     shingle_n: int,
     max_df: int | None,
 ) -> DataFrame:
-    """(doc, na, ks): full distinct-shingle count plus the kept-shingle
-    struct list sorted rarest-first — the capped-Jaccard verification
-    state shared by the prefix and LSH formulations. Intersections count
-    only shingles with 2 ≤ df ≤ max_df; `na` stays the FULL size, so
-    capped Jaccard is a lower bound (see jaccard_pairs). Hashes come
-    from `shingle_hash_docs` (r14) — internal-only, same equality
-    classes as the string shingles, no string construction."""
+    """(doc, na, ksh): full distinct-shingle count plus the kept-shingle
+    hash list — the capped-Jaccard verification state `jaccard_pairs_lsh`
+    intersects per candidate. Intersections count only shingles with
+    2 ≤ df ≤ max_df; `na` stays the FULL size, so capped Jaccard is a
+    lower bound (see jaccard_pairs). Hashes come from
+    `shingle_hash_docs` (r14) — internal-only, same equality classes as
+    the string shingles, no string construction."""
     sh = shingle_hash_docs(docs, id_col, text_col, shingle_n)
     mentions = sh.select("doc", F.explode("hs").alias("h"))
     dfs = mentions.groupBy("h").agg(F.count("*").alias("df"))
     m = mentions.join(dfs, "h")
     cap = F.lit(max_df) if max_df is not None else F.lit(None).cast("long")
-    kept_entry = F.when(
-        (F.col("df") >= 2) & ((cap.isNull()) | (F.col("df") <= cap)),
-        F.struct("df", "h"),
+    kept = F.when(
+        (F.col("df") >= 2) & ((cap.isNull()) | (F.col("df") <= cap)), F.col("h")
     )
     # ONE groupBy(doc) carries both the full set size (denominator) and
-    # the kept set sorted rarest-first (collect_list drops the nulls the
-    # when() leaves for pruned shingles).
+    # the kept set (collect_list drops the nulls the when() leaves for
+    # pruned shingles).
     return m.groupBy("doc").agg(
-        F.count("*").alias("na"),
-        F.sort_array(F.collect_list(kept_entry)).alias("ks"),
+        F.count("*").alias("na"), F.collect_list(kept).alias("ksh")
     )
 
 
@@ -557,15 +554,14 @@ def jaccard_pairs_lsh(
     """Exact-verified Jaccard pairs over LSH candidates — the dup-HEAVY
     corpus formulation (the standard MinHash-LSH + verify pipeline).
 
-    `jaccard_pairs` and `jaccard_pairs_prefix` both enumerate pair
-    mentions from shared postings: on a corpus where whole documents are
-    replicated (crawl mirrors, template farms) every posting's df scales
-    with the duplication factor and the mention stream grows
-    quadratically — measured at the 20× replica scale test: 219 s plain,
-    117 s prefix. Here candidates come from ONE LSH banding shuffle
+    `jaccard_pairs` enumerates pair mentions from shared postings: on a
+    corpus where whole documents are replicated (crawl mirrors, template
+    farms) every posting's df scales with the duplication factor and the
+    mention stream grows quadratically — measured at the 20× replica
+    scale test: 219 s. Here candidates come from ONE LSH banding shuffle
     (Σ bucket² pairs — tiny buckets by construction), and each candidate
-    is verified EXACTLY via sorted-array intersection of the capped kept
-    sets, so emitted pairs satisfy jac ≥ threshold with zero false
+    is verified EXACTLY via array intersection of the capped kept sets,
+    so emitted pairs satisfy jac ≥ threshold with zero false
     positives (same capped semantics as jaccard_pairs: intersections
     over kept shingles, denominators exact). Measured 13.9 s on the same
     20× test with 99.95% of the exact pair set recovered (1,051,921 of
@@ -575,97 +571,13 @@ def jaccard_pairs_lsh(
     The tradeoff is RECALL: a true pair collides with probability
     ≈ 1-(1-s^r)^b (s = its true Jaccard); the default 8 bands × 2 rows
     gives ~0.90 at s=0.5 and ~0.9996 at s=0.8. More bands buy recall
-    with a wider signature. For exact recall on moderate corpora use the
-    posting formulations; for greedy dedup (no exact pair set needed)
-    skip verification entirely and feed LSH candidates to
-    connected_components_star."""
+    with a wider signature. For exact recall use `jaccard_pairs`; for
+    greedy dedup (no exact pair set needed) skip verification entirely
+    and feed LSH candidates to connected_components_star."""
     cands = lsh_candidate_pairs_direct(
         docs, id_col, text_col, bands, rows_per_band, shingle_n
     )
-    doc_arrays = _kept_shingle_structs(
-        docs, id_col, text_col, shingle_n, max_df
-    ).select(
-        "doc", "na", F.transform("ks", lambda x: x["h"]).alias("ksh")
-    )
-    a_side = doc_arrays.select(
-        F.col("doc").alias("doc_a"), F.col("ksh").alias("ka"), F.col("na").alias("na")
-    )
-    b_side = doc_arrays.select(
-        F.col("doc").alias("doc_b"), F.col("ksh").alias("kb"), F.col("na").alias("nb")
-    )
-    inter = F.size(F.array_intersect("ka", "kb"))
-    return (
-        cands.join(a_side, "doc_a")
-        .join(b_side, "doc_b")
-        .where(inter / (F.col("na") + F.col("nb") - inter) >= threshold)
-        .select("doc_a", "doc_b")
-    )
-
-
-def jaccard_pairs_prefix(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_n: int = 3,
-    threshold: float = 0.5,
-    max_df: int | None = 1000,
-) -> DataFrame:
-    """`jaccard_pairs` with PREFIX FILTERING (the SSJoin/PPJoin family,
-    Chaudhuri et al. ICDE'06, Xiao et al. WWW'08) — same output relation,
-    candidate-pair space cut by ~(1-t/(1+t))² before any pair is emitted.
-
-    Why a second formulation: `jaccard_pairs` counts EVERY co-occurrence
-    of every (capped) posting list — Σ_postings C(df,2) pair mentions. At
-    100 TB that stream, not the shuffle, is the cost: corpora with heavy
-    template reuse push posting df toward the cap and the pair stream
-    toward cap²·|hot shingles|. Prefix filtering bounds it structurally:
-    a pair with Jaccard ≥ t over sets of sizes na, nb must share ≥
-    ceil(t·na) shingles, so it must collide inside the first
-    (nk - ceil(t·na) + 1) elements of each doc's kept-shingle list sorted
-    by GLOBAL rarity (df asc, hash asc — rarest-first maximizes pruning).
-    Candidates = pairs whose rarity-prefixes collide; each is then
-    verified EXACTLY via sorted-array intersection of the full kept sets.
-    Measured at sf0.1: candidate pairs 1.13M → 0.41M at t=0.5 with
-    identical output (tests/test_operator_equivalence.py cross-checks on
-    randomized corpora).
-
-    When to prefer which: at sf0.1 the plain formulation is still faster
-    (~2.6 s vs ~3.7 s — the pair stream is cheap and prefix filtering
-    pays two extra shuffles + per-candidate verification); the crossover
-    is where mean posting df grows past ~10² (pair stream ≫ mention
-    stream). Both keep the df cap as the hard upper bound on any single
-    posting's blow-up.
-
-    Capped semantics match `jaccard_pairs` exactly: intersections count
-    only shingles with 2 ≤ df ≤ max_df; denominators use FULL distinct-
-    shingle counts. Dropping df-1 shingles from the kept sets loses no
-    intersection (df=1 can't be shared) and only SHORTENS prefixes. The
-    per-doc overlap bound stays valid under the cap: jac_capped ≥ t ⇒
-    inter_kept ≥ t/(1+t)·(na+nb) ≥ t·na (since inter_kept ≤ nb)."""
-    docagg = _kept_shingle_structs(docs, id_col, text_col, shingle_n, max_df)
-    ksh = F.transform("ks", lambda x: x["h"])
-    t_min = F.ceil(F.lit(threshold) * F.col("na"))
-    plen = (F.size("ks") - t_min + 1).cast("int")
-    doc_arrays = docagg.select(
-        "doc",
-        "na",
-        ksh.alias("ksh"),
-        F.when(plen >= 1, F.slice(ksh, 1, plen))
-        .otherwise(F.array().cast("array<bigint>"))
-        .alias("prefix"),
-    )
-    cpost = (
-        doc_arrays.select("doc", F.explode("prefix").alias("h"))
-        .groupBy("h")
-        .agg(F.sort_array(F.collect_list("doc")).alias("ds"))
-        .where(F.size("ds") >= 2)
-    )
-    cands = (
-        cpost.select(F.explode("ds").alias("doc_a"), "ds")
-        .select("doc_a", F.explode("ds").alias("doc_b"))
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .distinct()
-    )
+    doc_arrays = _kept_shingle_hashes(docs, id_col, text_col, shingle_n, max_df)
     a_side = doc_arrays.select(
         F.col("doc").alias("doc_a"), F.col("ksh").alias("ka"), F.col("na").alias("na")
     )

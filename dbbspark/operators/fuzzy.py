@@ -20,6 +20,11 @@ dead at scale. This is the standard q-gram blocking rewrite:
    handled by an exact length-blocked fallback join instead of the
    gram path — so short keys are covered, not silently dropped.
 
+That gram path serves max_distance >= 3 and long-key d=2 corpora. Edit
+distance 1, and 2 on keys of at most ``FASTSS_MAX_LEN`` characters, run
+the exact FastSS deletion-neighborhood join instead; `fuzzy_join` picks
+the route itself (`_route`: one max-length probe at d=2).
+
 Every stage is built-in expressions (xxhash64, explode, groupBy,
 levenshtein) — no Python in the plan. Output is exact: identical to the
 cross-join formulation for all pairs within the threshold (the q-gram
@@ -151,52 +156,25 @@ def _fastss_join(
     )
 
 
-def fuzzy_join_d1(
-    a: DataFrame,
-    b: DataFrame,
-    key: str,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-) -> DataFrame:
-    """Exact distance-≤1 FastSS join (see `_fastss_join`)."""
-    return _fastss_join(a, b, key, 1, id_a, id_b)
+# Longest key (either side) for which a max_distance=2 join takes the
+# FastSS route: a 2-deletion neighborhood is 1 + L + L(L-1)/2 variants
+# per key (~2k at L=64); longer keys take the capped gram path.
+FASTSS_MAX_LEN = 64
 
 
-def fuzzy_join_d2(
-    a: DataFrame,
-    b: DataFrame,
-    key: str,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-) -> DataFrame:
-    """Exact distance-≤2 FastSS join (see `_fastss_join`) — kills the
-    gram path's capped-hub approximation for the d=2 reconcile-shaped
-    workloads (VERDICT r5 item 3)."""
-    return _fastss_join(a, b, key, 2, id_a, id_b)
-
-
-def _route(
-    a: DataFrame,
-    b: DataFrame,
-    key: str,
-    max_distance: int,
-    method: str,
-    auto_fastss_max_len: int,
-) -> str:
-    """'fastss' or 'grams' for this (corpus, distance, method). Forced
-    methods pass through; 'auto' picks FastSS for d <= 2 UNLESS
-    max_distance == 2 AND the longest key (one max-length aggregation
-    over the two narrow key columns) exceeds ``auto_fastss_max_len``.
-    The O(L^d) deletion-neighborhood cliff the bound guards against only
-    exists at d=2 (L² variants per key); at d=1 the neighborhood is just
-    L+1 variants — comparable to the gram path's own posting volume — so
-    d=1 stays exact regardless of key length (ADVICE r6: the capped-hub
-    gram path can DROP true pairs via max_df, a silent downgrade from
-    the always-exact d=1 FastSS route)."""
-    if method == "grams" or max_distance > 2:
+def _route(a: DataFrame, b: DataFrame, key: str, max_distance: int) -> str:
+    """'fastss' or 'grams' for this (corpus, distance): FastSS for
+    d <= 2 UNLESS max_distance == 2 AND the longest key (one max-length
+    aggregation over the two narrow key columns) exceeds
+    ``FASTSS_MAX_LEN``. The O(L^d) deletion-neighborhood cliff the bound
+    guards against only exists at d=2 (L² variants per key); at d=1 the
+    neighborhood is just L+1 variants — comparable to the gram path's
+    own posting volume — so d=1 stays exact regardless of key length
+    (ADVICE r6: the capped-hub gram path can DROP true pairs via
+    max_df, a silent downgrade from the always-exact d=1 FastSS
+    route)."""
+    if max_distance > 2:
         return "grams"
-    if method == "fastss":
-        return "fastss"
     if max_distance <= 1:
         return "fastss"
     lens = (
@@ -205,7 +183,7 @@ def _route(
         .agg(F.max("_l"))
         .first()[0]
     )
-    return "fastss" if (lens or 0) <= auto_fastss_max_len else "grams"
+    return "fastss" if (lens or 0) <= FASTSS_MAX_LEN else "grams"
 
 
 def fuzzy_join(
@@ -217,8 +195,6 @@ def fuzzy_join(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_df: int | None = 1000,
-    method: str = "auto",
-    auto_fastss_max_len: int = 64,
     distinct: bool = True,
     respread: bool = True,
 ) -> DataFrame:
@@ -231,34 +207,25 @@ def fuzzy_join(
     answer. `max_df` caps posting hubs (stop-grams) — the documented
     approximation for dirty corpora where some q-gram is near-universal.
 
-    ``max_distance <= 2`` routes to the FastSS deletion-neighborhood
-    joins (`fuzzy_join_d1` / `fuzzy_join_d2`) when the corpus's longest
-    key is at most ``auto_fastss_max_len``: EXACT with no cap and no
-    hub pathology — on padded serial keys ('DECam_00000005…') the gram
-    path's only distinguishing grams drown in capped hubs, while
-    deletion-variant buckets stay small. d=0 is a plain lowered equi
-    join. The capped gram path below serves max_distance >= 3 (where
-    the deletion neighborhood is O(L³)+) and long-key d<=2 corpora —
-    there ``max_df`` remains the documented approximation.
+    d=0 is a plain lowered equi join. d=1 always, and d=2 when the
+    corpus's longest key is at most ``FASTSS_MAX_LEN``, take the FastSS
+    deletion-neighborhood join (`_fastss_join`): EXACT with no cap and
+    no hub pathology — on padded serial keys ('DECam_00000005…') the
+    gram path's only distinguishing grams drown in capped hubs, while
+    deletion-variant buckets stay small. The capped gram path below
+    serves max_distance >= 3 (where the deletion neighborhood is
+    O(L³)+) and long-key d=2 corpora — there ``max_df`` remains the
+    documented approximation.
 
     SCALE NOTE for the FastSS route at d=2: the 2-deletion neighborhood
     is 1 + L + L(L−1)/2 variants per key — right-sized for the filename/
     serial keys reconciliation joins on (L≈20 → ~200), but a CLIFF for
     long keys (L=150 URLs → ~11k variants/key), where ``max_df`` is
-    also silently irrelevant. Default ``'auto'`` therefore PROBES the
-    longest key (one metadata-cheap max-length aggregation over the
-    narrow key columns) and picks FastSS only when it is at most
-    ``auto_fastss_max_len``; past the bound it takes the capped gram
-    path instead of silently exploding — exactness reverts to the
-    documented cap contract there, and ``method='fastss'`` is the
-    override for a caller who wants exact d<=2 on long keys and accepts
-    the variant volume. ``method='grams'`` forces the capped gram path
-    at any distance.
+    also silently irrelevant. A d=2 join therefore PROBES the longest
+    key (one max-length aggregation over the narrow key columns,
+    `_route`) and takes the capped gram path past the bound instead of
+    silently exploding.
     """
-    if method not in ("auto", "fastss", "grams"):
-        raise ValueError("method must be 'auto', 'fastss', or 'grams'")
-    if method == "fastss" and max_distance > 2:
-        raise ValueError("method='fastss' supports max_distance <= 2 only")
     if max_distance == 0:
         ak = a.select(
             F.col(id_a), F.lower(F.col(key)).alias("key_a")
@@ -269,7 +236,7 @@ def fuzzy_join(
         return ak.join(bk, ak.key_a == bk.key_b).select(
             id_a, id_b, "key_a", "key_b", F.lit(0).alias("distance")
         )
-    if _route(a, b, key, max_distance, method, auto_fastss_max_len) == "fastss":
+    if _route(a, b, key, max_distance) == "fastss":
         return _fastss_join(
             a, b, key, max_distance, id_a, id_b, distinct, respread
         )

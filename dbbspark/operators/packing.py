@@ -49,8 +49,6 @@ def pack_sequences(
     output. Rows shuffle once (the range partition); the second pass
     moves only `num_buckets` scalar totals.
     """
-    import pandas as pd
-
     # internal names: caller names never reach SQL text or mapInPandas
     # (which rejects a name with a backtick)
     d = (

@@ -752,7 +752,6 @@ def hamming_incremental_pairs(
     hash_col: str,
     max_distance: int = 6,
     bands: int | None = None,
-    corpus_band_bloom: list[int] | None = None,
     telemetry: dict | None = None,
     corpus_banded: bool = False,
 ) -> DataFrame:
@@ -779,11 +778,10 @@ def hamming_incremental_pairs(
     of range), and identical decisions vs the un-banded path are
     pinned in tests.
 
-    ``corpus_band_bloom`` (an operators.bloom word table over the
-    corpus's xxhash64(band, val) bucket keys) drops new-side band rows
-    the filter proves collide with nothing before the join — identical
-    pair set either way (false positives just take the join and find
-    nothing; false negatives can't happen)."""
+    There is no Bloom pre-filter on the new side (the text gates have
+    one): with d+1 bands each band key holds ~13 bits, so a filter over
+    the corpus's bucket keys saturates after a few thousand hashes and
+    proves nothing absent (BASELINE.md r10)."""
     if bands is None:
         bands = max_distance + 1
     if bands < max_distance + 1:
@@ -808,18 +806,6 @@ def hamming_incremental_pairs(
         )
 
     new_b = banded(new)
-    if corpus_band_bloom is not None:
-        from .bloom import might_contain
-
-        new_b = (
-            might_contain(
-                new_b.withColumn("__bk", F.xxhash64("band", "val")),
-                corpus_band_bloom,
-                "__bk",
-            )
-            .where(F.col("maybe_known"))
-            .drop("maybe_known", "__bk")
-        )
     if corpus_banded:
         missing = {id_col, hash_col, "band", "val"} - set(corpus.columns)
         if missing:
@@ -837,7 +823,6 @@ def hamming_incremental_pairs(
         corpus_b = banded(corpus)
     if telemetry is not None:
         # cross-form candidate volume: Σ new·corpus over shared buckets
-        # (post-bloom new side — the filter's savings are visible here)
         _fill_band_telemetry(
             new_b.select("band", "val"),
             telemetry,

@@ -56,8 +56,6 @@ def assign_shards(
     holds only ``num_buckets`` totals. A doc larger than ``shard_bytes``
     gets a shard of its own (its offset starts a new shard; successors
     move past it)."""
-    import pandas as pd
-
     if shard_bytes <= 0:
         raise ValueError("shard_bytes must be positive")
     sized = docs.withColumn(

@@ -32,7 +32,7 @@ ship.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from dbbspark.functions import sql_ident
 from dbbspark.session import cut_lineage

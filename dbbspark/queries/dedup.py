@@ -73,14 +73,11 @@ def _exact_dedup_oracle() -> str:
     tags=("dedup", "closure"),
 )
 def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r14: the Arrow-pass scoring twin (bit-identical margins, pinned in
-    # tests/test_classify.py) — the expression form's interpreted
-    # per-gram md5 aggregate dominated the row (guide §4)
-    from ..operators.classify import score_linear_portable_arrow
+    from ..operators.classify import score_linear_portable
 
     docs = load_table(spark, sf_dir, "documents")
     kept = D.sha_dedup_keep_first(docs, "text", "doc_id")
-    scored = score_linear_portable_arrow(kept, text_col="text")
+    scored = score_linear_portable(kept, text_col="text")
     return scored.select(
         "doc_id",
         F.sha2(F.col("text").cast("binary"), 256).alias("sha"),
@@ -126,12 +123,11 @@ _JACCARD_PAIRS_SQL = f"""
     doc="C2: exact 3-gram Jaccard near-dedup — shared-shingle blocking "
     "bounds the pair space; random text shares almost no shingles, "
     "near-dups share many. Runs the production posting-list cap "
-    "(max_df, df-pruning) with the cap mirrored in the oracle. Three "
-    "formulations by corpus regime (operators/dedup.py): this posting "
-    "form (exact recall, moderate duplication), jaccard_pairs_prefix "
-    "(PPJoin prefix filter, template-heavy), jaccard_pairs_lsh "
-    "(LSH-verified, dup-heavy — 15× faster at the 20× replica test with "
-    "99.95% recall, zero false positives).",
+    "(max_df, df-pruning) with the cap mirrored in the oracle. This "
+    "posting form is the exact-recall operator (operators/dedup.py); "
+    "jaccard_pairs_lsh is the approximate one for dup-heavy corpora "
+    "(LSH-verified — 15× faster at the 20× replica test with 99.95% "
+    "recall, zero false positives).",
     tags=("dedup", "closure"),
 )
 def q_near_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -61,7 +61,6 @@ Scale notes (100 TB, 1000 executors):
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 
 from pyspark.errors import AnalysisException

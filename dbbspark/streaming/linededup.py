@@ -67,7 +67,6 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..commit import (
-    _commits_dir,
     commit_snapshot,
     committed_versions,
     prune_commit_records,

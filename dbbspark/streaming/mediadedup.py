@@ -36,16 +36,15 @@ retry must not collide the batch with its own crashed attempt's
 hashes), and ``maintenance.compact_gate_index`` bounds file counts.
 
 Scale: per-trigger join cost is |batch| + collided corpus postings.
-The optional broadcast Bloom filter over the corpus's (band, val)
-bucket keys (``use_bloom``) keeps contract parity with the text gates
-(byte-identical decisions, tested) but DOES NOT PAY here and should
-stay off: a 64-bit hash at d+1 bands gives each band a ~2^13-value key
-space, which even a few thousand accepted files saturate, so the
-filter stops proving absence almost immediately (measured —
-BASELINE.md r10 backfill regime: zero candidates removed, 2.2× gate
-wall). The real scale lever at billions of accepted files is storing
-the banded index bucketed by (band, val) (`operators.bucketing`) so
-the join co-locates without shuffling the corpus side.
+Unlike the text gates this gate keeps no broadcast Bloom filter over
+the corpus's (band, val) bucket keys: a 64-bit hash at d+1 bands gives
+each band a ~2^13-value key space, which even a few thousand accepted
+files saturate, so such a filter stops proving absence almost at once
+(measured — BASELINE.md r10 backfill regime: zero of 109,018
+candidates removed, gate wall 5.64 → 12.42 s). The real scale lever at
+billions of accepted files is storing the banded index bucketed by
+(band, val) (`operators.bucketing`) so the join co-locates without
+shuffling the corpus side.
 """
 
 from __future__ import annotations
@@ -138,7 +137,6 @@ def gate_batch(
     hash_col: str = "phash",
     max_distance: int = 4,
     bands: int | None = None,
-    index_bloom: list[int] | None = None,
     index_banded: bool = False,
 ) -> DataFrame:
     """Accepted rows of ``batch_hashes`` (all its columns) against an
@@ -162,7 +160,6 @@ def gate_batch(
         hash_col,
         max_distance=max_distance,
         bands=bands,
-        corpus_band_bloom=index_bloom,
         corpus_banded=index_banded,
     )
     # vs corpus: id_a is always the new-batch id. Within batch:
@@ -191,7 +188,6 @@ def process_batch(
     hash_kind: str | None = None,
     max_distance: int = 4,
     bands: int | None = None,
-    use_bloom: bool = False,
     min_thumb_variance: float | None = None,
     lock_wait: float = 0.0,
     lock_break_stale_after: float | None = None,
@@ -225,16 +221,10 @@ def process_batch(
     releases the lock via the context manager and needs neither knob.
 
     ``hash_kind`` defaults by media kind ('audio' for wav, else
-    'dhash'), matching `cli media-dedup`. ``use_bloom`` maintains a
-    broadcast Bloom filter over the index's (band, val) bucket keys
-    next to the index (linededup's versioned snapshot layout and
-    predecessor rule), updated by UNIONING in the accepted batch's own
-    bucket keys — one batch-sized aggregation, the corpus never
-    rescanned. Missing filter self-heals to the plain join.
-    ``min_thumb_variance`` NULLs degenerate (flat) media's thumbnails —
-    solid frames hash NULL, match nothing, and are accepted un-indexed
-    (the `thumbnails` policy; M black stills then cost O(M), not
-    O(M²) band-bucket pairs)."""
+    'dhash'), matching `cli media-dedup`. ``min_thumb_variance`` NULLs
+    degenerate (flat) media's thumbnails — solid frames hash NULL, match
+    nothing, and are accepted un-indexed (the `thumbnails` policy; M
+    black stills then cost O(M), not O(M²) band-bucket pairs)."""
     from ..commit import exclusive_lock
 
     with exclusive_lock(
@@ -243,20 +233,14 @@ def process_batch(
     ):
         _process_batch_locked(
             batch, batch_id, index_dir, accepted_dir, kind, id_col,
-            content_col, hash_kind, max_distance, bands, use_bloom,
-            min_thumb_variance,
+            content_col, hash_kind, max_distance, bands, min_thumb_variance,
         )
 
 
 def _process_batch_locked(
     batch, batch_id, index_dir, accepted_dir, kind, id_col,
-    content_col, hash_kind, max_distance, bands, use_bloom,
-    min_thumb_variance,
+    content_col, hash_kind, max_distance, bands, min_thumb_variance,
 ) -> None:
-    from ..operators.bloom import build_bloom
-    from ..operators.phash import _band_cols
-    from .linededup import _save_bloom, load_bloom
-
     spark = batch.sparkSession
     bid = int(batch_id)
     hk = hash_kind or ("audio" if kind == "wav" else "dhash")
@@ -273,7 +257,6 @@ def _process_batch_locked(
         on_unregistered="error",
         min_variance=min_thumb_variance,
     ).select(*batch.columns, _HASHES[hk]("thumb").alias("phash"))
-    prior_bloom = load_bloom(spark, index_dir, before=bid) if use_bloom else None
     accepted = gate_batch(
         hashed,
         _index_hashes(
@@ -286,7 +269,6 @@ def _process_batch_locked(
         "phash",
         max_distance,
         bands,
-        index_bloom=prior_bloom,
     )
     accepted_hashes = accepted.where(F.col("phash").isNotNull()).select(
         F.col(id_col).alias("mid"), "phash"
@@ -302,40 +284,6 @@ def _process_batch_locked(
             .partitionBy("batch")
             .parquet(sink)
         )
-    if use_bloom:
-        # No prior filter (first run, flag enabled mid-stream on an
-        # existing index, or a snapshot that healed to None): build from
-        # the FULL index, not the batch alone — a batch-only filter
-        # would be saved as if it covered the corpus and every later
-        # batch would silently accept near-dups of the pre-flag corpus
-        # (ADVICE r9). One scan of the 8-byte hash index, paid once.
-        try:
-            src = (
-                spark.read.parquet(index_dir)
-                .where(F.col("batch") == bid)
-                if prior_bloom is not None
-                else spark.read.parquet(index_dir).where(F.col("batch") <= bid)
-            )
-        except AnalysisException:
-            # no index rows exist at all (an all-undecodable first
-            # batch): nothing to cover — skip saving; the next batch
-            # loads None and stays on the plain-join path
-            src = None
-        if src is not None:
-            batch_words = build_bloom(
-                src.select(
-                    F.explode(F.array(*_band_cols("phash", bands))).alias("bv")
-                )
-                .select(
-                    F.xxhash64(F.col("bv.band"), F.col("bv.val")).alias("__bk")
-                )
-                .distinct(),
-                "__bk",
-                num_bits=(len(prior_bloom) * 64) if prior_bloom else 1 << 24,
-            )
-            if prior_bloom is not None:
-                batch_words = [a | b for a, b in zip(prior_bloom, batch_words)]
-            _save_bloom(spark, index_dir, bid, batch_words)
     _mark_batch_done(spark, index_dir, bid)
 
 
@@ -350,7 +298,6 @@ def streaming_media_dedup(
     hash_kind: str | None = None,
     max_distance: int = 4,
     bands: int | None = None,
-    use_bloom: bool = False,
     min_thumb_variance: float | None = None,
 ):
     """Run the gate over a streaming DataFrame of media files; returns
@@ -369,7 +316,6 @@ def streaming_media_dedup(
             hash_kind=hash_kind,
             max_distance=max_distance,
             bands=bands,
-            use_bloom=use_bloom,
             min_thumb_variance=min_thumb_variance,
         )
 

@@ -158,9 +158,7 @@ def process_batch(
     a locked batch — see mediadedup.process_batch for the full
     contract)."""
     from ..commit import exclusive_lock
-    from ..operators.bloom import build_bloom
-    from ..operators.dedup import _band_signatures
-    from .linededup import _save_bloom, load_bloom
+    from .linededup import load_bloom
 
     spark = batch.sparkSession
     bid = int(batch_id)
@@ -183,7 +181,7 @@ def _process_batch_locked(
 ) -> None:
     from ..operators.bloom import build_bloom
     from ..operators.dedup import _band_signatures
-    from .linededup import _save_bloom, load_bloom
+    from .linededup import _save_bloom
 
     spark = batch.sparkSession
     accepted, accepted_sigs = gate_batch(

@@ -2,8 +2,9 @@
 quality split, deterministic soft-boundary lottery, map-only scoring."""
 from __future__ import annotations
 
+import math
+
 import pytest
-from pyspark.sql import functions as F
 
 from dbbspark.operators.classify import (
     quality_filter,
@@ -89,15 +90,16 @@ def test_soft_boundary_is_deterministic_and_monotone(spark):
 
 
 def test_portable_featurization_matches_ml_pipeline(spark):
-    """score_linear_portable's tokenize+gram construction must equal the
-    ml pipeline's RegexTokenizer+NGram output (as multisets) on ASCII
-    text — the parity pin behind the r13 oracle fold, which swaps only
-    the hash family and weights, never the featurization semantics."""
+    """The portable scorer's gram list (`_clf_grams`, the helper its
+    Arrow UDF folds over) must equal the ml pipeline's
+    RegexTokenizer+NGram output (as multisets) on ASCII text — the
+    parity pin behind the r13 oracle fold, which swaps only the hash
+    family and weights, never the featurization semantics."""
     from collections import Counter
 
     from pyspark.ml.feature import NGram, RegexTokenizer
 
-    from dbbspark.operators.classify import _TOKEN_PATTERN
+    from dbbspark.operators.classify import _TOKEN_PATTERN, _clf_grams
 
     rows = [
         (1, "The committee, published. its 2024 report!"),
@@ -117,25 +119,7 @@ def test_portable_featurization_matches_ml_pipeline(spark):
         r["doc_id"]: Counter(r["toks"]) + Counter(r["bigrams"])
         for r in ng.transform(tok.transform(docs)).collect()
     }
-
-    # re-derive the portable path's gram list via the same expressions
-    # score_linear_portable builds internally
-    ascii_txt = F.regexp_replace(F.col("text"), "[^ -~]", " ")
-    toks = F.filter(
-        F.split(F.lower(ascii_txt), "[^a-z0-9]+"), lambda t: t != F.lit("")
-    )
-    d = docs.withColumn("__toks", toks)
-    bigrams = F.expr(
-        "transform(sequence(1, greatest(size(__toks) - 1, 0)), "
-        "i -> concat(__toks[i-1], ' ', __toks[i]))"
-    )
-    grams = F.when(
-        F.size("__toks") >= 2, F.concat(F.col("__toks"), bigrams)
-    ).otherwise(F.col("__toks"))
-    portable = {
-        r["doc_id"]: Counter(r["g"])
-        for r in d.select("doc_id", grams.alias("g")).collect()
-    }
+    portable = {doc_id: Counter(_clf_grams(text)) for doc_id, text in rows}
     assert portable == ml
 
 
@@ -173,15 +157,20 @@ def _bigram_w(spark, gram):
     ) / 1000001.0 * 0.01
 
 
-def test_arrow_scoring_is_bit_identical_to_expression_form(spark):
-    """r14 pin: score_linear_portable_arrow reproduces the expression
-    form's margins BIT-identically (same tokenization per code point,
-    same exact-int weight arithmetic, same left-fold float addition
-    order), including NULL text, empty/whitespace text, single-token
-    docs, non-ASCII fold, and non-default num_features/weight_scale."""
+def test_scorer_margins_match_oracle_sql(spark):
+    """The scorer's margins equal the DuckDB oracle's re-derivation
+    (`CLF_TOKS_SQL` → `CLF_MARGIN_SQL`, the q_exact_dedup check) within
+    1e-12 on edge rows: empty and whitespace-only text, single-token
+    docs, repeated grams, non-ASCII fold, a long doc. NULL text scores
+    NULL on the Spark side (the oracle SQL coalesces it to 0.0; the
+    fixtures hold no NULL text)."""
+    import duckdb
+    import pandas as pd
+
     from dbbspark.operators.classify import (
+        CLF_MARGIN_SQL,
+        CLF_TOKS_SQL,
         score_linear_portable,
-        score_linear_portable_arrow,
     )
 
     rows = [
@@ -195,13 +184,23 @@ def test_arrow_scoring_is_bit_identical_to_expression_form(spark):
         (8, "a b c d e f g h i j k l m n o p q r s t u v w x y z " * 4),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    for kw in ({}, {"num_features": 128, "weight_scale": 0.5}):
-        a = {
-            r["doc_id"]: (r["clf_score_margin"], r["clf_score"])
-            for r in score_linear_portable(docs, **kw).collect()
-        }
-        b = {
-            r["doc_id"]: (r["clf_score_margin"], r["clf_score"])
-            for r in score_linear_portable_arrow(docs, **kw).collect()
-        }
-        assert a == b, f"{kw}: {a} vs {b}"  # == is exact: bit-identical
+    got = {
+        r["doc_id"]: (r["clf_score_margin"], r["clf_score"])
+        for r in score_linear_portable(docs).collect()
+    }
+    assert got[1] == (None, None)
+    texts = pd.DataFrame(rows[1:], columns=["doc_id", "text"])  # noqa: F841
+    want = dict(
+        duckdb.sql(
+            f"""WITH tk AS (SELECT doc_id, {CLF_TOKS_SQL('text')} AS toks
+                            FROM texts)
+                SELECT doc_id, CAST({CLF_MARGIN_SQL('toks')} AS DOUBLE)
+                FROM tk"""
+        ).fetchall()
+    )
+    assert set(want) == {d for d, _ in rows[1:]}
+    for doc_id, margin in want.items():
+        m, score = got[doc_id]
+        assert abs(m - margin) <= 1e-12, (doc_id, m, margin)
+        assert abs(score - 1.0 / (1.0 + math.exp(-m))) <= 1e-15
+    assert want[2] == want[3] == 0.0 and want[5] != 0.0

@@ -321,7 +321,7 @@ def test_operators_quote_caller_column_names(spark, name):
     same result as a plain name (before quoting, each of these raised
     ParseException or an attribute-name syntax error)."""
     from dbbspark.functions import sql_ident
-    from dbbspark.operators.fuzzy import fuzzy_join_d1
+    from dbbspark.operators.fuzzy import fuzzy_join
     from dbbspark.operators.packing import pack_sequences
     from dbbspark.operators.sketches import cms_estimate, cms_sketch_weighted
     from dbbspark.operators.winnow import winnow_fingerprints
@@ -350,10 +350,11 @@ def test_operators_quote_caller_column_names(spark, name):
                 for r in winnow_fingerprints(df, "doc_id", col, k=3, w=2).collect()
             ),
             sorted(
-                fuzzy_join_d1(
+                fuzzy_join(
                     df.withColumnRenamed("doc_id", "id_a"),
                     df.withColumnRenamed("doc_id", "id_b"),
                     col,
+                    max_distance=1,
                 ).collect()
             ),
             sorted(cms.collect()),

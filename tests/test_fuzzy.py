@@ -5,6 +5,7 @@ from __future__ import annotations
 import random
 import string
 
+import pytest
 from pyspark.sql import functions as F
 
 from dbbspark.operators.fuzzy import fuzzy_join
@@ -321,10 +322,12 @@ def test_d2_and_d0_jvm_only_plans(spark):
 
 
 def test_auto_routes_by_key_length(spark):
-    """'auto' must not walk long-key corpora onto the deletion-variant
-    cliff (O(L^d) variants/key): past auto_fastss_max_len it takes the
-    capped gram path; short keys keep the exact FastSS route; forced
-    methods pass through; d>=3 is always grams."""
+    """The router must not walk long-key corpora onto the
+    deletion-variant cliff (O(L^d) variants/key): past FASTSS_MAX_LEN a
+    d=2 join takes the capped gram path; short keys keep the exact
+    FastSS route; d>=3 is always grams; the bound is the module
+    constant."""
+    from dbbspark.operators import fuzzy
     from dbbspark.operators.fuzzy import _route
 
     short = spark.createDataFrame(
@@ -333,27 +336,31 @@ def test_auto_routes_by_key_length(spark):
     long = spark.createDataFrame(
         [(1, "x" * 150)], "id_b long, k string"
     )
-    assert _route(short, short, "k", 2, "auto", 64) == "fastss"
+    assert _route(short, short, "k", 2) == "fastss"
     # ONE long key on either side is enough to leave the cliff route
-    assert _route(short, long, "k", 2, "auto", 64) == "grams"
-    assert _route(long, short, "k", 2, "auto", 64) == "grams"
-    assert _route(short, long, "k", 2, "fastss", 64) == "fastss"  # override
-    assert _route(short, short, "k", 2, "grams", 64) == "grams"
-    assert _route(short, short, "k", 3, "auto", 64) == "grams"
+    assert _route(short, long, "k", 2) == "grams"
+    assert _route(long, short, "k", 2) == "grams"
+    assert _route(short, short, "k", 3) == "grams"
     # empty corpora are trivially short
     empty = spark.createDataFrame([], "id_a long, k string")
-    assert _route(empty, empty, "k", 1, "auto", 64) == "fastss"
+    assert _route(empty, empty, "k", 1) == "fastss"
     # ADVICE r6: the cliff is d=2-only (d=1 neighborhoods are L+1
     # variants) — long keys at d=1 stay on the EXACT FastSS route, never
     # the max_df-capped gram path that can silently drop true pairs
-    assert _route(long, long, "k", 1, "auto", 64) == "fastss"
-    assert _route(short, long, "k", 1, "auto", 64) == "fastss"
+    assert _route(long, long, "k", 1) == "fastss"
+    assert _route(short, long, "k", 1) == "fastss"
+    # the bound is read at call time: moving it moves the route
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(fuzzy, "FASTSS_MAX_LEN", 10)
+        assert _route(short, short, "k", 2) == "grams"
+        mp.setattr(fuzzy, "FASTSS_MAX_LEN", 150)
+        assert _route(short, long, "k", 2) == "fastss"
 
 
 def test_d1_long_keys_exact_despite_hub_grams(spark):
     """ADVICE r6 end-to-end: >64-char near-identical URLs at d=1 — the
-    exact shape the gram path's max_df hub cap can drop — must all pair
-    under 'auto'."""
+    exact shape the gram path's max_df hub cap can drop — must all
+    pair."""
     from dbbspark.operators.fuzzy import fuzzy_join
 
     base = "https://example.org/some/very/long/path/segment/" + "a" * 40
@@ -372,8 +379,8 @@ def test_d1_long_keys_exact_despite_hub_grams(spark):
 
 
 def test_auto_long_keys_still_join_through_gram_path(spark):
-    """End-to-end: a long-key corpus under 'auto' routes to grams and
-    still returns the within-distance pairs."""
+    """End-to-end: a long-key corpus at d=2 routes to grams and still
+    returns the within-distance pairs."""
     from dbbspark.operators.fuzzy import fuzzy_join
 
     base = "u" * 100

@@ -395,12 +395,35 @@ def test_adaptive_cc_matches_both_paths(spark):
     assert sorted(star) == sorted(SELF_LOOP_NULL_WANT.items())
 
 
-def test_jaccard_prefix_matches_plain(spark):
-    """Prefix filtering (PPJoin-style) must compute the IDENTICAL pair
-    relation as the count-all-co-occurrences formulation — same threshold,
-    same df cap — on randomized corpora with planted near-dups, template
-    reuse (hot shingles), short docs, and docs with no rare shingles."""
-    from dbbspark.operators.dedup import jaccard_pairs, jaccard_pairs_prefix
+def _jaccard_reference(docs, threshold, max_df, n=3):
+    """Capped n-gram Jaccard pairs from Python shingle sets over the
+    operator's tokenization (split on single spaces; docs shorter than
+    n have no shingles): intersections count shingles with
+    2 <= df <= max_df, denominators are full set sizes."""
+    from collections import Counter
+
+    sets = {}
+    for doc, text in docs:
+        toks = text.split(" ")
+        if len(toks) >= n:
+            sets[doc] = {tuple(toks[i : i + n]) for i in range(len(toks) - n + 1)}
+    df = Counter(s for sh in sets.values() for s in sh)
+    kept = {s for s, c in df.items() if c >= 2 and (max_df is None or c <= max_df)}
+    out = set()
+    ids = sorted(sets)
+    for i, a in enumerate(ids):
+        for b in ids[i + 1 :]:
+            inter = len(sets[a] & sets[b] & kept)
+            if inter and inter / (len(sets[a]) + len(sets[b]) - inter) >= threshold:
+                out.add((a, b))
+    return out
+
+
+def test_jaccard_pairs_match_python_shingle_sets(spark):
+    """`jaccard_pairs` computes the capped Jaccard relation exactly, on
+    randomized corpora with planted near-dups, template reuse (hot
+    shingles), short docs, and docs with no rare shingles."""
+    from dbbspark.operators.dedup import jaccard_pairs
 
     for seed in (11, 12, 13):
         rng = random.Random(seed)
@@ -419,19 +442,15 @@ def test_jaccard_prefix_matches_plain(spark):
                 docs.append((1000 + i, " ".join(mut)))
         df = spark.createDataFrame(docs, "doc_id long, text string")
         for threshold, max_df in ((0.5, None), (0.5, 10), (0.3, 5), (0.8, None)):
-            plain = {
+            got = {
                 (r["doc_a"], r["doc_b"])
                 for r in jaccard_pairs(
                     df, "doc_id", "text", threshold=threshold, max_df=max_df
                 ).collect()
             }
-            pref = {
-                (r["doc_a"], r["doc_b"])
-                for r in jaccard_pairs_prefix(
-                    df, "doc_id", "text", threshold=threshold, max_df=max_df
-                ).collect()
-            }
-            assert pref == plain, f"seed={seed} t={threshold} max_df={max_df}"
+            want = _jaccard_reference(docs, threshold, max_df)
+            assert want, f"seed={seed}: the corpus must plant some pairs"
+            assert got == want, f"seed={seed} t={threshold} max_df={max_df}"
 
 
 def test_star_cc_handles_long_chains(spark):

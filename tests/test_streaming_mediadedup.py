@@ -100,25 +100,20 @@ def test_retry_is_idempotent(spark, tmp_path):
     assert spark.read.parquet(idx).count() == 2
 
 
-def test_bloom_decisions_identical_and_undecodable_accepted(spark, tmp_path):
-    """use_bloom must change join volume only, never decisions; garbage
-    bytes hash NULL, pass the gate, and are NOT indexed."""
+def test_undecodable_accepted_and_not_indexed(spark, tmp_path):
+    """Garbage bytes hash NULL, pass the gate, and are NOT indexed."""
     rows1 = [("a1", _img(1)), ("junk", b"\x00not media")]
     rows2 = [("a2", _resized(1)), ("b1", _img(5)), ("junk2", b"P5 garbage")]
-    out = {}
-    for tag, bloom in (("plain", False), ("bloom", True)):
-        idx = str(tmp_path / f"idx_{tag}")
-        acc = str(tmp_path / f"acc_{tag}")
-        b1 = spark.createDataFrame(rows1, "path string, content binary")
-        b2 = spark.createDataFrame(rows2, "path string, content binary")
-        process_batch(b1, 0, idx, acc, use_bloom=bloom)
-        process_batch(b2, 1, idx, acc, use_bloom=bloom)
-        out[tag] = {r["path"] for r in spark.read.parquet(acc).collect()}
-        # undecodable rows accepted but never indexed
-        assert {r["mid"] for r in spark.read.parquet(idx).collect()} == {
-            "a1", "b1",
-        }
-    assert out["plain"] == out["bloom"] == {"a1", "junk", "b1", "junk2"}
+    idx = str(tmp_path / "idx")
+    acc = str(tmp_path / "acc")
+    b1 = spark.createDataFrame(rows1, "path string, content binary")
+    b2 = spark.createDataFrame(rows2, "path string, content binary")
+    process_batch(b1, 0, idx, acc)
+    process_batch(b2, 1, idx, acc)
+    assert {r["mid"] for r in spark.read.parquet(idx).collect()} == {"a1", "b1"}
+    assert {r["path"] for r in spark.read.parquet(acc).collect()} == {
+        "a1", "junk", "b1", "junk2",
+    }
 
 
 def test_incremental_pairs_equal_full_banding(spark):
@@ -303,37 +298,6 @@ def test_clip_resubmitted_path_rejects_against_its_indexed_self(spark, tmp_path)
     rows = spark.read.parquet(acc).collect()
     assert [(r["path"], r["batch"]) for r in rows] == [("a1", 0)]
     assert spark.read.parquet(idx).count() == 8
-
-
-def test_bloom_enabled_mid_stream_covers_prior_corpus(spark, tmp_path):
-    """ADVICE r9: when use_bloom turns on over an index that already
-    holds pre-flag batches, the first saved filter must cover the FULL
-    index, not the enabling batch alone — otherwise every later batch
-    silently accepts near-dups of the pre-flag corpus."""
-    idx, acc = str(tmp_path / "idx"), str(tmp_path / "acc")
-    # batch 0: bloom OFF — a1 accepted, indexed, no filter saved
-    process_batch(
-        spark.createDataFrame([("a1", _img(1))], "path string, content binary"),
-        0, idx, acc, use_bloom=False,
-    )
-    # batch 1: bloom turns ON with an unrelated fresh image; prior filter
-    # is None — the saved filter must be rebuilt from the whole index
-    process_batch(
-        spark.createDataFrame([("b1", _img(2))], "path string, content binary"),
-        1, idx, acc, use_bloom=True,
-    )
-    # batch 2: a resized re-encode of the PRE-FLAG a1 — a batch-only
-    # filter from batch 1 would prove its band keys absent and skip the
-    # join (silent accept); full-index coverage rejects it
-    process_batch(
-        spark.createDataFrame(
-            [("a2", _resized(1))], "path string, content binary"
-        ),
-        2, idx, acc, use_bloom=True,
-    )
-    assert {r["path"] for r in spark.read.parquet(acc).collect()} == {
-        "a1", "b1",
-    }
 
 
 def test_zero_hash_batch_marks_completion(spark, tmp_path):
